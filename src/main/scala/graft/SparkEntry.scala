@@ -8,7 +8,7 @@ import graft.functions.GraftFunctions
 import graft.ops.{AnnSearch, AsOf, Chunk, Dedup, Funnel, Gram, Graph, Multimodal, NGram, NearDedup, Packing, Pii, RangeJoin, Retrieval, Sampling, SemanticDedup, SetSim, Sketch, Stats, SuffixArray, TextAnalysis, TransformSpec, WebCurate}
 import graft.predicates._
 import graft.schema.{CodecSpec, FieldSpec, GraftSchema}
-import graft.sources.{Branch, DistinctView, GraftRead, JoinView, JsonlIngest, Materialize, MaterializedView, RowGroupIndex, Snapshots, VectorIndex}
+import graft.sources.{Branch, DistinctView, GraftRead, JoinView, JsonlIngest, LongRange, Materialize, MaterializedView, RowGroupIndex, Snapshots, StrRange, VectorIndex}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -40,6 +40,31 @@ object SparkEntry {
     sys.props("java.io.tmpdir") + s"/graft_${tag}_${sig}_" +
       dir.replaceAll("[^A-Za-z0-9]", "_")
   }
+
+  /** [[cachedBase]] for queries that build a live store per run:
+    * subdirectories older than an hour are deleted first. Runs use
+    * unique paths under this root ([[scratchRun]], or uniquely named
+    * catalog tables) so concurrent bench/verify invocations never
+    * wipe each other's live store+checkpoint (a shared wiped path
+    * raced); the age sweep bounds the tmpdir accumulation a bare
+    * UUID-per-run scheme leaked. */
+  private def sweptRoot(s: SparkSession, dir: String,
+      tag: String): String = {
+    val root = new org.apache.hadoop.fs.Path(cachedBase(dir, tag))
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) {
+      val cutoff = System.currentTimeMillis() - 3600L * 1000
+      fs.listStatus(root).filter(_.getModificationTime < cutoff)
+        .foreach(st => fs.delete(st.getPath, true))
+    }
+    root.toString
+  }
+
+  /** A fresh per-run UUID subdirectory under [[sweptRoot]]. */
+  private def scratchRun(s: SparkSession, dir: String,
+      tag: String): String =
+    new org.apache.hadoop.fs.Path(sweptRoot(s, dir, tag),
+      java.util.UUID.randomUUID().toString.take(8)).toString
 
   /** [[GraftSession.scoped]] (conf-cloned isolated session) — used
     * for streaming runs, where every stateful operator opens one
@@ -1761,20 +1786,7 @@ object SparkEntry {
       val src = graft.streaming.GraftStream.reader(s, dir)
         .glob("documents.parquet").load()
         .select(col("doc_id"), col("text"))
-      // per-run UUID subdir under a fixture-keyed root: unique paths
-      // keep concurrent bench/verify invocations from wiping each
-      // other's live store+checkpoint (a shared wiped path raced),
-      // while sweeping subdirs older than an hour bounds the tmpdir
-      // accumulation a bare UUID-per-run scheme leaked
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q113"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q113")
       val q = graft.streaming.GraftStream.lmGateIngest(src, "doc_id",
           "text", uni, bi, minMeanPpm = 40000L, s"$base/out",
           streamId = "q113")
@@ -3971,15 +3983,7 @@ object SparkEntry {
       import org.apache.spark.sql.types.{LongType, StringType,
         StructField, StructType}
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q245"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q245")
       t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("__j",
@@ -4114,15 +4118,7 @@ object SparkEntry {
     // rows for every 17th — only bloom-admitted files rewrite; the
     // read-back rollup must equal the relational merge.
     "q251_merge_upsert" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q251"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q251")
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
@@ -4340,15 +4336,7 @@ object SparkEntry {
     // then an index-pruned read — every step composing on the same
     // files, the read hash-checked against the relational merge.
     "q260_store_maintenance" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q260"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q260")
       val store = s"$base/store"
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4410,15 +4398,7 @@ object SparkEntry {
     // updateBloom scans ONLY the new files — then keys from both
     // generations probe through the refreshed sidecar.
     "q262_incremental_index" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q262"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q262")
       val store = s"$base/store"
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4840,15 +4820,7 @@ object SparkEntry {
     // floor, proving retention never touches live versions.
     "q279_snapshot_store" -> ((s, dir) => {
       import s.implicits._
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q279"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q279")
       val store = s"$base/store"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4893,15 +4865,7 @@ object SparkEntry {
     // the oracle computes. Each applyDelta touches only its batch's
     // partitions: O(batch) per increment, never O(history).
     "q280_incremental_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q280"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val mv = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString + "/mv"
+      val mv = scratchRun(s, dir, "q280") + "/mv"
       val ev = t(s, dir, "events").select(col("user_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"),
@@ -4941,15 +4905,7 @@ object SparkEntry {
     // must equal the one-shot GROUP BY.
     "q283_stream_view" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q283"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q283")
       val ev = t(s, dir, "events").select(col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
       ev.repartition(3).write.mode("overwrite")
@@ -4977,15 +4933,7 @@ object SparkEntry {
     // surfaces pure inserts — all computed from only the files the
     // manifests disagree on (O(changed files), never O(store)).
     "q284_snapshot_changes" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q284"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q284")
       val store = s"$base/store"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -5046,15 +4994,7 @@ object SparkEntry {
     // the one-shot GROUP BY.
     "q286_stream_snapshot" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q286"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q286")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -5085,15 +5025,7 @@ object SparkEntry {
     // stream left nothing uncovered), and the range read is oracled.
     "q294_stream_stats" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q294"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q294")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -5126,15 +5058,7 @@ object SparkEntry {
     // increment, never a history rescan. The feed application is
     // replayed once to prove span-keyed idempotency in-lifecycle.
     "q287_cdc_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q287"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q287")
       val store = s"$base/store"
       val view = s"$base/view"
       val v1 = t(s, dir, "documents")
@@ -5176,15 +5100,7 @@ object SparkEntry {
     // stale or absent stats, so correctness never depends on the
     // sidecar being fresh.
     "q288_snapshot_prune" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q288"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q288")
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
@@ -5212,15 +5128,7 @@ object SparkEntry {
     // restore — a zero-data-movement manifest commit — and the read
     // lands on the evolved version's exact content.
     "q289_schema_evolve" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q289"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q289")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
       Snapshots.create(s, store,
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -5251,23 +5159,15 @@ object SparkEntry {
     // 100 TB. Residual predicates keep the result exact regardless
     // of layout.
     "q290_zorder_prune" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q290"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q290")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store, docs, nFiles = 8)
       Snapshots.zcluster(s, store, 20, Seq("n_chars", "doc_id"),
         nFiles = 8)
       Snapshots.indexStats(s, store, Seq("n_chars", "doc_id"))
-      orderSmall(Snapshots.readWhereAll(s, store,
-        Seq(("n_chars", 100L, 300L), ("doc_id", 100L, 400L)))
+      orderSmall(Snapshots.readWhere(s, store, Seq(LongRange("n_chars",
+        100L, 300L), LongRange("doc_id", 100L, 400L)), -1)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("n_chars")).cast("long").as("sum_chars")),
@@ -5281,15 +5181,7 @@ object SparkEntry {
     // older versions are untouched, and the post-compaction read is
     // row-identical to the accumulated appends.
     "q291_snapshot_compact" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q291"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q291")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("source"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5323,15 +5215,7 @@ object SparkEntry {
     // candidatePairs' bucket-width cap; at the verified scales every
     // bucket is enumerable.
     "q292_cdc_signatures" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q292"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val baseDir = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val baseDir = scratchRun(s, dir, "q292")
       val base = s"$baseDir/corpus"
       val sigs = s"$baseDir/sigs"
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
@@ -5400,15 +5284,7 @@ object SparkEntry {
     // residual predicate — the one-call read path a training job
     // uses against a mutating corpus.
     "q293_reader_range" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q293"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q293")
       Snapshots.create(s, store,
         t(s, dir, "documents").filter(col("doc_id").isNotNull)
           .select(col("doc_id"), col("lang"), col("n_chars")),
@@ -5484,15 +5360,7 @@ object SparkEntry {
     // rewrites the affected set, cluster rewrites all, restore
     // re-lists with zero data movement) hold exactly.
     "q298_history" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q298"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q298")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5517,15 +5385,7 @@ object SparkEntry {
     // poisoned batch below must bounce without minting a version,
     // and the surviving content is oracled.
     "q299_constraints" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q299"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q299")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5593,15 +5453,7 @@ object SparkEntry {
     // over the store's LATEST version through updates and deletes —
     // exact long arithmetic, no float in the maintained state.
     "q301_moments_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q301"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q301")
       val store = s"$base/store"
       val view = s"$base/view"
       val v1 = t(s, dir, "documents")
@@ -5659,15 +5511,7 @@ object SparkEntry {
     // update: a 10-file upsert on a 100k-file corpus never rescans
     // history to refresh its profile.
     "q303_profile_delta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q303"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q303")
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
@@ -5699,15 +5543,7 @@ object SparkEntry {
     // no-op. The integer sufficient statistics are oracled exactly;
     // the float estimate is the caller's last step.
     "q304_distinct_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q304"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val view = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val view = scratchRun(s, dir, "q304")
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("user_id"))
         .filter(col("event_id").isNotNull)
@@ -6285,15 +6121,7 @@ object SparkEntry {
     // oracle replays the whole lifecycle arithmetically.
     "q329_stream_bloom_upsert" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q329"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q329")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -6542,16 +6370,7 @@ object SparkEntry {
     // source's pre-divergence rows, the clone's upsert never leaks
     // into the source, the source's append never reaches the clone.
     "q339_snapshot_clone" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q339"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q339")
       val srcStore = s"$base/src"; val cloneStore = s"$base/clone"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -6641,16 +6460,7 @@ object SparkEntry {
     // to what a full re-join would produce; the oracle IS that full
     // re-join ([[JoinView.refresh]]).
     "q342_join_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q342"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q342")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val idx = s"$base/idx"
       val fact = t(s, dir, "orders")
@@ -6717,16 +6527,7 @@ object SparkEntry {
     // partners. Oracle = the full re-join of everything.
     "q343_stream_join_view" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q343"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q343")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -6824,16 +6625,7 @@ object SparkEntry {
     // prune is a strict file subset (the q33 proof style) and the
     // result is the exact residual-filtered range read.
     "q346_string_band_read" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q346"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q346")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull)
         .select(col("c_name"), col("c_custkey"),
@@ -6844,11 +6636,11 @@ object SparkEntry {
       val v = Snapshots.latest(s, store)
       val total = Snapshots.snap(s, store, v).files.size
       val lo = "Customer#000000070"; val hi = "Customer#000000090"
-      val pruned = Snapshots.prunedFilesStr(s, store, v, "c_name",
-        lo, hi)
+      val range = StrRange("c_name", lo, hi)
+      val pruned = Snapshots.prunedFiles(s, store, v, Seq(range))
       require(pruned.nonEmpty && pruned.size < total,
         s"string bands failed to prune: kept ${pruned.size}/$total")
-      orderSmall(Snapshots.readWhereStr(s, store, "c_name", lo, hi)
+      orderSmall(Snapshots.readWhere(s, store, Seq(range), -1)
         .select(col("c_name"), col("c_custkey"), col("bal_cents")),
         col("c_name"))
     }),
@@ -6859,16 +6651,7 @@ object SparkEntry {
     // valid and dangling inserts), one refreshStar folds all three
     // feeds. Oracle = the full re-join of the mutated state.
     "q347_star_join_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q347"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q347")
       val factStore = s"$base/fact"; val custStore = s"$base/cust"
       val prioStore = s"$base/prio"; val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -6952,16 +6735,7 @@ object SparkEntry {
     // the body; the oracle checks the rebuilt view's parity with the
     // full re-join of the recreated state.
     "q348_join_view_recovery" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q348"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q348")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val view2 = s"$base/view2"
       val fact = t(s, dir, "orders")
@@ -6982,7 +6756,9 @@ object SparkEntry {
         "o_orderkey", "o_custkey")
       // the base is wiped and recreated: ONE version where the view
       // recorded two — refresh must refuse, not silently diff
-      fs.delete(new org.apache.hadoop.fs.Path(factStore), true)
+      val factPath = new org.apache.hadoop.fs.Path(factStore)
+      factPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(factPath, true)
       Snapshots.create(s, factStore,
         fact.filter(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey"), col("o_custkey"),
@@ -7034,16 +6810,7 @@ object SparkEntry {
     // (recompute-affected-keys) → aggregate view (signed partials,
     // replayed batch is a no-op) with nothing ever O(history).
     "q350_view_stack" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q350"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q350")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val agg = s"$base/agg"
       val fact = t(s, dir, "orders")
@@ -7106,18 +6873,10 @@ object SparkEntry {
     // ONE clustered layout answers `lang ∈ [de,es] AND n_chars ∈
     // [100,300]` with file skipping on BOTH dimensions — string
     // prefix bands on one, long bands on the other, one sidecar
-    // read (readWhereMixed). Strict-subset prune asserted in-body.
+    // read (one readWhere over both ranges). Strict-subset prune
+    // asserted in-body.
     "q351_zorder_string_dim" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q351"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q351")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7129,12 +6888,12 @@ object SparkEntry {
       Snapshots.indexStats(s, store, Seq("lang", "n_chars"))
       val v = Snapshots.latest(s, store)
       val total = Snapshots.snap(s, store, v).files.size
-      val files = Snapshots.prunedFilesMixed(s, store, v,
-        Seq(("n_chars", 100L, 300L)), Seq(("lang", "de", "es")))
+      val ranges = Seq(LongRange("n_chars", 100L, 300L),
+        StrRange("lang", "de", "es"))
+      val files = Snapshots.prunedFiles(s, store, v, ranges)
       require(files.nonEmpty && files.size < total,
         s"z-order mixed pruning failed: kept ${files.size}/$total")
-      orderSmall(Snapshots.readWhereMixed(s, store,
-          Seq(("n_chars", 100L, 300L)), Seq(("lang", "de", "es")))
+      orderSmall(Snapshots.readWhere(s, store, ranges, -1)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars")).as("sum_chars")),
@@ -7147,16 +6906,7 @@ object SparkEntry {
     // file listing is ASSERTED a strict subset of the store, and
     // the residual filter keeps the rows exact.
     "q352_reader_string_range" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q352"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q352")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull)
         .select(col("c_name"), col("c_custkey"),
@@ -7185,16 +6935,7 @@ object SparkEntry {
     // a no-match delete is a TRUE no-op (same version back), and
     // old versions stay readable. Oracle = the surviving rows.
     "q353_delete_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q353"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q353")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7208,7 +6949,7 @@ object SparkEntry {
       val after = Snapshots.snap(s, store, v1).files.toSet
       require((before intersect after).nonEmpty,
         "range delete rewrote every file — not copy-on-write")
-      val v2 = Snapshots.deleteWhereStr(s, store, "lang", "zh", "zz")
+      val v2 = Snapshots.deleteWhere(s, store, StrRange("lang", "zh", "zz"))
       // a no-match delete is a true no-op: same version back
       require(Snapshots.deleteWhere(s, store, "n_chars",
         900000L, 999999L) == v2, "no-match delete committed")
@@ -7229,16 +6970,7 @@ object SparkEntry {
     // view — no rebuild, no full re-join. Oracle = the re-join of
     // the surviving fact rows.
     "q354_delete_through_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q354"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q354")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -7324,16 +7056,7 @@ object SparkEntry {
     // constraints guard rows; this guards batches. Oracle = the
     // union of the base and the one admitted batch.
     "q357_write_audit_publish" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q357"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q357")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7402,16 +7125,7 @@ object SparkEntry {
     // (same version back), and the pre-update version still reads the
     // original values. Oracle = CASE WHEN over the source rows.
     "q359_update_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q359"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q359")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7421,7 +7135,7 @@ object SparkEntry {
       Snapshots.indexStats(s, store, Seq("doc_id"))
       val v0 = Snapshots.latest(s, store)
       val before = Snapshots.snap(s, store, v0).files.toSet
-      val v1 = Snapshots.updateWhere(s, store, "doc_id", 100L, 220L,
+      val v1 = Snapshots.updateWhere(s, store, LongRange("doc_id", 100L, 220L),
         Map("lang" -> lit("redacted"),
           "n_chars" -> (-col("n_chars")).cast("long")))
       require(v1 == v0 + 1, "range update did not commit")
@@ -7429,8 +7143,8 @@ object SparkEntry {
       require((before intersect after).nonEmpty,
         "range update rewrote every file — not copy-on-write")
       // a no-match update is a true no-op: same version back
-      require(Snapshots.updateWhere(s, store, "doc_id",
-        900000L, 999999L, Map("lang" -> lit("zz"))) == v1,
+      require(Snapshots.updateWhere(s, store, LongRange("doc_id",
+        900000L, 999999L), Map("lang" -> lit("zz"))) == v1,
         "no-match update committed")
       // the pre-update version still reads the original values
       require(Snapshots.readAsOf(s, store, v0)
@@ -7452,16 +7166,7 @@ object SparkEntry {
     // vacuum). Oracle = the pinned version's content, which is
     // exactly the original even-id slice.
     "q360_tagged_snapshot" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q360"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q360")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7498,16 +7203,7 @@ object SparkEntry {
     // read. Long and string flavors on one store; exactness is
     // band-independent (the residual recount on straddlers).
     "q361_count_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q361"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q361")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull &&
           col("c_acctbal").isNotNull)
@@ -7519,14 +7215,14 @@ object SparkEntry {
       val total = Snapshots
         .snap(s, store, Snapshots.latest(s, store)).files.size
       val (nLong, scanned) =
-        Snapshots.countWhere(s, store, "c_custkey", 25L, 1400L)
+        Snapshots.countWhere(s, store, LongRange("c_custkey", 25L, 1400L))
       require(scanned < total,
         s"countWhere scanned $scanned/$total — interior files " +
           "should be metadata-counted")
-      val (nStr, scannedS) = Snapshots.countWhereStr(s, store,
-        "c_name", "Customer#000000100", "Customer#000000899")
+      val (nStr, scannedS) = Snapshots.countWhere(s, store,
+        StrRange("c_name", "Customer#000000100", "Customer#000000899"))
       require(scannedS < total,
-        s"countWhereStr scanned $scannedS/$total")
+        s"string countWhere scanned $scannedS/$total")
       import s.implicits._
       orderSmall(Seq(("long_range", nLong), ("str_range", nStr))
         .toDF("op", "cnt"), col("op"))
@@ -7540,16 +7236,7 @@ object SparkEntry {
     // dashboard/audit shape — `sum(order value) in a price band` on
     // a 100k-file store = one sidecar read + two boundary files.
     "q362_agg_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q362"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q362")
       val ord = t(s, dir, "orders")
         .filter(col("o_orderkey").isNotNull &&
           col("o_totalprice").isNotNull)
@@ -7579,16 +7266,7 @@ object SparkEntry {
     // complete: every odd-custkey order finds its odd customer.
     // Oracle = the full orders ⋈ customer aggregate.
     "q363_commit_together" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q363"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q363")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val fact = t(s, dir, "orders")
         .filter(col("o_orderkey").isNotNull &&
@@ -7630,16 +7308,7 @@ object SparkEntry {
     // reads in full, and the CDC feed across the MoR commits emits
     // exactly the deleted keys. Oracle = the surviving rows.
     "q364_mor_delete" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q364"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q364")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7651,8 +7320,10 @@ object SparkEntry {
       def parts(v: Int): Seq[String] = Snapshots.snap(s, store, v)
         .files.map(e => e.split("--dv--")(0)).sorted
       val physBefore = parts(v0)
-      val v1 = Snapshots.deleteWhereMor(s, store, "doc_id", 100L, 260L)
-      val v2 = Snapshots.deleteWhereMor(s, store, "doc_id", 200L, 340L)
+      val v1 = Snapshots.deleteWhereMor(s, store,
+        LongRange("doc_id", 100L, 260L))
+      val v2 = Snapshots.deleteWhereMor(s, store,
+        LongRange("doc_id", 200L, 340L))
       require(v1 == v0 + 1 && v2 == v1 + 1, "MoR deletes did not commit")
       require(parts(v1) == physBefore && parts(v2) == physBefore,
         "merge-on-read delete rewrote a data file")
@@ -7661,8 +7332,8 @@ object SparkEntry {
         e2.forall(_.split("--dv--").length <= 2),
         "affected entries must carry exactly one merged vector")
       // no-match range: true no-op, nothing committed
-      require(Snapshots.deleteWhereMor(s, store, "doc_id",
-        900000L, 999999L) == v2, "no-match MoR delete committed")
+      require(Snapshots.deleteWhereMor(s, store, LongRange("doc_id",
+        900000L, 999999L)) == v2, "no-match MoR delete committed")
       // snapshot isolation: the pre-delete version reads in full
       require(Snapshots.readAsOf(s, store, v0).count() ==
         docs.count(), "old version lost rows under a MoR delete")
@@ -7688,16 +7359,7 @@ object SparkEntry {
     // collects the dead vector sidecars from disk (asserted). Oracle
     // = the surviving rows' aggregate, read AFTER purge + vacuum.
     "q365_dv_purge_vacuum" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q365"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q365")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull &&
           col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull)
@@ -7706,15 +7368,15 @@ object SparkEntry {
       Snapshots.create(s, store, cust, nFiles = 8,
         clusterBy = Some("c_custkey"))
       Snapshots.indexStats(s, store, Seq("c_custkey"))
-      val vDel = Snapshots.deleteWhereMor(s, store, "c_custkey",
-        50L, 400L)
+      val vDel = Snapshots.deleteWhereMor(s, store, LongRange("c_custkey",
+        50L, 400L))
       // refresh covers the composite entries with effective bands:
       // the full-range count answers from the sidecar alone
       require(Snapshots.indexStats(s, store, Seq("c_custkey")) > 0,
         "stats refresh saw no fresh MoR entries")
       val expect = Snapshots.read(s, store).count()
       val (metaCnt, scanned) = Snapshots.countWhere(s, store,
-        "c_custkey", Long.MinValue, Long.MaxValue)
+        LongRange("c_custkey", Long.MinValue, Long.MaxValue))
       require(metaCnt == expect && scanned == 0,
         s"full-range count must be metadata-only ($metaCnt/$expect, " +
           s"scanned $scanned)")
@@ -7728,7 +7390,8 @@ object SparkEntry {
       // vacuum below the purge: the dead vector sidecars leave disk
       Snapshots.vacuum(s, store, keepFrom = vPurge, graceMs = 0L)
       val storeP = new org.apache.hadoop.fs.Path(store)
-      val dvLeft = fs.listStatus(storeP)
+      val dvLeft = storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .listStatus(storeP)
         .map(_.getPath.getName)
         .count(n => n.startsWith("dv") && n.endsWith(".parquet"))
       require(dvLeft == 0, s"$dvLeft dead deletion vectors survived")
@@ -7751,16 +7414,7 @@ object SparkEntry {
     // deletions travel through the merge as tombstones. Oracle =
     // the merged final state.
     "q366_branch_merge" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q366"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q366")
       val main = s"$base/main"
       val br = s"$base/feature"; val br2 = s"$base/conflicted"
       val cust = t(s, dir, "customer")
@@ -7774,14 +7428,14 @@ object SparkEntry {
       Branch.fork(s, main, br)
       Branch.fork(s, main, br2)
       // branch work: range update + sparse MoR delete + insert batch
-      Snapshots.updateWhere(s, br, "k", 100L, 200L,
+      Snapshots.updateWhere(s, br, LongRange("k", 100L, 200L),
         Map("seg" -> lit("BRANCHED")))
-      Snapshots.deleteWhereMor(s, br, "k", 300L, 350L)
+      Snapshots.deleteWhereMor(s, br, LongRange("k", 300L, 350L))
       Snapshots.append(s, br, cust.filter(col("k").between(1L, 20L))
         .select((col("k") + 1000000L).as("k"), lit("FORKED").as("seg"),
           (col("bal") * 2L).as("bal")))
       // main moves concurrently on DISJOINT keys
-      Snapshots.updateWhere(s, main, "k", 500L, 520L,
+      Snapshots.updateWhere(s, main, LongRange("k", 500L, 520L),
         Map("seg" -> lit("MAINSIDE")))
       // branch isolation both ways
       require(Snapshots.read(s, main)
@@ -7874,16 +7528,7 @@ object SparkEntry {
     // originals, and the CDC feed emits exactly the updated keys
     // with their pre-images. Oracle = CASE WHEN over the source.
     "q368_mor_update" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q368"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q368")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7894,8 +7539,8 @@ object SparkEntry {
       val v0 = Snapshots.latest(s, store)
       val physBefore = Snapshots.snap(s, store, v0).files
         .map(_.split("--dv--")(0)).toSet
-      val v1 = Snapshots.updateWhereMor(s, store, "doc_id",
-        120L, 240L, Map("lang" -> lit("redacted"),
+      val v1 = Snapshots.updateWhereMor(s, store, LongRange("doc_id",
+        120L, 240L), Map("lang" -> lit("redacted"),
           "n_chars" -> (-col("n_chars")).cast("long")))
       require(v1 == v0 + 1, "MoR update did not commit")
       val after = Snapshots.snap(s, store, v1).files
@@ -7905,8 +7550,8 @@ object SparkEntry {
       require(after.exists(_.contains("--dv--")),
         "MoR update left no vector entry")
       // no-match: true no-op; pre-update version reads originals
-      require(Snapshots.updateWhereMor(s, store, "doc_id",
-        900000L, 999999L, Map("lang" -> lit("zz"))) == v1,
+      require(Snapshots.updateWhereMor(s, store, LongRange("doc_id",
+        900000L, 999999L), Map("lang" -> lit("zz"))) == v1,
         "no-match MoR update committed")
       require(Snapshots.readAsOf(s, store, v0)
         .filter(col("lang") === "redacted").limit(1).isEmpty,
@@ -7939,16 +7584,7 @@ object SparkEntry {
     // MoR store exactly). ONE refresh folds both CDC feeds. Oracle =
     // the full re-join of the mutated state.
     "q369_mor_through_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q369"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q369")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -7971,7 +7607,7 @@ object SparkEntry {
       val v0 = Snapshots.latest(s, factStore)
       val physBefore = Snapshots.snap(s, factStore, v0).files
         .map(_.split("--dv--")(0)).sorted
-      Snapshots.deleteWhereMor(s, factStore, "o_custkey", 200L, 500L)
+      Snapshots.deleteWhereMor(s, factStore, LongRange("o_custkey", 200L, 500L))
       val vDel = Snapshots.latest(s, factStore)
       require(Snapshots.snap(s, factStore, vDel).files
         .map(_.split("--dv--")(0)).sorted == physBefore,
@@ -8002,16 +7638,7 @@ object SparkEntry {
     // contract, so the exhaustive probe (nprobe = k) IS brute force
     // — which is what the oracle recomputes in SQL.
     "q370_vector_skipping" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q370"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q370")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8056,16 +7683,7 @@ object SparkEntry {
     // rename and a merge-on-read delete on the renamed column
     // compose. Oracle = the final state under the new names.
     "q371_rename_drop" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q371"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q371")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull &&
           col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull)
@@ -8085,7 +7703,7 @@ object SparkEntry {
       // pre-rename stats answer the NEW name from metadata alone
       val total = cust.count()
       val (metaCnt, scanned) = Snapshots.countWhere(s, store,
-        "cust_id", Long.MinValue, Long.MaxValue)
+        LongRange("cust_id", Long.MinValue, Long.MaxValue))
       require(metaCnt == total && scanned == 0,
         s"stats did not survive the rename ($metaCnt/$total, " +
           s"scanned $scanned)")
@@ -8095,7 +7713,7 @@ object SparkEntry {
           .select((col("c_custkey") + 100000L).as("cust_id"),
             lit("EVOLVED").as("c_mktsegment"),
             (col("bal_cents") * 3L).as("bal_cents")))
-      Snapshots.deleteWhereMor(s, store, "cust_id", 700L, 900L)
+      Snapshots.deleteWhereMor(s, store, LongRange("cust_id", 700L, 900L))
       orderSmall(Snapshots.read(s, store)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -8113,20 +7731,13 @@ object SparkEntry {
     // codegen unchanged). Oracle = both arms recomputed from the
     // source rows.
     "q372_sql_catalog" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q372"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q372")
       // the catalog root is the STABLE per-query dir; each run gets
       // a fresh uuid-named TABLE under it (the catalog instance is
       // cached per session, table names resolve per statement)
       s.conf.set("spark.sql.catalog.g372",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g372.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g372.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val fact = t(s, dir, "orders")
         .filter(col("o_orderkey").isNotNull &&
@@ -8159,16 +7770,7 @@ object SparkEntry {
     // band-straddling files scanned (asserted: scanned < total) and
     // matches the oracle exactly.
     "q373_agg_where_stack" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q373"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q373")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("n_chars").isNotNull)
         .select(col("doc_id"), col("n_chars"))
@@ -8176,7 +7778,7 @@ object SparkEntry {
         clusterBy = Some("doc_id"))
       Snapshots.indexStats(s, store, Seq("doc_id"))
       Snapshots.renameColumn(s, store, "doc_id", "doc")
-      Snapshots.deleteWhereMor(s, store, "doc", 150L, 420L)
+      Snapshots.deleteWhereMor(s, store, LongRange("doc", 150L, 420L))
       require(Snapshots.indexStats(s, store, Seq("doc")) > 0,
         "refresh saw no fresh MoR entries")
       val total = Snapshots.snap(s, store,
@@ -8198,16 +7800,7 @@ object SparkEntry {
     // asserted by the oracle itself: brute force over the SURVIVORS
     // only), and the exhaustive probe still equals brute force.
     "q374_vector_after_delete" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q374"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q374")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8215,7 +7808,7 @@ object SparkEntry {
         clusterBy = Some("vec_id"))
       VectorIndex.index(s, store, "vec_id", "embedding", 8)
       // retire a vec_id band merge-on-read; postings stay stale
-      Snapshots.deleteWhereMor(s, store, "vec_id", 20L, 120L)
+      Snapshots.deleteWhereMor(s, store, LongRange("vec_id", 20L, 120L))
       val q = src.filter(col("vec_id") === 7L)
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0)
@@ -8256,16 +7849,7 @@ object SparkEntry {
     // the conflict scan pinned to the examined head. Oracle = the
     // merged final state under the renamed column.
     "q376_branch_renamed" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q376"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q376")
       val main = s"$base/main"; val br = s"$base/feature"
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
@@ -8279,11 +7863,11 @@ object SparkEntry {
       require(Snapshots.read(s, br).columns.contains("doc"),
         "fork lost the column mapping")
       // branch: logical-name mutations (COW update + MoR delete)
-      Snapshots.updateWhere(s, br, "doc", 100L, 180L,
+      Snapshots.updateWhere(s, br, LongRange("doc", 100L, 180L),
         Map("lang" -> lit("branched")))
-      Snapshots.deleteWhereMor(s, br, "doc", 300L, 360L)
+      Snapshots.deleteWhereMor(s, br, LongRange("doc", 300L, 360L))
       // main moves concurrently on a DISJOINT key band
-      Snapshots.updateWhere(s, main, "doc", 500L, 520L,
+      Snapshots.updateWhere(s, main, LongRange("doc", 500L, 520L),
         Map("lang" -> lit("mainside")))
       Branch.mergeBack(s, br, "doc")
       orderSmall(Snapshots.read(s, main)
@@ -8304,17 +7888,10 @@ object SparkEntry {
     // TAG-pinned pre-delete arm (`VERSION AS OF 'train'`). In-body
     // parity require: the SQL head equals Snapshots.read.
     "q377_sql_catalog_eff" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q377"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q377")
       s.conf.set("spark.sql.catalog.g377",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g377.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g377.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -8323,7 +7900,7 @@ object SparkEntry {
       Snapshots.create(s, url, docs, nFiles = 8,
         clusterBy = Some("doc_id"))
       Snapshots.setTag(s, url, "train", 1)
-      Snapshots.deleteWhereMor(s, url, "doc_id", 150L, 420L)
+      Snapshots.deleteWhereMor(s, url, LongRange("doc_id", 150L, 420L))
       Snapshots.renameColumn(s, url, "n_chars", "chars")
       // parity: the SQL head arm IS the effective read
       val apiSum = Snapshots.read(s, url)
@@ -8354,16 +7931,7 @@ object SparkEntry {
     // force over the store — the oracle recomputes all three from
     // the source rows.
     "q378_batched_search" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q378"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q378")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8388,16 +7956,7 @@ object SparkEntry {
     // folds BOTH CDC feeds in a single refreshStar. Oracle = the
     // mutated join recomputed from source rows.
     "q379_upsert_together" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q379"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q379")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -8455,16 +8014,7 @@ object SparkEntry {
     // keys keep MAIN's value — nothing last-writer-wins. Oracle =
     // the expected merged state from source rows.
     "q380_branch_rebase" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q380"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q380")
       val main = s"$base/main"; val br = s"$base/feature"
       val br2 = s"$base/feature2"
       val docs = t(s, dir, "documents")
@@ -8474,12 +8024,12 @@ object SparkEntry {
       Snapshots.create(s, main, docs, nFiles = 8,
         clusterBy = Some("doc_id"))
       Branch.fork(s, main, br)
-      Snapshots.updateWhere(s, br, "doc_id", 100L, 180L,
+      Snapshots.updateWhere(s, br, LongRange("doc_id", 100L, 180L),
         Map("lang" -> lit("branched")))
       Snapshots.deleteWhere(s, br, "doc_id", 300L, 360L)
-      Snapshots.updateWhere(s, main, "doc_id", 150L, 170L,
+      Snapshots.updateWhere(s, main, LongRange("doc_id", 150L, 170L),
         Map("lang" -> lit("mainside")))
-      Snapshots.updateWhere(s, main, "doc_id", 500L, 520L,
+      Snapshots.updateWhere(s, main, LongRange("doc_id", 500L, 520L),
         Map("lang" -> lit("mainside")))
       val refused =
         try { Branch.mergeBack(s, br, "doc_id"); false }
@@ -8498,9 +8048,9 @@ object SparkEntry {
       // SAME atomic replay (lang concatenated, n_chars summed)
       val br3 = s"$base/feature3"; val br4 = s"$base/feature4"
       Branch.fork(s, main, br3)
-      Snapshots.updateWhere(s, br3, "doc_id", 200L, 240L,
+      Snapshots.updateWhere(s, br3, LongRange("doc_id", 200L, 240L),
         Map("lang" -> lit("resolved2")))
-      Snapshots.updateWhere(s, main, "doc_id", 220L, 260L,
+      Snapshots.updateWhere(s, main, LongRange("doc_id", 220L, 260L),
         Map("lang" -> lit("mainside2")))
       val (_, conflicts2) = Branch.rebase(s, br3, br4, "doc_id",
         strategy = Branch.RebaseResolve { (ours, theirs) =>
@@ -8533,16 +8083,7 @@ object SparkEntry {
     // oracle.
     "q381_stream_vector_index" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q381"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q381")
       val src0 = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8586,16 +8127,7 @@ object SparkEntry {
     // of both stores recomputed from the source table.
     "q382_stream_multi_store" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q382"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q382")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -8621,7 +8153,7 @@ object SparkEntry {
       // the per-epoch stats maintenance kept the even store's bands
       // fresh: a full-range count answers from metadata alone
       val (nEven, scanned) = Snapshots.countWhere(s, evenStore,
-        "event_id", Long.MinValue, Long.MaxValue)
+        LongRange("event_id", Long.MinValue, Long.MaxValue))
       require(scanned == 0,
         s"stream-maintained stats not metadata-priced ($scanned)")
       require(nEven == Snapshots.read(s, evenStore).count(),
@@ -8653,17 +8185,10 @@ object SparkEntry {
     // inserts the high half FROM the source table, and aggregates
     // the union — with the CDC insert count asserted in-body.
     "q383_sql_insert" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q383"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q383")
       s.conf.set("spark.sql.catalog.g383",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g383.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g383.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val fact = t(s, dir, "orders")
@@ -8701,17 +8226,10 @@ object SparkEntry {
     // ONLY containing files (asserted in-body), and the CDC feed
     // prices the deletions. Oracle = the surviving rows recomputed.
     "q384_sql_delete" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q384"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q384")
       s.conf.set("spark.sql.catalog.g384",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g384.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g384.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -8746,17 +8264,10 @@ object SparkEntry {
     // $history metadata table (also SQL). Oracle = the surviving
     // rows recomputed from the source.
     "q385_sql_lifecycle" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q385"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q385")
       s.conf.set("spark.sql.catalog.g385",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g385.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g385.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull &&
@@ -8791,22 +8302,13 @@ object SparkEntry {
     // emits the pre-delete v1 count and the post-MoR head count from
     // the metadata path; the oracle recomputes both from rows.
     "q386_row_count_meta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q386"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val url = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val url = scratchRun(s, dir, "q386")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("n_chars").isNotNull)
         .select(col("doc_id"), col("n_chars"))
       Snapshots.create(s, url, docs, nFiles = 8,
         clusterBy = Some("doc_id"))
-      Snapshots.deleteWhereMor(s, url, "doc_id", 150L, 420L)
+      Snapshots.deleteWhereMor(s, url, LongRange("doc_id", 150L, 420L))
       import s.implicits._
       Seq((Snapshots.rowCountMeta(s, url, version = 1),
         Snapshots.rowCountMeta(s, url)))
@@ -8821,17 +8323,10 @@ object SparkEntry {
     // assignment semantics, CDC-visible). The op trail is asserted
     // in-body; the oracle recomputes the updated rows.
     "q387_sql_update" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q387"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q387")
       s.conf.set("spark.sql.catalog.g387",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g387.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g387.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -8862,17 +8357,10 @@ object SparkEntry {
     // approximating. The op trail is asserted in-body; the oracle
     // recomputes the merged state.
     "q388_sql_merge" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q388"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q388")
       s.conf.set("spark.sql.catalog.g388",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g388.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g388.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val cust = t(s, dir, "customer")
@@ -8918,17 +8406,10 @@ object SparkEntry {
     // discovery ALL 8 rewrite); the oracle recomputes the merged
     // table relationally.
     "q389_sql_merge_pruned" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q389"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q389")
       s.conf.set("spark.sql.catalog.g389",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g389.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g389.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val cust = t(s, dir, "customer")
@@ -8982,17 +8463,10 @@ object SparkEntry {
     // routed results stay hash-exact end-to-end on real data, with
     // COW pruning asserted from the manifests).
     "q390_sql_dml_banded" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q390"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q390")
       s.conf.set("spark.sql.catalog.g390",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g390.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g390.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9035,17 +8509,10 @@ object SparkEntry {
     // (GraftMergeCondCommand) — the r17 refusal set, now translated.
     // Oracle = the equivalent relational CASE/anti-filter pipeline.
     "q391_sql_merge_cond" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q391"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q391")
       s.conf.set("spark.sql.catalog.g391",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g391.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g391.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val cust = t(s, dir, "customer")
@@ -9130,17 +8597,10 @@ object SparkEntry {
     // across a merge-on-read head and a time-travel pin. Oracle
     // recomputes both counts from rows.
     "q392_sql_count_pushdown" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q392"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q392")
       s.conf.set("spark.sql.catalog.g392",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g392.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g392.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9150,7 +8610,7 @@ object SparkEntry {
         clusterBy = Some("doc_id"))
       // a MoR delete makes the head count METADATA-hard: footers
       // alone over-count unless the DV positions subtract exactly
-      Snapshots.deleteWhereMor(s, url, "doc_id", 150L, 420L)
+      Snapshots.deleteWhereMor(s, url, LongRange("doc_id", 150L, 420L))
       def metaPriced(df: org.apache.spark.sql.DataFrame): Unit = {
         val plan = df.queryExecution.executedPlan.toString
         require(plan.contains("LocalTableScan") &&
@@ -9175,16 +8635,7 @@ object SparkEntry {
     // files again (selectivity restored). Oracle = whole-corpus
     // integer brute force (exhaustive probe must equal it exactly).
     "q393_vector_retrain" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q393"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchRun(s, dir, "q393")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -9239,16 +8690,7 @@ object SparkEntry {
     // aggregate, hash-equal to the batch twin = the oracle.
     "q394_stream_table" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q394"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchRun(s, dir, "q394")
       s.conf.set("spark.sql.catalog.g394",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g394.root", base)
@@ -9292,22 +8734,15 @@ object SparkEntry {
     // ---- Banded SQL DML on a STRING field ----
     // The q390 machinery over prefix bands: a lang-clustered store
     // with string stats routes `DELETE ... WHERE lang >= x AND
-    // lang <= y` to deleteWhereStr and `UPDATE ... WHERE lang = z`
-    // to updateWhereStr (code-point band pruning) — attribution
+    // lang <= y` and `UPDATE ... WHERE lang = z` to deleteWhere /
+    // updateWhere on a StrRange (code-point band pruning) — attribution
     // stays one sidecar read, survivors asserted from the
     // manifests. Oracle = the relational chain.
     "q395_sql_dml_banded_str" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q395"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q395")
       s.conf.set("spark.sql.catalog.g395",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g395.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g395.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9353,17 +8788,10 @@ object SparkEntry {
     // row-disjoint and rows matching no arm stay untouched. Oracle =
     // the equivalent relational CASE pipeline.
     "q396_sql_merge_matrix" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q396"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q396")
       s.conf.set("spark.sql.catalog.g396",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g396.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g396.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9416,14 +8844,7 @@ object SparkEntry {
     // checkpoint and the query aggregates it by (change, lang).
     // Oracle = the feed recomputed relationally.
     "q397_stream_changes" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q397"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q397")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/t$tag"
       val docs = t(s, dir, "documents")
@@ -9465,17 +8886,10 @@ object SparkEntry {
     // executed as LocalTableScan with no file scan. Oracle
     // recomputes the extrema from rows.
     "q398_sql_minmax_meta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q398"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q398")
       s.conf.set("spark.sql.catalog.g398",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g398.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g398.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9485,7 +8899,7 @@ object SparkEntry {
         clusterBy = Some("doc_id"))
       // a MoR delete MOVES the minimum: the sidecar must price the
       // effective extrema, not the raw footers
-      Snapshots.deleteWhereMor(s, url, "doc_id", 0L, 120L)
+      Snapshots.deleteWhereMor(s, url, LongRange("doc_id", 0L, 120L))
       Snapshots.indexStats(s, url, Seq("doc_id", "n_chars"))
       val agg = s.sql(
         s"""SELECT min(doc_id) AS lo, max(doc_id) AS hi,
@@ -9510,17 +8924,10 @@ object SparkEntry {
     // and aggregates the sink. Oracle recomputes from the source
     // rows.
     "q399_stream_pipe" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q399"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q399")
       s.conf.set("spark.sql.catalog.g399",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g399.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g399.root", rootPath)
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val (srcT, dstT) = (s"src$tag", s"dst$tag")
       val srcUrl = s"$rootPath/$srcT"
@@ -9561,17 +8968,10 @@ object SparkEntry {
     // _change/_commit_version). Oracle = the feed recomputed
     // relationally.
     "q400_sql_cdc_story" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q400"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q400")
       s.conf.set("spark.sql.catalog.g400",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g400.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g400.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
@@ -9610,14 +9010,7 @@ object SparkEntry {
     // it can never regress a committed offset (the FileStreamSource
     // admission shape). Oracle = the feed is every row inserted.
     "q401_cdc_admission" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q401"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q401")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/store$tag"
       val out = s"$rootPath/out$tag"
@@ -9669,17 +9062,10 @@ object SparkEntry {
     // pruning can only affect cost, never rows. Oracle = the two
     // in-range upserts' update rows, recomputed relationally.
     "q402_changes_range" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q402"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q402")
       s.conf.set("spark.sql.catalog.g402",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g402.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g402.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9734,17 +9120,10 @@ object SparkEntry {
     // q392 doctrine extended to the filtered shape). Oracle =
     // DuckDB counting the same predicate.
     "q403_filtered_count_meta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q403"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q403")
       s.conf.set("spark.sql.catalog.g403",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g403.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g403.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       val docs = t(s, dir, "documents")
@@ -9755,7 +9134,7 @@ object SparkEntry {
       Snapshots.indexStats(s, url, Seq("doc_id"))
       // the MoR hole INSIDE the counted band proves the metadata
       // path subtracts deleted positions, not just footer sums
-      Snapshots.deleteWhereMor(s, url, "doc_id", 150L, 420L)
+      Snapshots.deleteWhereMor(s, url, LongRange("doc_id", 150L, 420L))
       def metaPriced(df: org.apache.spark.sql.DataFrame): Unit = {
         val plan = df.queryExecution.executedPlan.toString
         require(plan.contains("LocalTableScan") &&
@@ -9779,17 +9158,10 @@ object SparkEntry {
     // column as null. In-body: the addcol op is a metadata commit.
     // Oracle = the widened table recomputed relationally.
     "q404_merge_evolution" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q404"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      val rootPath = sweptRoot(s, dir, "q404")
       s.conf.set("spark.sql.catalog.g404",
         "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.g404.root", rootPath.toString)
+      s.conf.set("spark.sql.catalog.g404.root", rootPath)
       val tbl = "t" + java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/$tbl"
       t(s, dir, "documents")

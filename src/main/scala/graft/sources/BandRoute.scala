@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** WHERE-shape classifier for the SQL DML paths ([[GraftDml]],
   * [[GraftCatalog]]'s `DELETE FROM`): recognizes a conjunction of
   * bounds on ONE integral or string column and rewrites it as the
-  * inclusive range the banded [[Snapshots.deleteWhere]] /
+  * [[KeyRange]] the banded [[Snapshots.deleteWhere]] /
   * [[Snapshots.updateWhere]] flavors take, so a retention-shaped
   * SQL sweep prices its attribution from the `_stats` sidecar (one
   * O(files) metadata read) instead of the general-predicate
@@ -31,19 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * band's epoch encoding — the general path handles them exactly).
   */
 private[sources] object BandRoute {
-  sealed trait Range { def field: String }
-  final case class LongRange(field: String, lo: Long, hi: Long)
-    extends Range
-  final case class StrRange(field: String, lo: String, hi: String)
-    extends Range
-
   /** (field, op, value) conjunct; op ∈ =,>,>=,<,<=,nn. */
   private type Conj = (String, String, Any)
 
   /** Classify a V2 `SupportsDelete` filter array (implicitly
     * AND-ed). */
   def ofFilters(schema: StructType,
-      filters: Seq[sources.Filter]): Option[Range] = {
+      filters: Seq[sources.Filter]): Option[KeyRange] = {
     val conjs = Seq.newBuilder[Conj]
     def walk(f: sources.Filter): Boolean = f match {
       case sources.And(l, r) => walk(l) && walk(r)
@@ -67,16 +61,22 @@ private[sources] object BandRoute {
     * come from the expression itself (resolved against the pinned
     * logical schema); the value side accepts any FOLDABLE
     * expression (an analyzer-inserted Cast around a literal has not
-    * been constant-folded yet at resolution time). */
-  def ofExpr(e: Expression): Option[Range] = {
+    * been constant-folded yet at resolution time). `columnOf` maps
+    * an attribute to its store column (the optimizer-time
+    * filtered-count rewrite resolves it through projections); None
+    * refuses the conjunct. */
+  def ofExpr(e: Expression,
+      columnOf: AttributeReference => Option[String] = a => Some(a.name))
+      : Option[KeyRange] = {
     val conjs = Seq.newBuilder[Conj]
     var fieldType: Map[String, DataType] = Map.empty
     def attr(x: Expression): Option[String] = x match {
-      case a: AttributeReference =>
-        fieldType.get(a.name) match {
+      case a: AttributeReference => columnOf(a).flatMap { c =>
+        fieldType.get(c) match {
           case Some(dt) if dt != a.dataType => None
-          case _ => fieldType += a.name -> a.dataType; Some(a.name)
+          case _ => fieldType += c -> a.dataType; Some(c)
         }
+      }
       case _ => None
     }
     def value(x: Expression): Option[Any] =
@@ -121,7 +121,7 @@ private[sources] object BandRoute {
   }
 
   private def build(schema: StructType,
-      conjs: Seq[Conj]): Option[Range] = {
+      conjs: Seq[Conj]): Option[KeyRange] = {
     val fields = conjs.map(_._1).distinct
     if (fields.size != 1) return None
     val field = fields.head

@@ -235,16 +235,10 @@ case class GraftUpdateCommand(url: String,
     // general path's exact containment attribution. Assignment
     // semantics stay identical: [[Snapshots.upcastSets]] applies
     // the same safe-upcast probe updateWhereCond runs internally.
-    val v = cond.flatMap(BandRoute.ofExpr) match {
+    val v = cond.flatMap(BandRoute.ofExpr(_)) match {
       case Some(r) if Snapshots.statsCovers(session, url, r.field) =>
-        val casted = Snapshots.upcastSets(session,
-          Snapshots.headSchema(session, url), setCols)
-        r match {
-          case BandRoute.LongRange(f, lo, hi) =>
-            Snapshots.updateWhere(session, url, f, lo, hi, casted)
-          case BandRoute.StrRange(f, lo, hi) =>
-            Snapshots.updateWhereStr(session, url, f, lo, hi, casted)
-        }
+        Snapshots.updateWhere(session, url, r, Snapshots.upcastSets(
+          session, Snapshots.headSchema(session, url), setCols))
       case _ =>
         val condCol = cond.map(rebind).getOrElse(lit(true))
         Snapshots.updateWhereCond(session, url, condCol, setCols)

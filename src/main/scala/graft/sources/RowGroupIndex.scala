@@ -116,9 +116,14 @@ object RowGroupIndex {
     * in the sidecar's build, not guessed per file). */
   def buildBloom(spark: SparkSession, datasetUrl: String,
       fields: Seq[String], indexUrl: String,
-      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
+      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit =
+    writeBloom(spark, Materialize.listParquetFiles(spark, datasetUrl),
+      fields, indexUrl, expectedPerFile, fpp)
+
+  private def writeBloom(spark: SparkSession, files: Seq[String],
+      fields: Seq[String], indexUrl: String, expectedPerFile: Long,
+      fpp: Double): Unit = {
     require(fields.nonEmpty, "buildBloom needs fields")
-    val files = Materialize.listParquetFiles(spark, datasetUrl)
     bloomRowsFor(spark, files, fields, expectedPerFile, fpp)
       .write.mode("overwrite").parquet(indexUrl)
   }
@@ -143,12 +148,20 @@ object RowGroupIndex {
     * A missing index falls back to a full [[buildBloom]]. */
   def updateBloom(spark: SparkSession, datasetUrl: String,
       fields: Seq[String], indexUrl: String,
-      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
+      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit =
+    refreshBloom(spark, Materialize.listParquetFiles(spark, datasetUrl),
+      fields, indexUrl, expectedPerFile, fpp)
+
+  /** [[updateBloom]] over an explicit list of the dataset's CURRENT
+    * files (what [[Snapshots.indexBloom]] takes from the latest
+    * manifest instead of a directory listing). */
+  private[sources] def refreshBloom(spark: SparkSession,
+      current: Seq[String], fields: Seq[String], indexUrl: String,
+      expectedPerFile: Long, fpp: Double): Unit = {
     val idxPath = new org.apache.hadoop.fs.Path(indexUrl)
     val fs = idxPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(idxPath)) {
-      buildBloom(spark, datasetUrl, fields, indexUrl, expectedPerFile,
-        fpp)
+      writeBloom(spark, current, fields, indexUrl, expectedPerFile, fpp)
       return
     }
     def norm(s: String): String =
@@ -160,8 +173,6 @@ object RowGroupIndex {
     require(fields.toSet == knownFields || knownFields.isEmpty,
       s"field set ${fields.sorted} != indexed ${knownFields.toSeq.sorted}" +
         " — rebuild with buildBloom")
-    val current = Materialize.listParquetFiles(spark, datasetUrl)
-    val currentNorm = current.map(norm).toSet
     val fresh = current.filter(f =>
       fields.exists(fl => !known.contains((fl, norm(f)))))
     // DELTA-GENERATION write ([[SidecarDelta]]): append only the
@@ -175,16 +186,11 @@ object RowGroupIndex {
     if (fresh.nonEmpty)
       bloomRowsFor(spark, fresh, fields, expectedPerFile, fpp)
         .coalesce(1).write.mode("append").parquet(indexUrl)
+    // bloom rows store normalized paths ([[bloomRowsFor]]), so the
+    // fold keeps live files with a plain IN-set filter
     SidecarDelta.compactIfNeeded(spark, fs, idxPath, df =>
-      df.filter(udfFileKept(currentNorm)(col("file")))
+      df.filter(col("file").isin(current.map(norm).distinct: _*))
         .dropDuplicates("field", "file"))
-  }
-
-  private def udfFileKept(currentNorm: Set[String]) = {
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    org.apache.spark.sql.functions.udf(
-      (f: String) => currentNorm.contains(norm(f)))
   }
 
   /** The shared per-file bloom build over an explicit file list

@@ -903,14 +903,16 @@ object Snapshots {
     * with a NULL field survive (a range predicate cannot match
     * NULL). Returns the committed version — the CURRENT one when no
     * file can hold a match (true no-op, nothing committed). */
-  def deleteWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long): Int = {
+  def deleteWhere(spark: SparkSession, url: String, r: KeyRange): Int = {
     val parentV = latest(spark, url)
-    deleteFromFiles(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
+    deleteFromFiles(spark, url, parentV, r,
+      pruneEntries(spark, url, parentV, Seq(r)))
   }
+
+  /** [[deleteWhere]] on a [[LongRange]] — the long-hand form. */
+  def deleteWhere(spark: SparkSession, url: String, field: String,
+      lo: Long, hi: Long): Int =
+    deleteWhere(spark, url, LongRange(field, lo, hi))
 
   /** GENERAL-predicate copy-on-write DELETE — `DELETE FROM store
     * WHERE <any condition>`: one tagged scan attributes matching
@@ -918,11 +920,11 @@ object Snapshots {
     * CONTAIN a match are rewritten without those rows, untouched
     * files re-list, and the CDC feed sees exactly the deletions.
     * SQL DELETE semantics: a row deletes only when the condition is
-    * TRUE (NULL survives). Unlike the banded [[deleteWhere]]/
-    * [[deleteWhereStr]] flavors this cannot prune the attribution
-    * scan from statistics (an arbitrary predicate has no band), so
-    * it reads the corpus once — prefer the range flavors for
-    * retention sweeps; this is the exactness fallback and the SQL
+    * TRUE (NULL survives). Unlike the banded [[deleteWhere]] this
+    * cannot prune the attribution scan from statistics (an
+    * arbitrary predicate has no band), so it reads the corpus
+    * once — prefer the range flavors for retention sweeps; this is
+    * the exactness fallback and the SQL
     * `DELETE FROM` path ([[GraftCatalog]]). Returns the CURRENT
     * version when nothing matches (true no-op). */
   def deleteWhereCond(spark: SparkSession, url: String,
@@ -956,9 +958,9 @@ object Snapshots {
     * and the CDC feed sees exactly the updates. SQL assignment
     * semantics: a SET expression whose type safely upcasts to the
     * pinned column type is cast implicitly; anything lossy refuses.
-    * Prefer the banded [[updateWhere]]/[[updateWhereStr]] flavors
-    * for range-shaped sweeps (stats-priced attribution); this is
-    * the exactness fallback and the SQL `UPDATE` path. Returns the
+    * Prefer the banded [[updateWhere]] for range-shaped sweeps
+    * (stats-priced attribution); this is the exactness fallback and
+    * the SQL `UPDATE` path. Returns the
     * CURRENT version when nothing matches. */
   def updateWhereCond(spark: SparkSession, url: String, cond: Column,
       sets: Map[String, Column]): Int = {
@@ -1009,38 +1011,26 @@ object Snapshots {
       Some(storeSchema), parent.colmap, parent.dropped)
   }
 
-  /** [[deleteWhere]] for a STRING field (prefix-band pruning). */
-  def deleteWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String): Int = {
-    val parentV = latest(spark, url)
-    deleteFromFiles(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-  }
-
   private def deleteFromFiles(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      files: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column): Int = {
+      parentV: Int, r: KeyRange, files: Seq[String]): Int = {
     val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, parentV)
     val storeSchema = schemaOf(spark, root, parent)
-    rangeTypeGate("deleteWhere", storeSchema, field, wantString)
+    rangeTypeGate("deleteWhere", storeSchema, r)
     if (files.isEmpty) return parent.version
     val names = files.toSet
     val scanned = readEntriesEff(spark, root, files, storeSchema,
         parent.colmap)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val kept = scanned.filter(!coalesce(pred(storeSchema),
-        lit(false)))
+      val hit = coalesce(r.residual(storeSchema), lit(false))
+      val kept = scanned.filter(!hit)
       // stats admission is conservative (files without a stats row
       // must-read) — a band-sized match count keeps a no-match
       // delete a TRUE no-op instead of an empty rewrite commit.
       // ONE action over the persisted scan (the r19 shape paid a
       // kept.count + scanned.count pair).
-      val matches = scanned.agg(count(when(
-        coalesce(pred(storeSchema), lit(false)), lit(1))).as("m"))
+      val matches = scanned.agg(count(when(hit, lit(1))).as("m"))
         .collect()(0).getLong(0)
       if (matches == 0L) return parent.version
       val v = parent.version + 1
@@ -1049,7 +1039,7 @@ object Snapshots {
       // progressively de-cluster the store under repeated retention
       // deletes
       val rewritten = writeFiles(spark, root, kept, v,
-        math.max(1, files.length), clusterBy = Some(field),
+        math.max(1, files.length), clusterBy = Some(r.field),
         colmap = parent.colmap)
       commit(spark, root, v, "delete",
         parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
@@ -1075,43 +1065,41 @@ object Snapshots {
     * exactly when no surviving manifest names them. Returns the
     * committed version — the CURRENT one when no row matches (true
     * no-op, nothing committed). */
-  def deleteWhereMor(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long): Int = {
+  def deleteWhereMor(spark: SparkSession, url: String,
+      r: KeyRange): Int = {
     val parentV = latest(spark, url)
-    morDelete(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
+    morDelete(spark, url, parentV, r,
+      pruneEntries(spark, url, parentV, Seq(r)))
   }
 
-  /** [[deleteWhereMor]] for a STRING field (prefix-band pruning). */
-  def deleteWhereMorStr(spark: SparkSession, url: String,
-      field: String, lo: String, hi: String): Int = {
-    val parentV = latest(spark, url)
-    morDelete(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
+  /** Flavor gate: the range's case must match the column's band
+    * flavor ([[StrRange]] ⟺ string column) — a wrong-typed range
+    * would coerce to never-matching and "succeed" touching nothing,
+    * the silent-empty class. */
+  private def flavorGate(op: String,
+      storeSchema: org.apache.spark.sql.types.StructType,
+      r: KeyRange): Unit = {
+    require(storeSchema.fieldNames.contains(r.field),
+      s"$op: no column ${r.field} in the store schema")
+    val dt = storeSchema(r.field).dataType
+    val isString = dt == org.apache.spark.sql.types.StringType
+    require(isString == r.isInstanceOf[StrRange],
+      s"$op: column ${r.field} is $dt — probe it with a " +
+        (if (isString) "StrRange" else "LongRange"))
   }
 
-  /** Shared flavor/type gate for every range mutation: a wrong-typed
-    * range would coerce to never-matching and "succeed" touching
-    * nothing — the silent-empty class. */
+  /** [[flavorGate]] plus the range-mutation column types, shared by
+    * every range mutation. */
   private def rangeTypeGate(op: String,
       storeSchema: org.apache.spark.sql.types.StructType,
-      field: String, wantString: Boolean): Unit = {
+      r: KeyRange): Unit = {
     import org.apache.spark.sql.types._
-    require(storeSchema.fieldNames.contains(field),
-      s"$op: no column $field in the store schema")
-    val isString = storeSchema(field).dataType == StringType
-    require(isString == wantString,
-      s"$op: column $field is ${storeSchema(field).dataType} — use " +
-        s"the ${if (isString) "string" else "numeric"}-range API " +
-        "flavor")
-    if (!wantString) storeSchema(field).dataType match {
+    flavorGate(op, storeSchema, r)
+    storeSchema(r.field).dataType match {
       case ByteType | ShortType | IntegerType | LongType |
-           DateType | TimestampType => ()
+           DateType | TimestampType | StringType => ()
       case dt => throw new IllegalArgumentException(
-        s"$op: column $field is $dt — not a range-mutation type " +
+        s"$op: column ${r.field} is $dt — not a range-mutation type " +
           "(integral/date/timestamp/string)")
     }
   }
@@ -1150,19 +1138,17 @@ object Snapshots {
   }
 
   private def morDelete(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column): Int = {
+      parentV: Int, r: KeyRange, entries: Seq[String]): Int = {
     val (fs, root) = fsOf(spark, url)
     val parent = snap(spark, url, parentV)
     val storeSchema = schemaOf(spark, root, parent)
-    rangeTypeGate("deleteWhereMor", storeSchema, field, wantString)
+    rangeTypeGate("deleteWhereMor", storeSchema, r)
     if (entries.isEmpty) return parent.version
     // positions of newly matching rows among the candidates'
     // EFFECTIVE rows (already-deleted positions never re-match)
     val hits = readEntriesWithPos(spark, root, entries, storeSchema,
         parent.colmap)
-      .filter(coalesce(pred(storeSchema), lit(false)))
+      .filter(coalesce(r.residual(storeSchema), lit(false)))
       .select(col(DvFileCol).as("__dv_file"),
         col(DvPosCol).as("__dv_pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1193,29 +1179,15 @@ object Snapshots {
     * never match, no-match is a true no-op, old versions read their
     * own vectors, and the CDC feed emits exact update (+pre-image)
     * rows — the manifest diff prices the commit as drop+add. */
-  def updateWhereMor(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    morUpdate(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi), set)
-  }
-
-  /** [[updateWhereMor]] for a STRING field (prefix-band pruning). */
-  def updateWhereMorStr(spark: SparkSession, url: String,
-      field: String, lo: String, hi: String,
+  def updateWhereMor(spark: SparkSession, url: String, r: KeyRange,
       set: Map[String, Column]): Int = {
     val parentV = latest(spark, url)
-    morUpdate(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi), set)
+    morUpdate(spark, url, parentV, r,
+      pruneEntries(spark, url, parentV, Seq(r)), set)
   }
 
   private def morUpdate(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column,
+      parentV: Int, r: KeyRange, entries: Seq[String],
       set: Map[String, Column]): Int = {
     val (fs, root) = fsOf(spark, url)
     val parent = snap(spark, url, parentV)
@@ -1224,9 +1196,9 @@ object Snapshots {
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhereMor: SET names unknown column $c — updates never " +
         "add columns (that is schema evolution, use append/upsert)"))
-    rangeTypeGate("updateWhereMor", storeSchema, field, wantString)
+    rangeTypeGate("updateWhereMor", storeSchema, r)
     if (entries.isEmpty) return parent.version
-    val hit = coalesce(pred(storeSchema), lit(false))
+    val hit = coalesce(r.residual(storeSchema), lit(false))
     val matched = readEntriesWithPos(spark, root, entries, storeSchema,
         parent.colmap)
       .filter(hit)
@@ -1252,7 +1224,7 @@ object Snapshots {
       // the updated images land clustered on the range field (they
       // span exactly the range's band — one narrow-band file)
       val fresh = writeFiles(spark, root, updated,
-        parent.version + 1, 1, clusterBy = Some(field),
+        parent.version + 1, 1, clusterBy = Some(r.field),
         colmap = parent.colmap)
       commitMor(spark, fs, root, parent, "morupdate", affectedData,
         allDel, fresh, storeSchema)
@@ -1298,28 +1270,15 @@ object Snapshots {
     * silent cast (the silent-empty doctrine). Returns the committed
     * version — the CURRENT one when no row matches (true no-op,
     * nothing committed). */
-  def updateWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, set: Map[String, Column]): Int = {
+  def updateWhere(spark: SparkSession, url: String, r: KeyRange,
+      set: Map[String, Column]): Int = {
     val parentV = latest(spark, url)
-    updateInFiles(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi), set)
-  }
-
-  /** [[updateWhere]] for a STRING field (prefix-band pruning). */
-  def updateWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    updateInFiles(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi), set)
+    updateInFiles(spark, url, parentV, r,
+      pruneEntries(spark, url, parentV, Seq(r)), set)
   }
 
   private def updateInFiles(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      files: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column,
+      parentV: Int, r: KeyRange, files: Seq[String],
       set: Map[String, Column]): Int = {
     val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, parentV)
@@ -1328,14 +1287,14 @@ object Snapshots {
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhere: SET names unknown column $c — updates never " +
         "add columns (that is schema evolution, use append/upsert)"))
-    rangeTypeGate("updateWhere", storeSchema, field, wantString)
+    rangeTypeGate("updateWhere", storeSchema, r)
     if (files.isEmpty) return parent.version
     val names = files.toSet
     val scanned = readEntriesEff(spark, root, files, storeSchema,
         parent.colmap)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hit = coalesce(pred(storeSchema), lit(false))
+      val hit = coalesce(r.residual(storeSchema), lit(false))
       // stats admission is conservative — a row-level probe keeps a
       // no-match update a TRUE no-op instead of an identity rewrite
       if (scanned.filter(hit).limit(1).isEmpty) return parent.version
@@ -1358,7 +1317,7 @@ object Snapshots {
       // files, and a round-robin layout would hand each output file
       // a full-width band (the deleteFromFiles rationale)
       val rewritten = writeFiles(spark, root, updated, v,
-        math.max(1, files.length), clusterBy = Some(field),
+        math.max(1, files.length), clusterBy = Some(r.field),
         colmap = parent.colmap)
       commit(spark, root, v, "update",
         parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
@@ -1614,12 +1573,20 @@ object Snapshots {
   /** Build or incrementally refresh the conventional key-bloom
     * sidecar for `fields` ([[RowGroupIndex.updateBloom]] semantics:
     * only files absent from the index are scanned; vanished files'
-    * entries prune) — O(new files) per call. */
+    * entries prune) — O(new files) per call. The blooms cover the
+    * latest manifest's DATA files (the data half of each entry, the
+    * file [[stageUpsert]] probes by): a listing of the store root
+    * would also pick up deletion-vector files and scan them as
+    * data. */
   def indexBloom(spark: SparkSession, url: String,
       fields: Seq[String], expectedPerFile: Long = 100000L,
-      fpp: Double = 0.01): Unit =
-    RowGroupIndex.updateBloom(spark, url, fields,
+      fpp: Double = 0.01): Unit = {
+    val (_, root) = fsOf(spark, url)
+    val live = snap(spark, url, latest(spark, url)).files
+      .map(e => new Path(root, splitEntry(e)._1).toString).distinct
+    RowGroupIndex.refreshBloom(spark, live, fields,
       bloomSidecarUrl(spark, url), expectedPerFile, fpp)
+  }
 
   /** Incrementally refresh whichever CONVENTIONAL sidecars the store
     * maintains — the `_stats` band index and the `_bloom` key index —
@@ -1909,14 +1876,15 @@ object Snapshots {
 
   /** Build or incrementally refresh the per-file min/max statistics
     * sidecar for `fields`. Long bands (`min_v`/`max_v`) cover
-    * integral, date and timestamp columns; STRING columns get
+    * integral, date and timestamp columns (in the
+    * [[KeyRange.bandLong]] domain); STRING columns get
     * prefix bands (`min_s` inclusive lower bound = truncated
     * minimum; `max_s` inclusive-safe upper bound = the maximum when
     * untruncated, else the truncated prefix's scalar successor via
     * [[cpBump]] — a deliberate overestimate, so pruning stays
     * conservative). Any other column type is REFUSED loudly here:
     * before this gate a non-band-able field silently cast to
-    * all-null marker bands, which [[pruneByBands]] reads as "never
+    * all-null marker bands, which [[pruneBy]] reads as "never
     * hits" — `readWhere` then returned EMPTY with no error, the one
     * wrong-answer-shaped path in the skipping layer.
     *
@@ -1993,7 +1961,7 @@ object Snapshots {
           col(f).isNull.as("isn"))
       else
         struct(lit(head.phys(f)).as("field"),
-          col(f).cast("long").as("v"),
+          KeyRange.bandLong(col(f), schema(f).dataType).as("v"),
           lit(null).cast("string").as("s"), col(f).isNull.as("isn"))
     }
     // scan under the PINNED schema: a refresh crossing a
@@ -2111,154 +2079,144 @@ object Snapshots {
         Option(r.getString(4)), Option(r.getString(5)))).toMap })
   }
 
-  /** A long-range band test with the TYPE GUARD: probing a
-    * string-banded field with a numeric range is a caller bug and
+  /** The long side of a band, with the TYPE GUARD: probing a
+    * string-banded field with a [[LongRange]] is a caller bug and
     * fails loudly — silently treating the null long side as "never
     * hits" is exactly the empty-read hazard [[indexStats]] closes. */
-  private def longHits(field: String, hits: (Long, Long) => Boolean)
-      (b: Band): Boolean = {
+  private def longSide(field: String, b: Band): (Long, Long) = {
     require(b.minS.isEmpty,
-      s"field $field carries STRING bands — use the string-range " +
-        "API (prunedFilesStr/readWhereStr/prunedFilesForKeysStr)")
-    hits(b.minV.get, b.maxV.get)
+      s"field $field carries STRING bands — probe it with a StrRange")
+    (b.minV.get, b.maxV.get)
   }
 
-  /** String-band test: inclusive range overlap under code-point
-    * order ([[cpCompare]], = the UTF-8 binary order the engine used
-    * to compute the bands). An absent upper bound must-reads. */
-  private def strHits(field: String, lo: String, hi: String)
-      (b: Band): Boolean = {
+  /** The string side of a band (absent upper bound = unbounded
+    * above), with the reverse type guard. */
+  private def strSide(field: String, b: Band): (String, Option[String]) = {
     require(b.minV.isEmpty,
-      s"field $field carries LONG bands — use the numeric-range " +
-        "API (prunedFiles/readWhere/prunedFilesForKeys)")
-    cpCompare(hi, b.minS.get) >= 0 &&
-      b.maxS.forall(mx => cpCompare(lo, mx) <= 0)
+      s"field $field carries LONG bands — probe it with a LongRange")
+    (b.minS.get, b.maxS)
   }
 
-  /** Shared skipping skeleton for [[prunedFiles]] /
-    * [[prunedFilesStr]] / [[prunedFilesForKeys]]: resolve the
-    * version's manifest, load the sidecar's bands for `field`, keep
-    * every file whose band satisfies `bandHits`. The conservatism
-    * contract lives here once: no sidecar → read everything; file
-    * without a stats row → must read; all-null band → a value
-    * predicate never hits. */
-  private def pruneEntries(spark: SparkSession, url: String,
-      version: Int, field: String)
-      (bandHits: Band => Boolean): Seq[String] = {
+  /** Whether `b` can hold a value of `r`: inclusive overlap, under
+    * code-point order ([[cpCompare]], = the UTF-8 binary order the
+    * engine used to compute the bands) for strings. An absent string
+    * upper bound must-reads. */
+  private def bandHits(r: KeyRange)(b: Band): Boolean = r match {
+    case LongRange(f, lo, hi) =>
+      val (mn, mx) = longSide(f, b)
+      mx >= lo && mn <= hi
+    case StrRange(f, lo, hi) =>
+      val (mn, mx) = strSide(f, b)
+      cpCompare(hi, mn) >= 0 && mx.forall(cpCompare(lo, _) <= 0)
+  }
+
+  /** Whether every non-null value `b` bounds lies inside `r` — what
+    * lets [[countWhere]] count a file from metadata. Sound under
+    * string truncation: the stored lower band is ≤ the file's true
+    * minimum and the successor upper band is ≥ its true maximum; an
+    * "unbounded above" band is never contained. */
+  private def bandInside(r: KeyRange)(b: Band): Boolean = r match {
+    case LongRange(f, lo, hi) =>
+      val (mn, mx) = longSide(f, b)
+      lo <= mn && mx <= hi
+    case StrRange(f, lo, hi) =>
+      val (mn, mx) = strSide(f, b)
+      cpCompare(lo, mn) <= 0 && mx.exists(cpCompare(_, hi) <= 0)
+  }
+
+  /** Shared skipping skeleton: resolve the version's manifest, load
+    * the sidecar's bands for every tested field in ONE read, keep
+    * each entry (manifest order) whose band passes EVERY
+    * `(field, test)`. The conservatism contract lives here once: no
+    * sidecar → read everything; file without a stats row → must
+    * read; all-null band → a value predicate never hits. */
+  private def pruneBy(spark: SparkSession, url: String, version: Int,
+      tests: Seq[(String, Band => Boolean)]): Seq[String] = {
     val (fs, root) = fsOf(spark, url)
     val s = snap(spark, url, version)
     // the sidecar keys fields physically (rename-proof)
-    loadBands(spark, fs, root, Seq(s.phys(field))) match {
+    val fields = tests.map(t => s.phys(t._1)).distinct
+    loadBands(spark, fs, root, fields) match {
       case None => s.files
       case Some(byField) =>
-        val stats = byField.getOrElse(s.phys(field),
-          Map.empty[String, Band])
+        val perTest = tests.map { case (field, hits) =>
+          (byField.getOrElse(s.phys(field), Map.empty[String, Band]),
+            hits) }
         s.files.filter { f =>
-          stats.get(f) match {
-            case None => true
-            case Some(b) if b.allNull => false
-            case Some(b) => bandHits(b)
+          perTest.forall { case (stats, hits) =>
+            stats.get(f) match {
+              case None => true
+              case Some(b) if b.allNull => false
+              case Some(b) => hits(b)
+            }
           }
         }
     }
   }
 
-  /** [[pruneEntries]] in the public path form (one string per
-    * surviving manifest ENTRY — on a merge-on-read store a composite
-    * entry's path form exists nowhere on disk; read survivors
-    * through [[readEntryPaths]], never raw `spark.read`). */
-  private def pruneByBands(spark: SparkSession, url: String,
-      version: Int, field: String)
-      (bandHits: Band => Boolean): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    pruneEntries(spark, url, version, field)(bandHits)
-      .map(f => new Path(root, f).toString)
+  /** The entries of `version` that can hold a row inside EVERY range
+    * of the conjunction. */
+  private def pruneEntries(spark: SparkSession, url: String,
+      version: Int, ranges: Seq[KeyRange]): Seq[String] = {
+    require(ranges.nonEmpty, "range pruning needs at least one range")
+    pruneBy(spark, url, version, ranges.map(r => r.field -> bandHits(r) _))
   }
 
-  /** The subset of `version`'s files that can contain a row with
-    * `field` in [lo, hi] — resolved from the stats sidecar WITHOUT
-    * opening any data file. A file is kept when its stats row says
-    * the range overlaps [min_v, max_v], or when no stats row covers
-    * it (stats lag is a performance bug, never a correctness bug).
-    * All-null and zero-row files are skipped: a range predicate
-    * cannot match NULL. Returns absolute paths. */
+  /** Surviving entries in the public path form (one string per
+    * manifest ENTRY — on a merge-on-read store a composite entry's
+    * path form exists nowhere on disk; read survivors through
+    * [[readEntryPaths]], never raw `spark.read`). */
+  private def entryPaths(spark: SparkSession, url: String,
+      entries: Seq[String]): Seq[String] = {
+    val (_, root) = fsOf(spark, url)
+    entries.map(f => new Path(root, f).toString)
+  }
+
+  /** The subset of `version`'s files that can contain a row inside
+    * every range of the conjunction — resolved from the stats sidecar
+    * (one read, whatever the number of ranges) WITHOUT opening any
+    * data file. A file is kept when each range can overlap its band,
+    * or when no stats row covers it (stats lag is a performance bug,
+    * never a correctness bug). All-null and zero-row files are
+    * skipped: a range predicate cannot match NULL. String bands are
+    * truncated prefixes, so survival is conservative; the caller's
+    * residual keeps reads exact. On a [[zcluster]]ed store each range
+    * prunes independently. Returns absolute paths. */
+  def prunedFiles(spark: SparkSession, url: String, version: Int,
+      ranges: Seq[KeyRange]): Seq[String] =
+    entryPaths(spark, url, pruneEntries(spark, url, version, ranges))
+
+  /** [[prunedFiles]] for one [[LongRange]] — the long-hand form. */
   def prunedFiles(spark: SparkSession, url: String, version: Int,
       field: String, lo: Long, hi: Long): Seq[String] =
-    pruneByBands(spark, url, version, field)(
-      longHits(field, (mn, mx) => mx >= lo && mn <= hi))
+    prunedFiles(spark, url, version, Seq(LongRange(field, lo, hi)))
 
-  /** [[prunedFiles]] for a STRING field: a file survives when its
-    * prefix band can overlap [lo, hi] under code-point order. The
-    * bands are truncated prefixes, so survival is conservative
-    * (never skips a file that could hold a match); the caller's
-    * residual filter keeps the read exact. */
-  def prunedFilesStr(spark: SparkSession, url: String, version: Int,
-      field: String, lo: String, hi: String): Seq[String] =
-    pruneByBands(spark, url, version, field)(strHits(field, lo, hi))
-
-  /** The residual for a long-band range: date/timestamp columns
-    * compare through the SAME cast the bands were computed under
-    * (`col.cast("long")` — a bare long literal comparison would
-    * fail analysis on them); integral columns compare directly so
-    * the predicate still pushes into the parquet scan. */
-  private def longRangePred(
-      schema: org.apache.spark.sql.types.StructType, field: String,
-      lo: Long, hi: Long): Column = {
-    import org.apache.spark.sql.types._
-    schema(field).dataType match {
-      case DateType | TimestampType =>
-        col(field).cast("long") >= lit(lo) &&
-          col(field).cast("long") <= lit(hi)
-      case _ => col(field) >= lit(lo) && col(field) <= lit(hi)
-    }
-  }
-
-  /** Shared read tail for the pruned-read family: survivors under
-    * the version's PINNED schema (pruning to pre-evolution files
-    * must not make evolved columns vanish — the [[readAsOf]]
-    * contract), residual applied, schema-shaped empty frame when
-    * nothing survives. */
-  private def readPruned(spark: SparkSession, url: String, v: Int,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column)
-      : DataFrame = {
+  /** Range-predicate read with file skipping: resolve the version's
+    * manifest (`version` ≤ 0 = latest), prune files through
+    * [[prunedFiles]], and apply every range's residual to the
+    * survivors under the version's PINNED schema (so the result is
+    * exact even when stats are stale or absent, and pruning to
+    * pre-evolution files never makes evolved columns vanish — the
+    * [[readAsOf]] contract). The metadata cost is O(files); the data
+    * cost is only the overlapping band — on a store [[cluster]]ed by
+    * the field, a narrow range touches a handful of files out of
+    * 100k. One call answers `price IN [lo,hi] AND name IN [a,b]`. */
+  def readWhere(spark: SparkSession, url: String, ranges: Seq[KeyRange],
+      version: Int): DataFrame = {
+    val v = if (version > 0) version else latest(spark, url)
+    val entries = pruneEntries(spark, url, v, ranges)
     val root = fsOf(spark, url)._2
     val s = snap(spark, url, v)
     val schema = schemaOf(spark, root, s)
     if (entries.isEmpty) readAsOf(spark, url, v).filter(lit(false))
     else readEntriesEff(spark, root, entries, schema, s.colmap)
-      .filter(pred(schema))
+      .filter(ranges.map(_.residual(schema)).reduce(_ && _))
   }
 
-  /** Range-predicate read with file skipping: resolve the version's
-    * manifest, prune files through [[prunedFiles]], and apply the
-    * residual filter to the survivors (so the result is exact even
-    * when stats are stale or absent). The metadata cost is O(files);
-    * the data cost is only the overlapping band — on a store
-    * [[cluster]]ed by `field`, a narrow range touches a handful of
-    * files out of 100k. */
+  /** [[readWhere]] on one [[LongRange]] — the long-hand form. */
   def readWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntries(spark, url, v, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
-  }
-
-  /** [[readWhere]] for a STRING field: prune through
-    * [[prunedFilesStr]], then apply the exact residual range filter
-    * (Spark's string comparison is the same UTF-8 binary order the
-    * bands were computed under, so band survival and the residual
-    * agree). Cluster the store by the field to make prefix bands
-    * narrow — a name-range probe then opens a handful of files. */
-  def readWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntries(spark, url, v, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-  }
+      lo: Long, hi: Long, version: Int = -1): DataFrame =
+    readWhere(spark, url, Seq(LongRange(field, lo, hi)), version)
 
   /** Maintenance rewrite: re-lay the live rows range-clustered on
     * `field` as a NEW version (op "cluster") — old versions stay
@@ -2300,58 +2258,6 @@ object Snapshots {
       Some(df.schema), parent.colmap, parent.dropped)
   }
 
-  /** Conjunctive multi-field pruning: a file survives only if EVERY
-    * range can overlap it ([[prunedFiles]] per field, intersected).
-    * On a [[zcluster]]ed store each predicate prunes independently. */
-  def prunedFilesAll(spark: SparkSession, url: String, version: Int,
-      preds: Seq[(String, Long, Long)]): Seq[String] = {
-    require(preds.nonEmpty, "prunedFilesAll needs at least one range")
-    prunedFilesMixed(spark, url, version, preds, Nil)
-  }
-
-  /** [[prunedFilesAll]] over a conjunction of LONG ranges and STRING
-    * ranges together — the mixed-type probe a store clustered on a
-    * name and stats-indexed on several fields answers with ONE
-    * sidecar read (a 4-range z-order probe used to pay 4 Spark jobs
-    * + 4 manifest resolves). */
-  def prunedFilesMixed(spark: SparkSession, url: String, version: Int,
-      preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)]): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    pruneEntriesMixed(spark, url, version, preds, strPreds)
-      .map(f => new Path(root, f).toString).sorted
-  }
-
-  private def pruneEntriesMixed(spark: SparkSession, url: String,
-      version: Int, preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)]): Seq[String] = {
-    require(preds.nonEmpty || strPreds.nonEmpty,
-      "prunedFilesMixed needs at least one range")
-    val (fs, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
-    val fields = (preds.map(_._1) ++ strPreds.map(_._1))
-      .distinct.map(s.phys)
-    loadBands(spark, fs, root, fields) match {
-      case None => s.files.sorted
-      case Some(byField) =>
-        def test(fname: String, f: String)(hit: Band => Boolean) =
-          byField.getOrElse(s.phys(f), Map.empty[String, Band])
-            .get(fname) match {
-              case None => true
-              case Some(b) if b.allNull => false
-              case Some(b) => hit(b)
-            }
-        s.files.filter { fname =>
-          preds.forall { case (f, lo, hi) =>
-            test(fname, f)(
-              longHits(f, (mn, mx) => mx >= lo && mn <= hi))
-          } && strPreds.forall { case (f, lo, hi) =>
-            test(fname, f)(strHits(f, lo, hi))
-          }
-        }.sorted
-    }
-  }
-
   /** File pruning for a KEY SET — the CDC-invalidation shape
     * ([[JoinView.refresh]]'s dim-driven side probes the fact store
     * with the changed dim keys): a file survives iff its stats band
@@ -2364,8 +2270,9 @@ object Snapshots {
       version: Int, field: String, keys: Seq[Long]): Seq[String] = {
     if (keys.isEmpty) return Seq.empty
     val sorted = keys.distinct.sorted.toArray
-    pruneByBands(spark, url, version, field)(longHits(field,
-      (mn, mx) => {
+    entryPaths(spark, url, pruneBy(spark, url, version, Seq(field -> {
+      b =>
+        val (mn, mx) = longSide(field, b)
         // any probed key inside [mn,mx]? binary search for the first
         // key >= mn, then check it is <= mx
         var lo = 0; var hi = sorted.length
@@ -2374,7 +2281,7 @@ object Snapshots {
           if (sorted(mid) < mn) lo = mid + 1 else hi = mid
         }
         lo < sorted.length && sorted(lo) <= mx
-      }))
+    })))
   }
 
   /** [[prunedFilesForKeys]] for a STRING key column: a file
@@ -2386,47 +2293,22 @@ object Snapshots {
       version: Int, field: String, keys: Seq[String]): Seq[String] = {
     if (keys.isEmpty) return Seq.empty
     val sorted = keys.distinct.sortWith(cpCompare(_, _) < 0).toArray
-    pruneByBands(spark, url, version, field) { b =>
-      require(b.minV.isEmpty,
-        s"field $field carries LONG bands — use prunedFilesForKeys")
-      val mn = b.minS.get
-      // first key >= mn, then check it is <= the upper bound
-      var lo = 0; var hi = sorted.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (cpCompare(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
-      }
-      lo < sorted.length &&
-        b.maxS.forall(mx => cpCompare(sorted(lo), mx) <= 0)
-    }
+    entryPaths(spark, url, pruneBy(spark, url, version, Seq(field -> {
+      b =>
+        val (mn, mx) = strSide(field, b)
+        // first key >= mn, then check it is <= the upper bound
+        var lo = 0; var hi = sorted.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (cpCompare(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+        }
+        lo < sorted.length && mx.forall(cpCompare(sorted(lo), _) <= 0)
+    })))
   }
 
-  /** [[readWhere]] over a conjunction of ranges: files pruned by
-    * [[prunedFilesAll]], every residual predicate applied. */
-  def readWhereAll(spark: SparkSession, url: String,
-      preds: Seq[(String, Long, Long)], version: Int = -1): DataFrame =
-    readWhereMixed(spark, url, preds, Nil, version)
-
-  /** [[readWhereAll]] with STRING ranges in the conjunction: files
-    * pruned by [[prunedFilesMixed]], every residual applied — one
-    * call answers `price IN [lo,hi] AND name IN [a,b]` with one
-    * sidecar read and an exact result. */
-  def readWhereMixed(spark: SparkSession, url: String,
-      preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)],
-      version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntriesMixed(spark, url, v, preds, strPreds),
-      schema => (preds.map { case (f, lo, hi) =>
-        longRangePred(schema, f, lo, hi) } ++
-        strPreds.map { case (f, lo, hi) =>
-          col(f) >= lit(lo) && col(f) <= lit(hi) }).reduce(_ && _))
-  }
-
-  /** Exact `SELECT count(*) WHERE field BETWEEN lo AND hi` that
-    * opens only band-STRADDLING files: a file whose band lies fully
-    * inside the range contributes `n_rows − n_null` from the stats
+  /** Exact `SELECT count(*) WHERE r` that opens only band-STRADDLING
+    * files: a file whose band lies fully inside the range
+    * ([[bandInside]]) contributes `n_rows − n_null` from the stats
     * sidecar alone (every non-null value is in range by the band
     * bound), a disjoint or all-null file contributes 0, and only
     * files partially overlapping the range — or not yet covered by
@@ -2437,68 +2319,37 @@ object Snapshots {
     * without row counts) degrades to scan-counting the band-admitted
     * files. Returns (count, filesScanned) so callers can assert the
     * scan subset. */
-  def countWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, version: Int = -1): (Long, Int) =
-    countByBands(spark, url, version, field, wantString = false,
-      b => { longHits(field, (mn, mx) => lo <= mx && hi >= mn)(b) },
-      b => lo <= b.minV.get && b.maxV.get <= hi,
-      longRangePred(_, field, lo, hi))
-
-  /** [[countWhere]] for a STRING field (prefix bands): containment
-    * stays sound under truncation — the stored lower band is ≤ the
-    * file's true minimum and the successor upper band is ≥ its true
-    * maximum, so `lo ≤ min_s && max_s ≤ hi` proves every value is
-    * inside; an "unbounded above" band (failed successor) is never
-    * metadata-counted. */
-  def countWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, version: Int = -1): (Long, Int) =
-    countByBands(spark, url, version, field, wantString = true,
-      strHits(field, lo, hi),
-      b => cpCompare(lo, b.minS.get) <= 0 &&
-        b.maxS.exists(mx => cpCompare(mx, hi) <= 0),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-
-  private def countByBands(spark: SparkSession, url: String,
-      version: Int, field: String, wantString: Boolean,
-      overlapping: Band => Boolean, contained: Band => Boolean,
-      residual: org.apache.spark.sql.types.StructType => Column)
-      : (Long, Int) = {
+  def countWhere(spark: SparkSession, url: String, r: KeyRange,
+      version: Int = -1): (Long, Int) = {
     val (fs, root) = fsOf(spark, url)
     val v = if (version > 0) version else latest(spark, url)
     val s = snap(spark, url, v)
     val schema = schemaOf(spark, root, s)
-    require(schema.fieldNames.contains(field),
-      s"countWhere: no column $field in the store schema")
-    import org.apache.spark.sql.types._
-    val isString = schema(field).dataType == StringType
-    require(isString == wantString,
-      s"countWhere: column $field is ${schema(field).dataType} — " +
-        s"use the ${if (isString) "string" else "numeric"}-range " +
-        "API flavor")
+    flavorGate("countWhere", schema, r)
     def scanCount(entries: Seq[String]): Long =
       if (entries.isEmpty) 0L
       else readEntriesEff(spark, root, entries, schema, s.colmap)
-        .filter(residual(schema)).count()
+        .filter(r.residual(schema)).count()
     val sp = statsPath(root)
     val hasCounts = fs.exists(sp) &&
       spark.read.parquet(sp.toString).columns.contains("n_rows")
     if (!hasCounts) {
       // conservative fallback: band-prune if possible, scan-count
-      val admitted = pruneEntries(spark, url, v, field)(overlapping)
+      val admitted = pruneEntries(spark, url, v, Seq(r))
       return (scanCount(admitted), admitted.size)
     }
     // one sidecar read: band + row/null counts per covered file
     // (fields keyed physically — rename-proof)
     val rows = spark.read.parquet(sp.toString)
-      .filter(col("field") === s.phys(field))
+      .filter(col("field") === s.phys(r.field))
       .select("file", "min_v", "max_v", "min_s", "max_s",
         "n_null", "n_rows")
       .collect()
-      .map(r => r.getString(0) -> ((Band(
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        Option(r.getString(3)), Option(r.getString(4))),
-        r.getLong(5), r.getLong(6)))).toMap
+      .map(row => row.getString(0) -> ((Band(
+        if (row.isNullAt(1)) None else Some(row.getLong(1)),
+        if (row.isNullAt(2)) None else Some(row.getLong(2)),
+        Option(row.getString(3)), Option(row.getString(4))),
+        row.getLong(5), row.getLong(6)))).toMap
     var metaCount = 0L
     val toScan = Seq.newBuilder[String]
     s.files.foreach { f =>
@@ -2506,8 +2357,8 @@ object Snapshots {
         case None => toScan += f
         case Some((b, _, _)) if b.allNull => () // no value can match
         case Some((b, nNull, nRows)) =>
-          if (contained(b)) metaCount += nRows - nNull
-          else if (overlapping(b)) toScan += f
+          if (bandInside(r)(b)) metaCount += nRows - nNull
+          else if (bandHits(r)(b)) toScan += f
       }
     }
     val files = toScan.result()
@@ -2516,9 +2367,9 @@ object Snapshots {
 
   /** [[aggWhere]]'s result: exact aggregates over the rows whose
     * field value lies in the range (min/max None when count is 0).
-    * Values live in the band domain — date/timestamp fields
-    * aggregate their cast(long) form, the same contract as
-    * [[readWhere]]'s range arguments. */
+    * Values live in the band domain ([[KeyRange.bandLong]]: dates
+    * as days since the epoch, timestamps as cast(long) seconds), the
+    * same contract as a [[LongRange]]'s bounds. */
   final case class RangeAgg(count: Long, sum: BigDecimal,
       min: Option[Long], max: Option[Long], filesScanned: Int)
 
@@ -2531,8 +2382,8 @@ object Snapshots {
     * with the residual predicate. The dashboard/retention-audit
     * query — `sum(bytes) in the last 30 days` on a 100k-file store —
     * becomes one sidecar read plus two boundary files. Long-band
-    * fields only (a string sum is meaningless — [[countWhereStr]]
-    * covers string ranges); exactness never depends on stats
+    * fields only (a string sum is meaningless — [[countWhere]] takes
+    * a [[StrRange]]); exactness never depends on stats
     * freshness. */
   def aggWhere(spark: SparkSession, url: String, field: String,
       lo: Long, hi: Long, version: Int = -1): RangeAgg = {
@@ -2548,15 +2399,16 @@ object Snapshots {
            DateType | TimestampType => ()
       case dt => throw new IllegalArgumentException(
         s"aggWhere: column $field is $dt — long-band fields only " +
-          "(integral/date/timestamp; string ranges: countWhereStr)")
+          "(integral/date/timestamp; string ranges: countWhere)")
     }
+    val range = LongRange(field, lo, hi)
     def scanAgg(entries: Seq[String])
         : (Long, BigDecimal, Option[Long], Option[Long]) =
       if (entries.isEmpty) (0L, BigDecimal(0), None, None)
       else {
-        val vc = col(field).cast("long")
+        val vc = KeyRange.bandLong(col(field), schema(field).dataType)
         val r = readEntriesEff(spark, root, entries, schema, s.colmap)
-          .filter(longRangePred(schema, field, lo, hi))
+          .filter(range.residual(schema))
           .agg(count(lit(1)).as("n"),
             sum(vc.cast("decimal(38,0)")).as("s"),
             min(vc).as("mn"), max(vc).as("mx"))
@@ -2573,12 +2425,12 @@ object Snapshots {
         (meta._3.toSeq ++ scan._3.toSeq).reduceOption(_ min _),
         (meta._4.toSeq ++ scan._4.toSeq).reduceOption(_ max _),
         scanned)
-    val overlapping = longHits(field, (mn, mx) => lo <= mx && hi >= mn) _
+    val overlapping = bandHits(range) _
     val sp = statsPath(root)
     val hasSums = fs.exists(sp) &&
       spark.read.parquet(sp.toString).columns.contains("sum_v")
     if (!hasSums) {
-      val admitted = pruneEntries(spark, url, v, field)(overlapping)
+      val admitted = pruneEntries(spark, url, v, Seq(range))
       return merge((0L, BigDecimal(0), None, None),
         scanAgg(admitted), admitted.size)
     }

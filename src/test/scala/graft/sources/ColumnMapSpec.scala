@@ -40,8 +40,8 @@ class ColumnMapSpec extends SparkSpec {
     val hit = Snapshots.prunedFiles(spark, url, v2, "doc_id", 1L, 10L)
     assert(hit.nonEmpty && hit.size < filesBefore.size,
       s"rename broke band pruning (${hit.size}/${filesBefore.size})")
-    val (cnt, scanned) = Snapshots.countWhere(spark, url, "doc_id",
-      Long.MinValue, Long.MaxValue)
+    val (cnt, scanned) = Snapshots.countWhere(spark, url, LongRange("doc_id",
+      Long.MinValue, Long.MaxValue))
     assert(cnt == 100L && scanned == 0,
       s"full-range count not metadata-only after rename ($scanned)")
     assert(Snapshots.readWhere(spark, url, "doc_id", 5L, 7L)
@@ -127,11 +127,11 @@ class ColumnMapSpec extends SparkSpec {
       nFiles = 2, clusterBy = Some("id"))
     Snapshots.renameColumn(spark, url, "id", "key")
     val v1 = Snapshots.latest(spark, url)
-    val v2 = Snapshots.deleteWhereMor(spark, url, "key", 10L, 19L)
+    val v2 = Snapshots.deleteWhereMor(spark, url, LongRange("key", 10L, 19L))
     assert(Snapshots.read(spark, url).count() == 50L)
     val feed = Snapshots.changes(spark, url, "key", v1, v2)
     assert(feed.filter(col("_change") === "delete").count() == 10L)
-    Snapshots.updateWhereMor(spark, url, "key", 20L, 22L,
+    Snapshots.updateWhereMor(spark, url, LongRange("key", 20L, 22L),
       Map("body" -> lit("edited")))
     assert(Snapshots.read(spark, url)
       .filter(col("body") === "edited").count() == 3L)

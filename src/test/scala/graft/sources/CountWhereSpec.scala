@@ -25,20 +25,21 @@ class CountWhereSpec extends SparkSpec {
       .snap(spark, url, Snapshots.latest(spark, url)).files.size
     // interior range: exact count, strict scan subset
     val expect = (200L to 700L).count(_ % 53 != 0).toLong
-    val (n, scanned) = Snapshots.countWhere(spark, url, "x", 200L, 700L)
+    val (n, scanned) =
+      Snapshots.countWhere(spark, url, LongRange("x", 200L, 700L))
     assert(n == expect)
     assert(scanned > 0 && scanned < total,
       s"scanned $scanned/$total — interior files should be metadata")
     // a range containing every value needs ZERO file opens
-    val (all, s0) = Snapshots.countWhere(spark, url, "x", 0L, 2000L)
+    val (all, s0) = Snapshots.countWhere(spark, url, LongRange("x", 0L, 2000L))
     assert(all == (1L to 1000L).count(_ % 53 != 0).toLong)
     assert(s0 == 0, s"full-cover range scanned $s0 files")
     // a disjoint range is zero without opening anything
-    assert(Snapshots.countWhere(spark, url, "x", 5000L, 9999L) ==
+    assert(Snapshots.countWhere(spark, url, LongRange("x", 5000L, 9999L)) ==
       ((0L, 0)))
     // flavor gate
     intercept[IllegalArgumentException] {
-      Snapshots.countWhereStr(spark, url, "x", "a", "b")
+      Snapshots.countWhere(spark, url, StrRange("x", "a", "b"))
     }
   }
 
@@ -47,7 +48,8 @@ class CountWhereSpec extends SparkSpec {
     val url = fresh("nostats")
     Snapshots.create(spark, url,
       (1L to 300L).map(i => (i, i)).toDF("id", "x"), nFiles = 4)
-    val (n, scanned) = Snapshots.countWhere(spark, url, "x", 50L, 120L)
+    val (n, scanned) =
+      Snapshots.countWhere(spark, url, LongRange("x", 50L, 120L))
     assert(n == 71L && scanned == 4, "no sidecar: scan everything")
     // string store
     val surl = fresh("str")
@@ -58,16 +60,16 @@ class CountWhereSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val totalS = Snapshots
       .snap(spark, surl, Snapshots.latest(spark, surl)).files.size
-    val (ns, ss) = Snapshots.countWhereStr(spark, surl, "k", "c", "e~")
+    val (ns, ss) = Snapshots.countWhere(spark, surl, StrRange("k", "c", "e~"))
     assert(ns == 90L) // all of c, d, e
     assert(ss < totalS, s"string count scanned $ss/$totalS")
     intercept[IllegalArgumentException] {
-      Snapshots.countWhere(spark, surl, "k", 1L, 2L)
+      Snapshots.countWhere(spark, surl, LongRange("k", 1L, 2L))
     }
     // stats lag: new files without stats rows are scanned, count exact
     Snapshots.append(spark, surl,
       Seq(("c99", 99L)).toDF("k", "v"), nFiles = 1)
-    val (n2, s2) = Snapshots.countWhereStr(spark, surl, "k", "c", "e~")
+    val (n2, s2) = Snapshots.countWhere(spark, surl, StrRange("k", "c", "e~"))
     assert(n2 == 91L && s2 >= 1)
   }
 
@@ -130,7 +132,7 @@ class CountWhereSpec extends SparkSpec {
       (101L to 120L).map(i => (i, i)).toDF("id", "v"), nFiles = 2)
     assert(Snapshots.rowCountMeta(spark, url) == 120L)
     // MoR delete: one vector shared by several entries
-    Snapshots.deleteWhereMor(spark, url, "id", 10L, 40L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 10L, 40L))
     assert(Snapshots.rowCountMeta(spark, url) ==
       Snapshots.read(spark, url).count())
     assert(Snapshots.rowCountMeta(spark, url) == 89L)

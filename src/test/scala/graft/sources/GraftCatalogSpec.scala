@@ -72,7 +72,7 @@ class GraftCatalogSpec extends SparkSpec {
     }
     assert(eDrop.getMessage.contains("has history"))
     // MoR delete: SQL must see the EFFECTIVE rows (no resurrection)
-    Snapshots.deleteWhereMor(spark, s"$root/guard", "id", 1L, 2L)
+    Snapshots.deleteWhereMor(spark, s"$root/guard", LongRange("id", 1L, 2L))
     assert(spark.sql("SELECT count(*) AS n FROM gcat.guard")
       .as[Long].head() == 18L)
     assert(spark.sql(
@@ -181,7 +181,7 @@ class GraftCatalogSpec extends SparkSpec {
     // colmap intact and is visible through the effective scan
     Snapshots.create(spark, s"$root/wm",
       (1L to 10L).map(i => (i, i)).toDF("id", "n"), nFiles = 1)
-    Snapshots.deleteWhereMor(spark, s"$root/wm", "id", 1L, 2L)
+    Snapshots.deleteWhereMor(spark, s"$root/wm", LongRange("id", 1L, 2L))
     Snapshots.renameColumn(spark, s"$root/wm", "n", "num")
     spark.sql("INSERT INTO gcat.wm VALUES (21, 210)")
     assert(spark.sql(
@@ -475,7 +475,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(now.filter(col("id") === 21L)
       .select("grp").as[String].head().endsWith("!"))
     // MoR store: updates apply to EFFECTIVE rows
-    Snapshots.deleteWhereMor(spark, s"$root/u", "id", 30L, 35L)
+    Snapshots.deleteWhereMor(spark, s"$root/u", LongRange("id", 30L, 35L))
     spark.sql("UPDATE gcat.u SET v = 1 WHERE id >= 30")
     val eff = Snapshots.read(spark, s"$root/u")
     assert(eff.filter(col("id") >= 30L && col("v") =!= 1L).isEmpty)

@@ -35,7 +35,7 @@ class MorDeleteSpec extends SparkSpec {
     val v1 = mk(url)
     Snapshots.indexStats(spark, url, Seq("id"))
     val before = Snapshots.snap(spark, url, v1).files.sorted
-    val v2 = Snapshots.deleteWhereMor(spark, url, "id", 10L, 19L)
+    val v2 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 10L, 19L))
     assert(v2 == v1 + 1)
     // data files are SHARED, not rewritten: same physical data parts
     assert(dataParts(url, v2) == before,
@@ -52,11 +52,11 @@ class MorDeleteSpec extends SparkSpec {
     // snapshot isolation: v1 still reads all 100
     assert(Snapshots.readAsOf(spark, url, v1).count() == 100L)
     // no-match range: true no-op, nothing committed
-    assert(Snapshots.deleteWhereMor(spark, url, "id", 5000L, 6000L)
+    assert(Snapshots.deleteWhereMor(spark, url, LongRange("id", 5000L, 6000L))
       == v2)
     // flavor gate: string range on a long column refuses
     intercept[IllegalArgumentException] {
-      Snapshots.deleteWhereMorStr(spark, url, "id", "a", "b")
+      Snapshots.deleteWhereMor(spark, url, StrRange("id", "a", "b"))
     }
   }
 
@@ -64,8 +64,8 @@ class MorDeleteSpec extends SparkSpec {
       "entry (readers never stack joins)") {
     val url = fresh("chain")
     val v1 = mk(url, n = 60, files = 2)
-    val v2 = Snapshots.deleteWhereMor(spark, url, "id", 1L, 5L)
-    val v3 = Snapshots.deleteWhereMor(spark, url, "id", 8L, 10L)
+    val v2 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 1L, 5L))
+    val v3 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 8L, 10L))
     assert(v3 == v2 + 1 && v2 == v1 + 1)
     // one dv ref per entry, and the v3 entry is NOT v2's vector
     val e2 = Snapshots.snap(spark, url, v2).files
@@ -86,7 +86,7 @@ class MorDeleteSpec extends SparkSpec {
       "the deleted rows, nothing else") {
     val url = fresh("cdc")
     val v1 = mk(url, n = 40, files = 2)
-    val v2 = Snapshots.deleteWhereMor(spark, url, "id", 3L, 6L)
+    val v2 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 3L, 6L))
     val feed = Snapshots.changes(spark, url, "id", v1, v2)
       .select(col("id"), col("_change")).as[(Long, String)]
       .collect().sorted
@@ -99,14 +99,14 @@ class MorDeleteSpec extends SparkSpec {
     val url = fresh("stats")
     mk(url, n = 200, files = 8)
     Snapshots.indexStats(spark, url, Seq("id"))
-    Snapshots.deleteWhereMor(spark, url, "id", 50L, 59L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 50L, 59L))
     // fresh composite entries are uncovered → scanned exactly
-    val (c0, _) = Snapshots.countWhere(spark, url, "id", 40L, 70L)
+    val (c0, _) = Snapshots.countWhere(spark, url, LongRange("id", 40L, 70L))
     assert(c0 == 31L - 10L)
     // refresh covers the composite entries with effective bands
     assert(Snapshots.indexStats(spark, url, Seq("id")) > 0)
-    val (c1, scanned1) = Snapshots.countWhere(spark, url, "id",
-      1L, 200L)
+    val (c1, scanned1) = Snapshots.countWhere(spark, url, LongRange("id",
+      1L, 200L))
     assert(c1 == 190L)
     assert(scanned1 == 0, "full-range count must be metadata-only " +
       s"after refresh (scanned $scanned1)")
@@ -122,7 +122,7 @@ class MorDeleteSpec extends SparkSpec {
       "collects the dead vectors but keeps referenced ones") {
     val url = fresh("purge")
     val v1 = mk(url, n = 80, files = 4)
-    val v2 = Snapshots.deleteWhereMor(spark, url, "id", 11L, 30L)
+    val v2 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 11L, 30L))
     val v3 = Snapshots.purgeDv(spark, url, clusterBy = Some("id"))
     assert(v3 == v2 + 1)
     val entries = Snapshots.snap(spark, url, v3).files
@@ -143,7 +143,7 @@ class MorDeleteSpec extends SparkSpec {
     // and a vector still referenced by a live version SURVIVES
     val url2 = fresh("purgekeep")
     mk(url2, n = 20, files = 2)
-    val k2 = Snapshots.deleteWhereMor(spark, url2, "id", 1L, 4L)
+    val k2 = Snapshots.deleteWhereMor(spark, url2, LongRange("id", 1L, 4L))
     Snapshots.vacuum(spark, url2, keepFrom = k2, graceMs = 0L)
     assert(Snapshots.read(spark, url2).count() == 16L)
   }
@@ -152,7 +152,7 @@ class MorDeleteSpec extends SparkSpec {
       "effective rows and fold vectors out of rewritten files") {
     val url = fresh("maint")
     mk(url, n = 50, files = 2)
-    Snapshots.deleteWhereMor(spark, url, "id", 1L, 10L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 1L, 10L))
     // clone: composite entries travel with both physical names
     val dst = fresh("maint_clone")
     Snapshots.cloneStore(spark, url, dst)
@@ -168,7 +168,7 @@ class MorDeleteSpec extends SparkSpec {
     // compactSmall on a (different) MoR store packs effective rows
     val url3 = fresh("maint_pack")
     mk(url3, n = 30, files = 3)
-    Snapshots.deleteWhereMor(spark, url3, "id", 5L, 8L)
+    Snapshots.deleteWhereMor(spark, url3, LongRange("id", 5L, 8L))
     val pv = Snapshots.compactSmall(spark, url3,
       smallBytes = 10L << 20, clusterBy = Some("id"))
     val packed = Snapshots.snap(spark, url3, pv).files
@@ -182,7 +182,7 @@ class MorDeleteSpec extends SparkSpec {
     val url = fresh("update")
     val v1 = mk(url, n = 60, files = 3)
     val physBefore = dataParts(url, v1)
-    val v2 = Snapshots.updateWhereMor(spark, url, "id", 10L, 14L,
+    val v2 = Snapshots.updateWhereMor(spark, url, LongRange("id", 10L, 14L),
       Map("body" -> lit("edited"), "grp" -> (col("grp") + 100)))
     assert(v2 == v1 + 1)
     // old data files survive untouched; ONE fresh file appends
@@ -210,15 +210,15 @@ class MorDeleteSpec extends SparkSpec {
     assert(feed.filter(col("_change").isin("insert", "delete"))
       .isEmpty)
     // no-match update: true no-op; wrong flavor refuses
-    assert(Snapshots.updateWhereMor(spark, url, "id", 900L, 999L,
+    assert(Snapshots.updateWhereMor(spark, url, LongRange("id", 900L, 999L),
       Map("body" -> lit("x"))) == v2)
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhereMorStr(spark, url, "id", "a", "b",
+      Snapshots.updateWhereMor(spark, url, StrRange("id", "a", "b"),
         Map("body" -> lit("x")))
     }
     // chained on the same file AFTER a MoR delete: both fold
-    val v3 = Snapshots.deleteWhereMor(spark, url, "id", 11L, 12L)
-    val v4 = Snapshots.updateWhereMor(spark, url, "id", 13L, 13L,
+    val v3 = Snapshots.deleteWhereMor(spark, url, LongRange("id", 11L, 12L))
+    val v4 = Snapshots.updateWhereMor(spark, url, LongRange("id", 13L, 13L),
       Map("body" -> lit("again")))
     assert(v4 == v3 + 1)
     val last = Snapshots.read(spark, url)
@@ -233,7 +233,7 @@ class MorDeleteSpec extends SparkSpec {
       "reader chain refuses a MoR store") {
     val url = fresh("loud")
     mk(url, n = 20, files = 1)
-    Snapshots.deleteWhereMor(spark, url, "id", 1L, 2L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 1L, 2L))
     val e = intercept[IllegalArgumentException] {
       GraftRead.reader(spark, url).load()
     }
@@ -243,9 +243,32 @@ class MorDeleteSpec extends SparkSpec {
     Snapshots.create(spark, url2,
       Seq((Some(1L), "a"), (None, "keep"), (Some(2L), "b"))
         .toDF("id", "body"), nFiles = 1)
-    Snapshots.deleteWhereMor(spark, url2, "id", 1L, 2L)
+    Snapshots.deleteWhereMor(spark, url2, LongRange("id", 1L, 2L))
     val left = Snapshots.read(spark, url2).select("body")
       .as[String].collect().toSeq
     assert(left == Seq("keep"))
+  }
+
+  test("indexBloom refreshes a store holding deletion vectors: the " +
+      "latest manifest's data files are bloomed, vectors are not") {
+    val url = fresh("bloomdv")
+    mk(url, n = 40, files = 2)
+    Snapshots.indexBloom(spark, url, Seq("id"))
+    val vDel = Snapshots.deleteWhereMor(spark, url, LongRange("id", 3L, 6L))
+    val vApp = Snapshots.append(spark, url,
+      (100L to 109L).map(i => (i, s"doc_$i", 1)).toDF("id", "body", "grp"),
+      nFiles = 1)
+    Snapshots.indexBloom(spark, url, Seq("id"))
+    val (admitted, covered) = RowGroupIndex.bloomProbe(spark, url,
+      Snapshots.bloomSidecarUrl(spark, url), "id", Seq(105L))
+    val live = dataParts(url, vApp).toSet
+    assert(live.subsetOf(covered), s"uncovered: ${live -- covered}")
+    assert(!covered.exists(_.startsWith("dv")),
+      s"a deletion vector was bloomed as data: $covered")
+    val appended = live -- dataParts(url, vDel)
+    assert(appended.size == 1 && admitted.map(f =>
+      new org.apache.hadoop.fs.Path(f).getName).toSet.subsetOf(live) &&
+      admitted.exists(f => appended(new org.apache.hadoop.fs.Path(f)
+        .getName)), s"probe missed the appended keys: $admitted")
   }
 }

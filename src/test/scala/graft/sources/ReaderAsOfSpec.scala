@@ -113,6 +113,40 @@ class ReaderAsOfSpec extends SparkSpec {
     assert(both.agg(sum("v")).as[Long].head() == (5L to 7L).sum)
   }
 
+  test("reader.range() on a DATE column prunes by day bands and " +
+      "filters in the same epoch-day domain, covered or not") {
+    val url = scratch(
+      s"rd_range_date/${java.util.UUID.randomUUID().toString.take(8)}")
+    val day0 = java.time.LocalDate.of(2020, 1, 1)
+    val rows = (0L until 120L).map(i => (i, day0.plusDays(i)))
+      .toDF("id", "day")
+    Snapshots.create(spark, url, rows, nFiles = 6,
+      clusterBy = Some("day"))
+    Snapshots.indexStats(spark, url, Seq("day"))
+    val total = Snapshots.snap(spark, url,
+      Snapshots.latest(spark, url)).files.size
+    val lo = day0.toEpochDay + 10; val hi = day0.toEpochDay + 29
+    val df = GraftRead.reader(spark, url).range("day", lo, hi).load()
+    val scanned = df.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.inputFiles.length
+    }.sum
+    assert(scanned < total, s"scanned $scanned of $total files")
+    assert(df.agg(count(lit(1)), sum("id")).as[(Long, Long)].head() ==
+      ((20L, (10L to 29L).sum)))
+    // a file the sidecar has not covered is read and filtered by the
+    // residual alone
+    Snapshots.append(spark, url,
+      Seq((500L, day0.plusDays(15)), (501L, day0.plusDays(90)))
+        .toDF("id", "day"), nFiles = 1)
+    val stale = GraftRead.reader(spark, url).range("day", lo, hi)
+      .load().select("id").as[Long].collect().toSet
+    assert(stale == ((10L to 29L).toSet + 500L))
+    // the store API reads the same band domain
+    assert(Snapshots.readWhere(spark, url,
+      Seq(LongRange("day", lo, hi)), -1).count() == 21L)
+  }
+
   test("versionAt/readAsOfTime resolve timestamp time travel from " +
       "manifest mtimes; pruneStats drops sidecar rows vacuum " +
       "orphaned") {

@@ -88,7 +88,7 @@ class SidecarDeltaSpec extends SparkSpec {
       .map(_.toSeq).toSet
     assert(viaDelta == rebuilt)
     // and a banded read over the delta-layout sidecar stays exact
-    assert(Snapshots.countWhere(spark, url, "id", 0L, 50L)._1 ==
+    assert(Snapshots.countWhere(spark, url, LongRange("id", 0L, 50L))._1 ==
       Snapshots.read(spark, url)
         .filter(col("id") >= 0L && col("id") <= 50L).count())
   }

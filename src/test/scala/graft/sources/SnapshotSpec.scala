@@ -323,8 +323,8 @@ class SnapshotSpec extends SparkSpec {
     }
   }
 
-  test("zcluster + prunedFilesAll: a z-ordered store prunes on " +
-      "EITHER dimension; the 1-D layout cannot") {
+  test("zcluster + multi-range prunedFiles: a z-ordered store " +
+      "prunes on EITHER dimension; the 1-D layout cannot") {
     val url = freshUrl("zorder")
     // 4096-point uniform grid: x, y in [0, 64)
     val grid = (0L until 4096L)
@@ -336,8 +336,8 @@ class SnapshotSpec extends SparkSpec {
     val zV = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, zV).files.size
     // a narrow rectangle prunes on both dims under z-order
-    val keptZ = Snapshots.prunedFilesAll(spark, url, zV,
-      Seq(("x", 0L, 15L), ("y", 0L, 15L))).size
+    val keptZ = Snapshots.prunedFiles(spark, url, zV,
+      Seq(LongRange("x", 0L, 15L), LongRange("y", 0L, 15L))).size
     assert(keptZ < total, s"z-order kept $keptZ/$total")
     // the 1-D x-clustered version prunes on x but NOT on y
     val kept1dY = Snapshots.prunedFiles(spark, url, zV - 1, "y",
@@ -345,8 +345,8 @@ class SnapshotSpec extends SparkSpec {
     assert(kept1dY == Snapshots.snap(spark, url, zV - 1).files.size,
       "x-clustered files should all span the full y range")
     // and the read is exact
-    val got = Snapshots.readWhereAll(spark, url,
-      Seq(("x", 0L, 15L), ("y", 0L, 15L)))
+    val got = Snapshots.readWhere(spark, url,
+      Seq(LongRange("x", 0L, 15L), LongRange("y", 0L, 15L)), -1)
       .agg(count(lit(1))).as[Long].head()
     assert(got == 16L * 16L)
   }

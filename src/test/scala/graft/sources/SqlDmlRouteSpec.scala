@@ -29,15 +29,15 @@ class SqlDmlRouteSpec extends SparkSpec {
   test("BandRoute.ofFilters: long shapes, combination, fallbacks") {
     def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
     assert(go(f.EqualTo("k", 7)) ==
-      Some(BandRoute.LongRange("k", 7, 7)))
+      Some(LongRange("k", 7, 7)))
     assert(go(f.GreaterThanOrEqual("k", 5), f.LessThan("k", 9)) ==
-      Some(BandRoute.LongRange("k", 5, 8)))
+      Some(LongRange("k", 5, 8)))
     // strict bounds tighten by ±1; IsNotNull absorbed
     assert(go(f.GreaterThan("k", 5), f.IsNotNull("k")) ==
-      Some(BandRoute.LongRange("k", 6, Long.MaxValue)))
+      Some(LongRange("k", 6, Long.MaxValue)))
     // one-sided upper
     assert(go(f.LessThanOrEqual("k", 3)) ==
-      Some(BandRoute.LongRange("k", Long.MinValue, 3)))
+      Some(LongRange("k", Long.MinValue, 3)))
     // overflow-adjacent strict bound refuses
     assert(go(f.GreaterThan("k", Long.MaxValue)).isEmpty)
     // two different fields refuse
@@ -53,13 +53,13 @@ class SqlDmlRouteSpec extends SparkSpec {
   test("BandRoute.ofFilters: string shapes") {
     def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
     assert(go(f.EqualTo("s", "m")) ==
-      Some(BandRoute.StrRange("s", "m", "m")))
+      Some(StrRange("s", "m", "m")))
     assert(go(f.GreaterThanOrEqual("s", "b"),
         f.LessThanOrEqual("s", "d")) ==
-      Some(BandRoute.StrRange("s", "b", "d")))
+      Some(StrRange("s", "b", "d")))
     // strict lower bound = binary-order successor
     assert(go(f.GreaterThan("s", "b"), f.LessThanOrEqual("s", "d")) ==
-      Some(BandRoute.StrRange("s", "b\u0000", "d")))
+      Some(StrRange("s", "b\u0000", "d")))
     // no upper bound → not expressible as an inclusive band
     assert(go(f.GreaterThanOrEqual("s", "b")).isEmpty)
     // strict upper bound has no predecessor
@@ -588,7 +588,7 @@ class SqlDmlRouteSpec extends SparkSpec {
       (1L to 40L).map(i =>
         (i, if (i % 10 == 0) None else Some(i * 3)))
         .toDF("id", "v"), nFiles = 3)
-    Snapshots.deleteWhereMor(spark, url, "id", 5L, 14L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 5L, 14L))
     val n = spark.sql("SELECT count(*) AS n FROM gdml.cnt")
     assert(n.queryExecution.executedPlan.toString
       .contains("LocalTableScan"),
@@ -622,7 +622,7 @@ class SqlDmlRouteSpec extends SparkSpec {
       (1L to 80L).map(i => (i, i * 3, s"t${i % 7}"))
         .toDF("k", "v", "tag"), nFiles = 4, clusterBy = Some("k"))
     Snapshots.indexStats(spark, url, Seq("k", "tag"))
-    Snapshots.deleteWhereMor(spark, url, "k", 11L, 14L) // MoR holes
+    Snapshots.deleteWhereMor(spark, url, LongRange("k", 11L, 14L)) // MoR holes
     def planOf(sql: String) =
       spark.sql(sql).queryExecution.executedPlan.toString
     def run(sql: String): Long = spark.sql(sql).as[Long].head()
@@ -695,7 +695,7 @@ class SqlDmlRouteSpec extends SparkSpec {
     // a per-ENTRY exact row for the rewritten composite entry only
     // after a refresh — unrefreshed coverage fails loudly into the
     // scan, a refreshed one prices the new extremum
-    Snapshots.deleteWhereMor(spark, url, "id", 50L, 60L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 50L, 60L))
     val afterMor = spark.sql(
       "SELECT max(id) AS hi FROM gdml.mm")
     assert(!afterMor.queryExecution.optimizedPlan.toString

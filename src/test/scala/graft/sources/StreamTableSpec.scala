@@ -106,7 +106,7 @@ class StreamTableSpec extends SparkSpec {
     Snapshots.create(spark, url,
       (1L to 40L).map(i => (i, i * 3, s"p$i")).toDF("id", "v", "pay"),
       nFiles = 2, clusterBy = Some("id"))
-    Snapshots.deleteWhereMor(spark, url, "id", 10L, 15L) // v2: DVs
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 10L, 15L)) // v2: DVs
     Snapshots.renameColumn(spark, url, "v", "val")       // v3: colmap
     val outDir = scratch(
       s"strmtbl_out3/${java.util.UUID.randomUUID().toString.take(8)}")

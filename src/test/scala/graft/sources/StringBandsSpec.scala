@@ -27,8 +27,8 @@ class StringBandsSpec extends SparkSpec {
     }
   }
 
-  test("string bands prune a name-clustered store; readWhereStr " +
-      "stays exact; cross-type probes fail loudly") {
+  test("string bands prune a name-clustered store; a StrRange " +
+      "readWhere stays exact; cross-type probes fail loudly") {
     val url = fresh("prune")
     val names = ('a' to 'z').flatMap(c =>
       (1 to 20).map(i => (f"${c}name_$i%02d", i.toLong)))
@@ -37,18 +37,19 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, url, Seq("name"))
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
-    val pruned = Snapshots.prunedFilesStr(spark, url, v, "name",
-      "c", "d")
+    val pruned = Snapshots.prunedFiles(spark, url, v, Seq(StrRange("name",
+      "c", "d")))
     assert(pruned.size < total,
       s"expected string-band pruning (kept ${pruned.size}/$total)")
-    val got = Snapshots.readWhereStr(spark, url, "name", "c", "d")
+    val got = Snapshots.readWhere(spark, url,
+      Seq(StrRange("name", "c", "d")), -1)
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((20L, (1L to 20L).sum)))
     // no-hit range skips every file but the read is still exact
-    assert(Snapshots.prunedFilesStr(spark, url, v, "name",
-      "zzz", "zzzz").isEmpty)
-    assert(Snapshots.readWhereStr(spark, url, "name",
-      "zzz", "zzzz").count() == 0L)
+    assert(Snapshots.prunedFiles(spark, url, v, Seq(StrRange("name",
+      "zzz", "zzzz"))).isEmpty)
+    assert(Snapshots.readWhere(spark, url, Seq(StrRange("name",
+      "zzz", "zzzz")), -1).count() == 0L)
     // a numeric-range probe on a STRING-banded field is a type
     // confusion, not an empty read
     intercept[IllegalArgumentException] {
@@ -60,8 +61,8 @@ class StringBandsSpec extends SparkSpec {
       (1L to 50L).map(i => (i, i)).toDF("id", "x"), nFiles = 2)
     Snapshots.indexStats(spark, url2, Seq("x"))
     intercept[IllegalArgumentException] {
-      Snapshots.prunedFilesStr(spark, url2,
-        Snapshots.latest(spark, url2), "x", "a", "b")
+      Snapshots.prunedFiles(spark, url2,
+        Snapshots.latest(spark, url2), Seq(StrRange("x", "a", "b")))
     }
   }
 
@@ -79,10 +80,10 @@ class StringBandsSpec extends SparkSpec {
     // so every clustered file must survive (no false skip)...
     val lo = f"${pad}050"; val hi = f"${pad}060"
     val clustered = Snapshots.snap(spark, url, v).files.size
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k", lo, hi)
+    assert(Snapshots.prunedFiles(spark, url, v, Seq(StrRange("k", lo, hi)))
       .nonEmpty)
     // ...and the residual filter keeps the answer exact
-    val got = Snapshots.readWhereStr(spark, url, "k", lo, hi)
+    val got = Snapshots.readWhere(spark, url, Seq(StrRange("k", lo, hi)), -1)
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((11L, (50L to 60L).sum)))
     assert(clustered >= 4)
@@ -98,12 +99,12 @@ class StringBandsSpec extends SparkSpec {
     val v = Snapshots.latest(spark, url)
     // upper bound is unbounded → the file survives any probe above
     // its minimum; the residual keeps the read exact (empty here)
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k",
-      "zzz", "zzzz").nonEmpty)
-    assert(Snapshots.readWhereStr(spark, url, "k", "zzz", "zzzz")
-      .count() == 0L)
+    assert(Snapshots.prunedFiles(spark, url, v, Seq(StrRange("k",
+      "zzz", "zzzz"))).nonEmpty)
+    assert(Snapshots.readWhere(spark, url,
+      Seq(StrRange("k", "zzz", "zzzz")), -1).count() == 0L)
     // a probe that does hit still reads its row
-    assert(Snapshots.readWhereStr(spark, url, "k", weird, weird)
+    assert(Snapshots.readWhere(spark, url, Seq(StrRange("k", weird, weird)), -1)
       .count() == 1L)
   }
 
@@ -127,7 +128,7 @@ class StringBandsSpec extends SparkSpec {
       Nil).isEmpty)
   }
 
-  test("readWhereMixed: long + string ranges conjoin with one " +
+  test("readWhere: long + string ranges conjoin with one " +
       "sidecar read, prune, and stay exact") {
     val url = fresh("mixed")
     val rows = ('a' to 'j').flatMap(c =>
@@ -137,16 +138,16 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, url, Seq("name", "v"))
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
-    val files = Snapshots.prunedFilesMixed(spark, url, v,
-      Seq(("v", 5L, 7L)), Seq(("name", "c", "d")))
+    val files = Snapshots.prunedFiles(spark, url, v,
+      Seq(LongRange("v", 5L, 7L), StrRange("name", "c", "d")))
     assert(files.nonEmpty && files.size < total)
-    val got = Snapshots.readWhereMixed(spark, url,
-      Seq(("v", 5L, 7L)), Seq(("name", "c", "d")))
+    val got = Snapshots.readWhere(spark, url,
+      Seq(LongRange("v", 5L, 7L), StrRange("name", "c", "d")), -1)
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((3L, 5L + 6L + 7L)))
     // a string range alone through the mixed API
-    assert(Snapshots.readWhereMixed(spark, url, Nil,
-      Seq(("name", "a", "b"))).count() == 30L)
+    assert(Snapshots.readWhere(spark, url,
+      Seq(StrRange("name", "a", "b")), -1).count() == 30L)
   }
 
   test("deleteWhere: copy-on-write range delete rewrites only the " +
@@ -188,7 +189,7 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val sv0 = Snapshots.latest(spark, surl)
     val sBefore = Snapshots.snap(spark, surl, sv0).files.toSet
-    Snapshots.deleteWhereStr(spark, surl, "k", "c", "d")
+    Snapshots.deleteWhere(spark, surl, StrRange("k", "c", "d"))
     val sAfter = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
     assert((sBefore intersect sAfter).nonEmpty)
@@ -211,7 +212,7 @@ class StringBandsSpec extends SparkSpec {
     val v0 = Snapshots.latest(spark, url)
     val before = Snapshots.snap(spark, url, v0).files.toSet
     // replacement sees the row's CURRENT values: increment + retag
-    val v1 = Snapshots.updateWhere(spark, url, "x", 100L, 200L,
+    val v1 = Snapshots.updateWhere(spark, url, LongRange("x", 100L, 200L),
       Map("x" -> (col("x") + 1000L), "tag" -> lit("touched")))
     assert(v1 == v0 + 1)
     val after = Snapshots.snap(spark, url, v1).files.toSet
@@ -234,24 +235,24 @@ class StringBandsSpec extends SparkSpec {
     assert(feed.filter(col("_change") === "update" &&
       col("tag") === "touched").count() == hit.toLong)
     // a no-match range is a true no-op: same version back
-    assert(Snapshots.updateWhere(spark, url, "x", 9000L, 9999L,
+    assert(Snapshots.updateWhere(spark, url, LongRange("x", 9000L, 9999L),
       Map("tag" -> lit("zz"))) == v1)
     // loud gates: wrong result type, unknown column, wrong flavor
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhere(spark, url, "x", 1L, 2L,
+      Snapshots.updateWhere(spark, url, LongRange("x", 1L, 2L),
         Map("x" -> lit("oops")))
     }
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhere(spark, url, "x", 1L, 2L,
+      Snapshots.updateWhere(spark, url, LongRange("x", 1L, 2L),
         Map("nope" -> lit(1L)))
     }
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhereStr(spark, url, "x", "a", "b",
+      Snapshots.updateWhere(spark, url, StrRange("x", "a", "b"),
         Map("tag" -> lit("s")))
     }
     // a CHECK-violating update is refused with nothing committed
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhere(spark, url, "x", 1L, 50L,
+      Snapshots.updateWhere(spark, url, LongRange("x", 1L, 50L),
         Map("tag" -> lit("")))
     }
     assert(Snapshots.latest(spark, url) == v1)
@@ -264,7 +265,7 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val sBefore = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
-    Snapshots.updateWhereStr(spark, surl, "k", "c", "d",
+    Snapshots.updateWhere(spark, surl, StrRange("k", "c", "d"),
       Map("v" -> (col("v") * -1L)))
     val sAfter = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
@@ -301,7 +302,7 @@ class StringBandsSpec extends SparkSpec {
     assert(Snapshots.read(spark, url).count() == 249L)
     // and the string flavor refuses the time column loudly
     intercept[IllegalArgumentException] {
-      Snapshots.deleteWhereStr(spark, url, "event_ts", "a", "b")
+      Snapshots.deleteWhere(spark, url, StrRange("event_ts", "a", "b"))
     }
   }
 
@@ -353,12 +354,12 @@ class StringBandsSpec extends SparkSpec {
     val total = Snapshots.snap(spark, url, v).files.size
     assert(total == 2)
     // the all-null file cannot hold any string value → skipped
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k", "a", "c")
+    assert(Snapshots.prunedFiles(spark, url, v, Seq(StrRange("k", "a", "c")))
       .size == 1)
     // while the long side prunes independently on the same sidecar
     assert(Snapshots.prunedFiles(spark, url, v, "id", 3L, 4L)
       .size == 1)
-    val got = Snapshots.readWhereStr(spark, url, "k", "a", "c")
+    val got = Snapshots.readWhere(spark, url, Seq(StrRange("k", "a", "c")), -1)
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == Seq(1L, 2L))
   }

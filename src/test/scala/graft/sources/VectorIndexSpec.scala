@@ -95,7 +95,7 @@ class VectorIndexSpec extends SparkSpec {
     // MoR delete: the deleted vector disappears from results EVEN
     // BEFORE a refresh (stale postings admit the entry, the
     // effective read drops the row)
-    Snapshots.deleteWhereMor(spark, url, "vec_id", 103L, 103L)
+    Snapshots.deleteWhereMor(spark, url, LongRange("vec_id", 103L, 103L))
     val after = VectorIndex.search(spark, url, "vec_id", "embedding",
       q, topK = 5, nprobe = 4).select("id").as[Long].collect().toSeq
     assert(after == brute((1L to 120L).filterNot(_ == 103L), 5),
