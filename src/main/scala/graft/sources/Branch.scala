@@ -43,10 +43,10 @@ object Branch {
     // BEFORE any work: refusing after the clone would leave an
     // unrecoverable half-made branch (store exists, no provenance)
     require(!srcUrl.contains("\""), s"branch source url carries '\"'")
-    val v = if (version < 0) Snapshots.latest(spark, srcUrl)
-            else version
-    val root = new Path(branchUrl)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val srcTx = StoreTxn.open(spark, srcUrl)
+    val v = if (version < 0) srcTx.head.version else version
+    val branchTx = StoreTxn.open(spark, branchUrl)
+    val (fs, root) = (branchTx.fs, branchTx.root)
     def writeMeta(): Unit = {
       val out = fs.create(metaPath(root), false)
       try out.write(
@@ -59,12 +59,10 @@ object Branch {
     // fork iff the half-made clone PROVABLY matches this call's fork
     // point (same head version, same manifest entry set); anything
     // else refuses with the recovery instruction.
-    if (Snapshots.versions(spark, branchUrl).nonEmpty &&
-        !fs.exists(metaPath(root))) {
-      val bl = Snapshots.latest(spark, branchUrl)
-      require(bl == v &&
-        Snapshots.snap(spark, branchUrl, bl).files.toSet ==
-          Snapshots.snap(spark, srcUrl, v).files.toSet,
+    if (branchTx.versions.nonEmpty && !fs.exists(metaPath(root))) {
+      val bl = branchTx.head
+      require(bl.version == v &&
+        bl.files.toSet == srcTx.at(v).files.toSet,
         s"$branchUrl exists without fork provenance and does not " +
           s"match $srcUrl@v$v — delete the directory and re-run fork")
       writeMeta()
@@ -98,11 +96,14 @@ object Branch {
     * changed key, `_change` ∈ insert/update/delete) — manifest-diff
     * priced, O(files the branch touched). */
   def delta(spark: SparkSession, branchUrl: String,
-      keyCol: String): DataFrame = {
-    val bLatest = Snapshots.latest(spark, branchUrl)
-    require(bLatest > 1, s"branch $branchUrl has no commits past " +
+      keyCol: String): DataFrame =
+    delta(StoreTxn.open(spark, branchUrl), keyCol)
+
+  private def delta(branch: StoreTxn, keyCol: String): DataFrame = {
+    val bLatest = branch.head.version
+    require(bLatest > 1, s"branch ${branch.url} has no commits past " +
       "its fork — nothing to merge")
-    Snapshots.changes(spark, branchUrl, keyCol, 1, bLatest)
+    Snapshots.changes(branch, keyCol, 1, bLatest, includeOld = false)
   }
 
   /** Merge a branch's net delta back into its fork source as ONE
@@ -117,15 +118,16 @@ object Branch {
   def mergeBack(spark: SparkSession, branchUrl: String,
       keyCol: String, maxKeys: Int = 1000000): Int = {
     val (src, forkV) = forkPoint(spark, branchUrl)
-    val bLatest = Snapshots.latest(spark, branchUrl)
-    if (bLatest == 1) return Snapshots.latest(spark, src)
+    val branch = StoreTxn.open(spark, branchUrl)
+    if (branch.head.version == 1) return Snapshots.latest(spark, src)
     // the delta feed is consumed twice (conflict intersect, then the
     // merge upsert) and each leg is a manifest-diff join plan —
     // persist so the second consumer reads the computed rows
-    val feed = delta(spark, branchUrl, keyCol).persist(
+    val feed = delta(branch, keyCol).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val mLatest = Snapshots.latest(spark, src)
+      val main = StoreTxn.open(spark, src)
+      val mLatest = main.head.version
       require(mLatest >= forkV,
         s"source $src is at v$mLatest, below the fork point v$forkV " +
           "— its history was vacuumed or rebuilt; re-fork")
@@ -133,7 +135,7 @@ object Branch {
         // main moved since the fork: any key changed on both sides is
         // a conflict. Both key sets are manifest-diff priced.
         val mainKeys = Snapshots
-          .changes(spark, src, keyCol, forkV, mLatest)
+          .changes(main, keyCol, forkV, mLatest, includeOld = false)
           .select(col(keyCol))
         val conflicts = feed.select(col(keyCol))
           .intersect(mainKeys).limit(11)
@@ -200,16 +202,17 @@ object Branch {
       maxKeys: Int = 1000000,
       strategy: RebaseStrategy = RebaseTheirs): (Int, Seq[Any]) = {
     val (src, forkV) = forkPoint(spark, branchUrl)
-    val bLatest = Snapshots.latest(spark, branchUrl)
-    require(bLatest > 1, s"branch $branchUrl has no commits past " +
-      "its fork — nothing to rebase")
+    val branch = StoreTxn.open(spark, branchUrl)
+    require(branch.head.version > 1, s"branch $branchUrl has no " +
+      "commits past its fork — nothing to rebase")
     // consumed by the conflict intersect, the clean anti-join, the
     // resolver's `ours` semi-join, and the replay upsert — persist
     // once (manifest-diff join plan, bounded by the branch's delta)
-    val feed = delta(spark, branchUrl, keyCol).persist(
+    val feed = delta(branch, keyCol).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val mLatest = Snapshots.latest(spark, src)
+    val main = StoreTxn.open(spark, src)
+    val mLatest = main.head.version
     require(mLatest >= forkV,
       s"source $src is at v$mLatest, below the fork point v$forkV " +
         "— its history was vacuumed or rebuilt")
@@ -217,8 +220,8 @@ object Branch {
       if (mLatest == forkV) Nil
       else {
         val rows = feed.select(col(keyCol)).intersect(
-            Snapshots.changes(spark, src, keyCol, forkV, mLatest)
-              .select(col(keyCol)))
+            Snapshots.changes(main, keyCol, forkV, mLatest,
+              includeOld = false).select(col(keyCol)))
           .limit(maxKeys + 1).collect()
         require(rows.length <= maxKeys,
           s"rebase: more than maxKeys=$maxKeys conflicting keys — " +

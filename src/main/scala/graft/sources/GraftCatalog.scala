@@ -113,24 +113,22 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
 
   private def tableAt(ident: Identifier, version: Int): Table = {
     val url = urlOf(ident)
-    val vs = Snapshots.versions(spark, url)
-    if (vs.isEmpty)
+    val tx = StoreTxn.open(spark, url)
+    if (tx.versions.isEmpty)
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchTableException(Seq(catName, ident.name))
-    val v = if (version > 0) version else vs.last
-    val s = Snapshots.snap(spark, url, v)
+    val s = tx.resolve(version)
+    val v = s.version
     val label = s"$catName.${ident.name}@v$v"
     val needsEff = s.colmap.nonEmpty ||
       s.files.exists(_.contains(Snapshots.DvSep))
-    val root = new Path(url)
     // the pinned schema IS the logical schema (colmap maps logical →
     // physical underneath); pre-pinning legacy stores are plain by
     // construction (rename/MoR require a pinned schema)
     val schema = s.schema.getOrElse {
       require(s.files.nonEmpty, s"$label has no schema source")
       require(!needsEff, s"$label has no pinned schema")
-      spark.read.parquet(
-        s.files.map(f => new Path(root, f).toString): _*).schema
+      spark.read.parquet(s.files.map(tx.path): _*).schema
     }
     // the effective scan's flavor is decided by the session: with
     // GraftExtensions installed the optimizer inlines the native
@@ -150,7 +148,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     if (needsEff)
       new GraftEffSqlTable(label, url, v, schema, props, writable)
     else {
-      val paths = s.files.map(f => new Path(root, f).toString)
+      val paths = s.files.map(tx.path)
       new GraftSqlTable(label, url,
         ParquetTable(s"$catName.${ident.name}", spark,
           CaseInsensitiveStringMap.empty(), paths, Some(schema),
@@ -320,11 +318,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * decision, not a SQL statement. */
   override def dropTable(ident: Identifier): Boolean = {
     val url = urlOf(ident)
-    val vs = Snapshots.versions(spark, url)
-    if (vs.isEmpty) return false
-    require(vs == Seq(1) &&
-      Snapshots.snap(spark, url, 1).op == "create" &&
-      Snapshots.read(spark, url).isEmpty,
+    val tx = StoreTxn.open(spark, url)
+    if (tx.versions.isEmpty) return false
+    require(tx.versions == Seq(1) && tx.head.op == "create" &&
+      Snapshots.readAsOf(tx, tx.head).isEmpty,
       s"DROP TABLE only removes an empty just-created store — " +
         s"$catName.${ident.name} has history; delete the directory " +
         "explicitly if that is really intended")
@@ -431,11 +428,10 @@ private[sources] trait GraftSqlWrites
     // retention-sweep shape at 100 TB. Everything else (or an
     // uncovered field, where the banded flavors would must-read
     // every file) keeps the exact general-predicate path.
-    BandRoute.ofFilters(Snapshots.headSchema(spark, storeUrl),
-        filters.toIndexedSeq) match {
-      case Some(r)
-          if Snapshots.statsCovers(spark, storeUrl, r.field) =>
-        Snapshots.deleteWhere(spark, storeUrl, r): Unit
+    val tx = StoreTxn.open(spark, storeUrl)
+    BandRoute.ofFilters(tx.schema, filters.toIndexedSeq) match {
+      case Some(r) if Snapshots.statsCovers(tx, r.field) =>
+        Snapshots.deleteWhere(tx, r): Unit
       case _ =>
         val cond = filters.map(f =>
           GraftCatalog.translate(f).getOrElse(
@@ -443,7 +439,7 @@ private[sources] trait GraftSqlWrites
               s"DELETE predicate $f is not translatable — use " +
                 "Snapshots.deleteWhereCond")))
           .reduceOption(_ && _).getOrElse(lit(true))
-        Snapshots.deleteWhereCond(spark, storeUrl, cond): Unit
+        Snapshots.deleteWhereCond(tx, cond): Unit
     }
   }
 }
@@ -754,13 +750,11 @@ private[sources] class GraftEffRelation(ctx: SQLContext, url: String,
     * mild over-estimate (DV-deleted rows still count): broadcast
     * decisions only get MORE conservative. */
   override lazy val sizeInBytes: Long = {
-    val root = new Path(url)
-    val fs = root.getFileSystem(
-      ctx.sparkSession.sessionState.newHadoopConf())
+    val tx = StoreTxn.open(ctx.sparkSession, url)
     // one listing, not one RPC per file
-    val lenByName = fs.listStatus(root).iterator.filter(_.isFile)
+    val lenByName = tx.fs.listStatus(tx.root).iterator.filter(_.isFile)
       .map(st => st.getPath.getName -> st.getLen).toMap
-    Snapshots.snap(ctx.sparkSession, url, version).files
+    tx.at(version).files
       .map(f => lenByName.getOrElse(
         Snapshots.splitEntry(f)._1, 0L)).sum
   }

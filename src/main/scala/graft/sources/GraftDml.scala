@@ -235,13 +235,14 @@ case class GraftUpdateCommand(url: String,
     // general path's exact containment attribution. Assignment
     // semantics stay identical: [[Snapshots.upcastSets]] applies
     // the same safe-upcast probe updateWhereCond runs internally.
+    val tx = StoreTxn.open(session, url)
     val v = cond.flatMap(BandRoute.ofExpr(_)) match {
-      case Some(r) if Snapshots.statsCovers(session, url, r.field) =>
-        Snapshots.updateWhere(session, url, r, Snapshots.upcastSets(
-          session, Snapshots.headSchema(session, url), setCols))
+      case Some(r) if Snapshots.statsCovers(tx, r.field) =>
+        Snapshots.updateWhere(tx, r,
+          Snapshots.upcastSets(session, tx.schema, setCols))
       case _ =>
         val condCol = cond.map(rebind).getOrElse(lit(true))
-        Snapshots.updateWhereCond(session, url, condCol, setCols)
+        Snapshots.updateWhereCond(tx, condCol, setCols)
     }
     Seq(Row(v.toLong))
   }
@@ -273,7 +274,8 @@ case class GraftMergeCommand(url: String, keyCol: String,
     // (stageUpsert's coverage guard conservatively rewrites
     // uncovered files; no sidecar means the full rewrite as
     // before).
-    val bloom = Snapshots.discoverBloom(session, url, keyCol)
+    val tx = StoreTxn.open(session, url)
+    val bloom = Snapshots.discoverBloom(tx, keyCol)
     val v =
       if (delete) {
         // tombstone the source's keys with NO store read at all: a
@@ -284,7 +286,7 @@ case class GraftMergeCommand(url: String, keyCol: String,
         // no-op inside the rewrite (they anti-join nothing) — with
         // the discovered bloom, a 2-key MERGE-DELETE touches the
         // files that can hold those keys, never the corpus.
-        val schema = Snapshots.headSchema(session, url)
+        val schema = tx.schema
         // a NULL source key is UNMATCHED under SQL join semantics —
         // a no-op for MERGE-DELETE, not a member of the delete batch
         // (the store's upsert contract would loudly refuse it)
@@ -296,7 +298,7 @@ case class GraftMergeCommand(url: String, keyCol: String,
         // match (limit 1) — strictly cheaper than the prior full
         // semi-join materialization, and the rewrite itself stays
         // bloom-pruned.
-        val anyMatch = Snapshots.read(session, url)
+        val anyMatch = Snapshots.readAsOf(tx, tx.head)
           .join(org.apache.spark.sql.functions.broadcast(keys),
             Seq(keyCol), "left_semi")
           .limit(1).count() > 0
@@ -304,14 +306,14 @@ case class GraftMergeCommand(url: String, keyCol: String,
           if (f == keyCol) col(keyCol)
           else lit(null).cast(schema(f).dataType).as(f)
         }: _*).withColumn("__merge_del", lit(true))
-        if (!anyMatch) Snapshots.latest(session, url)
-        else Snapshots.upsert(session, url, updates, keyCol,
-          deleteCol = Some("__merge_del"), bloomIndexUrl = bloom)
+        if (!anyMatch) tx.head.version
+        else Snapshots.upsert(tx, updates, keyCol, Some("__merge_del"),
+          bloom, maxKeys = 1000000, expectedParentVersion = -1)
       } else {
         val updates = src.select(outCols.map { case (n, e) =>
           graft.functions.GraftFunctions.column(e).as(n) }: _*)
-        Snapshots.upsert(session, url, updates, keyCol,
-          bloomIndexUrl = bloom)
+        Snapshots.upsert(tx, updates, keyCol, None, bloom,
+          maxKeys = 1000000, expectedParentVersion = -1)
       }
     Seq(Row(v.toLong))
   }
@@ -391,11 +393,12 @@ case class GraftMergeMatrixCommand(url: String, keyCol: String,
     // analyzed separately, unioned by name: the analyzer's relation
     // dedup handles target/source appearing in several branches
     val batch = frames.reduce(_.unionByName(_))
-    val bloom = Snapshots.discoverBloom(session, url, keyCol)
+    val tx = StoreTxn.open(session, url)
+    val bloom = Snapshots.discoverBloom(tx, keyCol)
     val v =
-      if (batch.isEmpty) Snapshots.latest(session, url)
-      else Snapshots.upsert(session, url, batch, keyCol,
-        deleteCol = Some("__merge_del"), bloomIndexUrl = bloom)
+      if (batch.isEmpty) tx.head.version
+      else Snapshots.upsert(tx, batch, keyCol, Some("__merge_del"),
+        bloom, maxKeys = 1000000, expectedParentVersion = -1)
     Seq(Row(v.toLong))
   }
 }

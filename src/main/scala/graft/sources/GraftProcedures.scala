@@ -133,15 +133,14 @@ private[sources] object GraftProcedures {
         "has_vecindex" -> BooleanType, "colmap" -> StringType),
       (s, root, args) => {
         val url = new Path(root, args.head.toString).toString
-        val vs = Snapshots.versions(s, url)
-        require(vs.nonEmpty, s"no snapshot store at $url")
-        val head = Snapshots.snap(s, url, vs.max)
-        val p = new Path(url)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val tx = StoreTxn.open(s, url)
+        val head = tx.head
+        val (fs, p) = (tx.fs, tx.root)
         val bytes = head.files.map(f => fs.getFileStatus(
           new Path(p, Snapshots.splitEntry(f)._1)).getLen).sum
-        Seq(Seq(vs.max.toLong, head.op, head.files.size.toLong,
-          bytes, Snapshots.rowCountMeta(s, url), vs.size.toLong,
+        Seq(Seq(head.version.toLong, head.op, head.files.size.toLong,
+          bytes, Snapshots.rowCountMeta(s, url, head.version),
+          tx.versions.size.toLong,
           fs.exists(new Path(new Path(p, "_stats"), "filestats")),
           fs.exists(new Path(new Path(p, "_bloom"), "keybloom")),
           fs.exists(new Path(p, "_vecindex")),

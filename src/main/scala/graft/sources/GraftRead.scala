@@ -165,12 +165,14 @@ final case class GraftRead private (
     //    versions alongside live rows.
     require(asOfVersion.isEmpty || urls.length == 1,
       "asOf() is single-store: versions are per-store")
-    val allFiles = urls.flatMap { u =>
-      val versions = Snapshots.versions(spark, u)
-      if (versions.nonEmpty) {
-        val v = asOfVersion.getOrElse(versions.last)
-        val root = new org.apache.hadoop.fs.Path(u)
-        val snapV = Snapshots.snap(spark, u, v)
+    // one handle per store: the listing below and the range
+    // admission further down resolve the same version
+    val txs = urls.map(StoreTxn.open(spark, _))
+    val allFiles = txs.flatMap { tx =>
+      val u = tx.url
+      if (tx.versions.nonEmpty) {
+        val snapV = asOfVersion.fold(tx.head)(tx.at)
+        val v = snapV.version
         // the reader chain scans raw files; a renamed store's
         // physical names would surface — refuse loudly rather than
         // serve wrong column names (Snapshots.read translates)
@@ -194,7 +196,7 @@ final case class GraftRead private (
           s"$u@v$v carries merge-on-read deletion vectors — read " +
             "via Snapshots.read/readWhere or run Snapshots.purgeDv " +
             "before the reader chain")
-        entries.map(f => new org.apache.hadoop.fs.Path(root, f).toString)
+        entries.map(tx.path)
       } else {
         require(asOfVersion.isEmpty,
           s"asOf() needs a Snapshots store (no _snap manifests at $u)")
@@ -231,12 +233,11 @@ final case class GraftRead private (
         // them, pruning each against a different manifest — their
         // intersection then silently drops rows
         val viaRange = Option.when(rangeSel.nonEmpty) {
-          require(Snapshots.versions(spark, urls.head).nonEmpty,
+          require(txs.head.versions.nonEmpty,
             ".range() needs a Snapshots store (the stats sidecar " +
               "lives in its root; see Snapshots.indexStats)")
           Snapshots.prunedFiles(spark, urls.head,
-            asOfVersion.getOrElse(Snapshots.latest(spark, urls.head)),
-            rangeSel)
+            asOfVersion.getOrElse(txs.head.head.version), rangeSel)
         }
         Some((viaSel.toSeq ++ viaBloom.toSeq ++ viaRange.toSeq)
           .map(_.map(normPath).toSet).reduce(_ intersect _))

@@ -79,12 +79,15 @@ private[sources] class GraftMicroBatchStream(spark: SparkSession,
   private val AllowedOp = "^(create|append|txn-append)".r
   // the column mapping is pinned at stream start, like the schema:
   // a rename later in the stream is a mutation the op check refuses
-  private val colmap: Map[String, String] =
-    Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
-  if (startingVersion > 0)
-    require(Snapshots.versions(spark, url).contains(startingVersion),
-      s"startingVersion=$startingVersion is not a committed version " +
-        s"of $label")
+  private val colmap: Map[String, String] = {
+    val tx = StoreTxn.open(spark, url)
+    val pinned = tx.head.colmap
+    if (startingVersion > 0)
+      require(tx.versions.contains(startingVersion),
+        s"startingVersion=$startingVersion is not a committed " +
+          s"version of $label")
+    pinned
+  }
   maxVersionsPerTrigger.foreach(m => require(m > 0,
     s"maxVersionsPerTrigger must be positive, got $m"))
   // Trigger.AvailableNow pins its end at prepare time: the drain
@@ -123,7 +126,8 @@ private[sources] class GraftMicroBatchStream(spark: SparkSession,
     val s = start.asInstanceOf[GraftVersionOffset].v
     val e = end.asInstanceOf[GraftVersionOffset].v
     if (e <= s) return Array.empty
-    val endSnap = Snapshots.snap(spark, url, e)
+    val tx = StoreTxn.open(spark, url)
+    val endSnap = tx.at(e)
     val entries: Seq[String] =
       if (s == 0) {
         // initial snapshot: the CURRENT contents — whatever history
@@ -136,17 +140,16 @@ private[sources] class GraftMicroBatchStream(spark: SparkSession,
             "the stream")
         endSnap.files.sorted
       } else {
-        val vs = Snapshots.versions(spark, url)
-          .filter(v => v > s && v <= e)
+        val vs = tx.versions.filter(v => v > s && v <= e)
         vs.foreach { v =>
-          val sn = Snapshots.snap(spark, url, v)
+          val sn = tx.at(v)
           require(AllowedOp.findFirstIn(sn.op).isDefined,
             s"streaming read of $label: v$v is '${sn.op}' — the " +
               "stream contract is an append-only lineage past the " +
               "start offset; use format(\"graft-changes\") (CDC) " +
               "for mutating stores")
         }
-        val base = Snapshots.snap(spark, url, s).files.toSet
+        val base = tx.at(s).files.toSet
         val added = endSnap.files.filterNot(base)
         // appends only ever add PLAIN files; a composite entry here
         // means a mutation slipped the op trail (defense in depth)
@@ -155,8 +158,7 @@ private[sources] class GraftMicroBatchStream(spark: SparkSession,
             "appended range — use format(\"graft-changes\")")
         added.sorted
       }
-    val root = new Path(url)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, root) = (tx.fs, tx.root)
     // ONE directory listing serves every entry's (path, length,
     // mtime) — a per-file getFileStatus loop is O(files) driver
     // round-trips, the planning bottleneck on an object store at

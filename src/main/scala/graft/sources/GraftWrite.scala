@@ -86,9 +86,9 @@ private[sources] case class GraftFileCommit(name: Option[String],
 private[sources] object GraftWriteV2 {
   def deleteStaged(spark: SparkSession, url: String,
       names: Seq[String]): Unit = {
-    val (fs, root) = Snapshots.fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
     names.foreach { n =>
-      try fs.delete(new Path(root, n), false)
+      try tx.fs.delete(new Path(tx.root, n), false)
       catch { case _: java.io.IOException => () }
     }
   }
@@ -100,16 +100,15 @@ private[sources] object GraftWriteV2 {
   /** Validate CHECK constraints against the staged bytes under their
     * LOGICAL view — one scan of the new files only, skipped entirely
     * when no constraint is declared. */
-  def validateStaged(spark: SparkSession, url: String,
-      staged: Seq[String], logicalSchema: StructType,
-      physical: StructType, colmap: Map[String, String]): Unit = {
+  def validateStaged(tx: StoreTxn, staged: Seq[String],
+      logicalSchema: StructType, physical: StructType,
+      colmap: Map[String, String]): Unit = {
     if (staged.isEmpty) return
-    val (_, root) = Snapshots.fsOf(spark, url)
-    val batch = spark.read.schema(physical)
-      .parquet(staged.map(n => new Path(root, n).toString): _*)
+    val batch = tx.spark.read.schema(physical)
+      .parquet(staged.map(tx.path): _*)
       .select(logicalSchema.fieldNames.toSeq.map(l =>
         col(colmap.getOrElse(l, l)).as(l)): _*)
-    Snapshots.validateBatch(spark, root, url, batch)
+    Snapshots.validateBatch(tx, batch)
   }
 
   /** POST-commit: keep the store's conventional sidecars live —
@@ -132,20 +131,20 @@ private[sources] class GraftBatchWrite(url: String,
     extends BatchWrite {
 
   private def spark: SparkSession = SparkSession.active
-  // resolved ONCE at write start: the parent's column mapping names
-  // the physical fields appended files must carry; an overwrite
-  // resets the mapping (fresh files under logical names), mirroring
-  // Snapshots.overwrite
+  // resolved ONCE at write start, from one listing: the parent's
+  // column mapping names the physical fields appended files must
+  // carry; an overwrite resets the mapping (fresh files under
+  // logical names), mirroring Snapshots.overwrite
+  private val start = StoreTxn.open(spark, url)
   private val parentColmap: Map[String, String] =
-    if (overwriteAll) Map.empty
-    else Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
+    if (overwriteAll) Map.empty else start.head.colmap
   private val physical: StructType =
     Snapshots.physSchema(logicalSchema, parentColmap)
   private val tag = java.util.UUID.randomUUID().toString.take(8)
   // cosmetic version prefix for staged names (the manifest, not the
   // name, is what binds a file to a version — race retries may land
   // the commit at a later slot)
-  private val nameV = Snapshots.latest(spark, url) + 1
+  private val nameV = start.head.version + 1
   private val rootStr = new Path(url).toString
 
   override def createBatchWriterFactory(
@@ -155,19 +154,18 @@ private[sources] class GraftBatchWrite(url: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = GraftWriteV2.stagedOf(messages)
-    val (_, root) = Snapshots.fsOf(spark, url)
+    // the head at commit time, not at write start
+    val tx = StoreTxn.open(spark, url)
     try {
-      GraftWriteV2.validateStaged(spark, url, staged, logicalSchema,
+      GraftWriteV2.validateStaged(tx, staged, logicalSchema,
         physical, parentColmap)
       if (overwriteAll) {
         // same non-retrying contract as Snapshots.overwrite: the
         // replacement set does not depend on the head, but racing
         // overwrites should surface, not silently stack
-        Snapshots.commit(spark, root,
-          Snapshots.latest(spark, url) + 1, "overwrite", staged,
-          Some(logicalSchema)): Unit
+        tx.commit("overwrite", staged, logicalSchema, Map.empty, Nil): Unit
       } else {
-        Snapshots.commitAppendStaged(spark, root, url, "append",
+        Snapshots.commitAppendStaged(tx, "append",
           staged, logicalSchema, parentColmap): Unit
       }
     } catch {
@@ -200,12 +198,12 @@ private[sources] class GraftStreamingWrite(url: String,
   private def spark: SparkSession = SparkSession.active
   // pinned at stream start, like the schema: a rename mid-stream is
   // caught by commitAppendStaged's colmap guard and refuses loudly
-  private val parentColmap: Map[String, String] =
-    Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
+  private val start = StoreTxn.open(spark, url)
+  private val parentColmap: Map[String, String] = start.head.colmap
   private val physical: StructType =
     Snapshots.physSchema(logicalSchema, parentColmap)
   private val tag = java.util.UUID.randomUUID().toString.take(8)
-  private val nameV = Snapshots.latest(spark, url) + 1
+  private val nameV = start.head.version + 1
   private val rootStr = new Path(url).toString
   require(queryId != null && queryId.matches("[A-Za-z0-9_.-]+"),
     s"streaming write needs a path-safe query id, got '$queryId'")
@@ -226,11 +224,11 @@ private[sources] class GraftStreamingWrite(url: String,
       messages: Array[WriterCommitMessage]): Unit = {
     val staged = GraftWriteV2.stagedOf(messages)
     if (staged.isEmpty) return
-    val (_, root) = Snapshots.fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
     try {
-      GraftWriteV2.validateStaged(spark, url, staged, logicalSchema,
+      GraftWriteV2.validateStaged(tx, staged, logicalSchema,
         physical, parentColmap)
-      Snapshots.commitAppendStaged(spark, root, url,
+      Snapshots.commitAppendStaged(tx,
         s"append:sw-$queryId-e$epochId", staged, logicalSchema,
         parentColmap,
         dedupOp = Some(s"append:sw-$queryId-e$epochId")): Unit

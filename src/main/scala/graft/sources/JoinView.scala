@@ -126,13 +126,15 @@ object JoinView {
     require(dims.nonEmpty, "star join needs at least one dim")
     require(dims.map(_._2).distinct.length == dims.length,
       s"duplicate join keys: ${dims.map(_._2)}")
-    val fv = Snapshots.latest(spark, factUrl)
-    val fact = Snapshots.readAsOf(spark, factUrl, fv)
+    val factTx = StoreTxn.open(spark, factUrl)
+    val fv = factTx.head.version
+    val fact = Snapshots.readAsOf(factTx, factTx.head)
     require(fact.columns.contains(factKey),
       s"fact store needs $factKey")
-    val dvs = dims.map { case (u, _) => Snapshots.latest(spark, u) }
-    val dimDfs = dims.zip(dvs).map { case ((u, jk), dv) =>
-      val d = Snapshots.readAsOf(spark, u, dv)
+    val dimTxs = dims.map { case (u, _) => StoreTxn.open(spark, u) }
+    val dvs = dimTxs.map(_.head.version)
+    val dimDfs = dims.zip(dimTxs).map { case ((u, jk), dtx) =>
+      val d = Snapshots.readAsOf(dtx, dtx.head)
       require(fact.columns.contains(jk), s"fact store needs $jk")
       require(d.columns.contains(jk), s"dim store $u needs $jk")
       (d, jk)
@@ -210,8 +212,9 @@ object JoinView {
     * rewrites every view file (the [[Snapshots.upsert]] default);
     * with it, only files that can hold an affected key are rewritten
     * — the copy-on-write behavior a large view needs — and the
-    * sidecar is refreshed here after each commit (an O(new files)
-    * scan, [[RowGroupIndex.updateBloom]]). */
+    * sidecar is refreshed here after each commit over the view's
+    * live data files (an O(new files) scan,
+    * [[StoreTxn.refreshBloom]]). */
   def refreshStar(spark: SparkSession, viewUrl: String,
       factUrl: String, dimUrls: Seq[String], maxKeys: Int = 1000000,
       bloomIndexUrl: Option[String] = None): Int = {
@@ -226,19 +229,23 @@ object JoinView {
       require(!k.contains("\"") && !k.contains(","),
         s"key name $k would break the sidecar JSON — rebuild the " +
           "view under a renamed key"))
-    val fv = Snapshots.latest(spark, factUrl)
-    val dvs = dimUrls.map(Snapshots.latest(spark, _))
+    // one handle per base store pins the versions this refresh
+    // reads, diffs and probes
+    val factTx = StoreTxn.open(spark, factUrl)
+    val dimTxs = dimUrls.map(StoreTxn.open(spark, _))
+    val fv = factTx.head.version
+    val dvs = dimTxs.map(_.head.version)
     require(fv >= m.factV && dvs.zip(m.dimVs).forall(p => p._1 >= p._2),
       s"base stores went backwards (restore?) — rebuild the view")
+    val viewTx = StoreTxn.open(spark, viewUrl)
     if (fv == m.factV && dvs == m.dimVs)
-      return Snapshots.latest(spark, viewUrl)
-    val factNow = Snapshots.readAsOf(spark, factUrl, fv)
-    val dimNows = dimUrls.zip(dvs).map { case (u, dv) =>
-      Snapshots.readAsOf(spark, u, dv) }
-    val viewSchema = Snapshots.read(spark, viewUrl).schema
+      return viewTx.head.version
+    val factNow = Snapshots.readAsOf(factTx, factTx.head)
+    val dimNows = dimTxs.map(dtx => Snapshots.readAsOf(dtx, dtx.head))
+    val viewSchema = Snapshots.readAsOf(viewTx, viewTx.head).schema
     val dFKeys =
       if (fv > m.factV)
-        Snapshots.changes(spark, factUrl, m.factKey, m.factV, fv,
+        Snapshots.changes(factTx, m.factKey, m.factV, fv,
           includeOld = false).select(col(m.factKey))
       else factNow.select(col(m.factKey)).limit(0)
     // dim deltas are dimension-sized: collect each dim's changed
@@ -248,7 +255,7 @@ object JoinView {
       val jk = m.joinKeys(k)
       val dDKeyVals: Seq[Any] =
         if (dvs(k) > m.dimVs(k)) {
-          val rows = Snapshots.changes(spark, dimUrls(k), jk,
+          val rows = Snapshots.changes(dimTxs(k), jk,
             m.dimVs(k), dvs(k), includeOld = false)
             .select(col(jk)).distinct()
             .limit(maxKeys + 1).collect()
@@ -284,12 +291,12 @@ object JoinView {
             val files = Snapshots.prunedFilesForKeys(spark, factUrl,
               fv, jk, longKeys)
             if (files.isEmpty) factNow.limit(0)
-            else Snapshots.readEntryPaths(spark, factUrl, fv, files)
+            else Snapshots.readEntryPaths(factTx, fv, files)
           } else if (strKeys.length == dDKeyVals.length) {
             val files = Snapshots.prunedFilesForKeysStr(spark,
               factUrl, fv, jk, strKeys)
             if (files.isEmpty) factNow.limit(0)
-            else Snapshots.readEntryPaths(spark, factUrl, fv, files)
+            else Snapshots.readEntryPaths(factTx, fv, files)
           } else factNow
         factProbe.join(broadcast(dDKeys), Seq(jk), "left_semi")
           .select(col(m.factKey))
@@ -320,8 +327,8 @@ object JoinView {
         curAligned.unionByName(delRows), m.factKey,
         deleteCol = Some("__del"), bloomIndexUrl = bloomIndexUrl,
         maxKeys = maxKeys)
-      bloomIndexUrl.foreach(idx =>
-        RowGroupIndex.updateBloom(spark, viewUrl, Seq(m.factKey), idx))
+      bloomIndexUrl.foreach(idx => StoreTxn.open(spark, viewUrl)
+        .refreshBloom(Seq(m.factKey), idx))
       committed
     } finally { affected.unpersist(); current.unpersist() }
     writeMeta(spark, viewUrl, m.copy(factV = fv, dimVs = dvs),

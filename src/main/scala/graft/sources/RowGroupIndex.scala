@@ -275,14 +275,29 @@ object RowGroupIndex {
   /** One sidecar scan answering BOTH upsert questions: (dataset
     * files a bloom might-contain ANY probe value, flat names of
     * every file the sidecar covers). The coverage half feeds the
-    * staleness guard ([[Snapshots.upsert]] /
-    * [[Materialize.mergeUpsert]]) without re-reading the sidecar —
-    * on a 100k-file store the index scan + driver collect happens
-    * once per merge, not twice. Probing runs where the sidecar rows
-    * live; only (name, admitted) pairs reach the driver. */
+    * staleness guard ([[Materialize.mergeUpsert]]) without re-reading
+    * the sidecar — on a 100k-file store the index scan + driver
+    * collect happens once per merge, not twice. The admitted half
+    * intersects a listing of the dataset directory (a plain dataset
+    * has no manifest to intersect instead). */
   def bloomProbe(spark: SparkSession, datasetUrl: String,
       indexUrl: String, field: String, values: Seq[Any])
       : (Seq[String], Set[String]) = {
+    val (admitted, covered) = bloomAdmits(spark, indexUrl, field, values)
+    (Materialize.listParquetFiles(spark, datasetUrl).filter(f =>
+      admitted.contains(new org.apache.hadoop.fs.Path(f).toUri.getPath)),
+      covered)
+  }
+
+  /** [[bloomProbe]] without the listing: (normalized paths
+    * (`Path.toUri.getPath`) of the files a bloom might-contain ANY
+    * probe value, flat names of every file the sidecar covers) — what
+    * [[Snapshots.upsert]] matches against the manifest it already
+    * holds. Probing runs where the sidecar rows live; only
+    * (name, admitted) pairs reach the driver. */
+  private[sources] def bloomAdmits(spark: SparkSession,
+      indexUrl: String, field: String, values: Seq[Any])
+      : (Set[String], Set[String]) = {
     import org.apache.spark.util.sketch.BloomFilter
     val probes = values.map(_.toString).toArray
     val idx = spark.read.parquet(indexUrl)
@@ -297,11 +312,8 @@ object RowGroupIndex {
     }.collect()
     def norm(s: String): String =
       new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val keep = rows.collect { case (f, true) => norm(f) }.toSet
-    val covered = rows
-      .map(r => new org.apache.hadoop.fs.Path(r._1).getName).toSet
-    (Materialize.listParquetFiles(spark, datasetUrl)
-      .filter(f => keep.contains(norm(f))), covered)
+    (rows.collect { case (f, true) => norm(f) }.toSet,
+      rows.map(r => new org.apache.hadoop.fs.Path(r._1).getName).toSet)
   }
 
   /** File names (flat, no directory) the bloom sidecar covers for

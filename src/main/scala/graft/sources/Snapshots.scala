@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   */
 object Snapshots {
 
-  private val SnapDir = "_snap"
+  private[sources] val SnapDir = "_snap"
 
   /** One resolved manifest. `files` are root-relative names.
     * `schema`, when present, is the version's PINNED read schema
@@ -68,24 +68,12 @@ object Snapshots {
       colmap.getOrElse(logical, logical)
   }
 
-  private[sources] def fsOf(spark: SparkSession, url: String) = {
-    val p = new Path(url)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   private def manifestPath(root: Path, v: Int) =
     new Path(new Path(root, SnapDir), f"v$v%08d.json")
 
   /** All committed versions, ascending (empty for a non-store). */
-  def versions(spark: SparkSession, url: String): Seq[Int] = {
-    val (fs, root) = fsOf(spark, url)
-    val dir = new Path(root, SnapDir)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toInt }
-      .sorted
-  }
+  def versions(spark: SparkSession, url: String): Seq[Int] =
+    StoreTxn.open(spark, url).versions
 
   def latest(spark: SparkSession, url: String): Int = {
     val vs = versions(spark, url)
@@ -113,21 +101,26 @@ object Snapshots {
     })
 
   /** Resolve one manifest (the whole read path goes through here). */
-  def snap(spark: SparkSession, url: String, version: Int): Snap = {
-    val (fs, root) = fsOf(spark, url)
+  def snap(spark: SparkSession, url: String, version: Int): Snap =
+    StoreTxn.open(spark, url).at(version)
+
+  /** Version `version`'s manifest through the cache; None when no
+    * such manifest exists. */
+  private[sources] def cachedSnap(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, version: Int): Option[Snap] = {
     val p = manifestPath(root, version)
     val st =
       try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
-    require(st.isDefined, s"no snapshot v$version at $url " +
-      s"(versions: ${versions(spark, url).mkString(",")})")
-    val key = (p.toString, st.get.getModificationTime, st.get.getLen)
-    val hit = snapCache.get(key)
-    if (hit != null) hit
-    else {
-      val s = parseManifest(SidecarJson.slurp(fs, p))
-      snapCache.put(key, s)
-      s
+    st.map { st =>
+      val key = (p.toString, st.getModificationTime, st.getLen)
+      val hit = snapCache.get(key)
+      if (hit != null) hit
+      else {
+        val s = parseManifest(SidecarJson.slurp(fs, p))
+        snapCache.put(key, s)
+        s
+      }
     }
   }
 
@@ -191,12 +184,11 @@ object Snapshots {
     *    onto an existing destination fails atomically in the
     *    namenode/store, so exists+rename keeps the exactly-once
     *    contract there. */
-  private[sources] def commit(spark: SparkSession, root: Path,
-      version: Int, op: String, files: Seq[String],
+  private[sources] def commit(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, version: Int, op: String, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       colmap: Map[String, String] = Map.empty,
       dropped: Seq[String] = Nil): Int = {
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(files.forall(f => !f.contains("/") && !f.contains("\"")),
       "manifest entries must be flat root-relative names")
     val dir = new Path(root, SnapDir)
@@ -245,65 +237,10 @@ object Snapshots {
       } else !fs.exists(dst) && fs.rename(tmp, dst)
     fs.delete(tmp, false) // no-op if the rename path consumed it
     if (!claimed)
-      sys.error(s"concurrent commit lost the race for v$version at $root")
+      throw new CommitRaceLost(
+        s"concurrent commit lost the race for v$version at $root")
     version
   }
-
-  /** Write `df`'s rows as immutable data files named
-    * `s{version}-{uuid}-{k}.parquet` and return the names.
-    * `clusterBy` range-partitions instead of round-robin, giving each
-    * file a narrow value band — what makes [[indexStats]] pruning
-    * actually skip files. */
-  private def writeFiles(spark: SparkSession, root: Path, df: DataFrame,
-      version: Int, nFiles: Int,
-      clusterBy: Option[String] = None,
-      colmap: Map[String, String] = Map.empty): Seq[String] =
-    writeArranged(spark, root,
-      clusterBy
-        .map(c => df.repartitionByRange(math.max(1, nFiles), col(c)))
-        .getOrElse(df.repartition(math.max(1, nFiles))),
-      version, colmap)
-
-  /** [[writeFiles]] for a frame whose partitioning IS the layout
-    * (z-order, bin-packing): writes it as-is, one file per
-    * partition. `colmap` renames LOGICAL columns to their PHYSICAL
-    * names right before the write (a projection — partitioning
-    * survives), so every data file of a renamed store keeps one
-    * stable physical schema forever. */
-  private[sources] def writeArranged(spark: SparkSession, root: Path,
-      arranged0: DataFrame, version: Int,
-      colmap: Map[String, String] = Map.empty): Seq[String] = {
-    val arranged =
-      if (colmap.isEmpty) arranged0
-      else arranged0.select(arranged0.columns.toSeq.map(c =>
-        col(c).as(colmap.getOrElse(c, c))): _*)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_snap_stage_$tag")
-    fs.delete(tmp, true)
-    arranged.write.mode("overwrite").parquet(tmp.toString)
-    val staged = Materialize.listParquetFiles(spark, tmp.toString)
-    val named = staged.zipWithIndex.map { case (f, k) =>
-      val name = f"s$version%08d-$tag-$k%05d.parquet"
-      require(fs.rename(new Path(f), new Path(root, name)),
-        s"rename failed promoting $name")
-      name
-    }
-    fs.delete(tmp, true)
-    named
-  }
-
-  /** The schema a version's rows read under: the manifest's pinned
-    * schema, or (pre-pinning stores) one inferred from its files. */
-  private def schemaOf(spark: SparkSession, root: Path,
-      s: Snap): org.apache.spark.sql.types.StructType =
-    s.schema.getOrElse {
-      require(s.files.nonEmpty, s"v${s.version} has no schema source")
-      // composite entries infer from their DATA file (the DV sidecar
-      // carries positions, not columns)
-      spark.read.parquet(s.files.map(f =>
-        new Path(root, splitEntry(f)._1).toString): _*).schema
-    }
 
   /** Additive schema evolution: base columns keep position and type,
     * genuinely new columns append as NULLABLE (files written before
@@ -363,7 +300,7 @@ object Snapshots {
 
   /** Marker splitting a composite manifest entry into its data file
     * and its deletion-vector file. Data files are uuid-named by
-    * [[writeArranged]] and can never contain it. */
+    * [[StoreTxn.stageArranged]] and can never contain it. */
   private[sources] val DvSep = "--dv--"
 
   /** (data file, deletion-vector file if any) of a manifest entry. */
@@ -380,20 +317,6 @@ object Snapshots {
     d +: dv.toSeq
   }
 
-  /** Position columns carried by the DV read path. Underscore-graft
-    * names so a store column can never collide silently (refused in
-    * [[readEntriesWithPos]]). */
-  private val DvFileCol = "__graft_dv_file"
-  private val DvPosCol = "__graft_dv_pos"
-
-  /** Effective rows of `entries` PLUS their physical position
-    * ([[DvFileCol]] = data file name, [[DvPosCol]] = row index in
-    * it, from the parquet scan's `_metadata` — stable because data
-    * files are immutable). Plain entries scan directly; composite
-    * entries anti-join their deletion vector's (file, pos) pairs,
-    * grouped per DV file so one MoR commit's entries share one scan.
-    * Never broadcast-forced: position joins are equi-joins and AQE
-    * sizes the small DV side. */
   /** The PHYSICAL schema files store under `colmap` (logical field
     * names replaced; types/nullability unchanged). */
   private[sources] def physSchema(
@@ -404,171 +327,42 @@ object Snapshots {
     else org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       f.copy(name = colmap.getOrElse(f.name, f.name))))
 
-  private def readEntriesWithPos(spark: SparkSession, root: Path,
-      entries: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      colmap: Map[String, String] = Map.empty): DataFrame = {
-    // both name spaces must be clean: a LOGICAL collision would
-    // alias wrong, and a PHYSICAL collision (a renamed column whose
-    // birth name is a position column) would be overwritten by the
-    // metadata projection and read back as file names
-    val taken = schema.fieldNames.toSet ++
-      physSchema(schema, colmap).fieldNames
-    require(!taken.contains(DvFileCol) && !taken.contains(DvPosCol),
-      s"store schema uses reserved column $DvFileCol/$DvPosCol " +
-        "(logical or physical)")
-    // scan under the PHYSICAL schema, present LOGICAL names
-    val outCols = schema.fieldNames.toSeq.map(l =>
-      col(colmap.getOrElse(l, l)).as(l)) ++
-      Seq(col(DvFileCol), col(DvPosCol))
-    def withPos(paths: Seq[String]): DataFrame =
-      spark.read.schema(physSchema(schema, colmap)).parquet(paths: _*)
-        .withColumn(DvFileCol, col("_metadata.file_name"))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-    val split = entries.map(splitEntry)
-    val plain = split.collect { case (d, None) => d }
-    val byDv = split.collect { case (d, Some(dv)) => dv -> d }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    val parts = Seq.newBuilder[DataFrame]
-    if (plain.nonEmpty)
-      parts += withPos(plain.map(p => new Path(root, p).toString))
-        .select(outCols: _*)
-    byDv.foreach { case (dv, group) =>
-      val raw = withPos(group.map { case (_, d) =>
-        new Path(root, d).toString })
-      val dvDf = spark.read.parquet(new Path(root, dv).toString)
-      parts += raw.join(dvDf,
-          raw(DvFileCol) === dvDf("__dv_file") &&
-            raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
-        .select(outCols: _*)
-    }
-    parts.result().reduce(_ unionByName _)
-  }
-
-  /** Read the EFFECTIVE rows of manifest entries under `schema`:
-    * what a version's rows ARE once deletion vectors apply. Plain
-    * entries keep the unchanged single-batch parquet scan (no
-    * metadata columns, no join — the pre-DV plan); only composite
-    * entries pay the anti-join. */
-  private[sources] def readEntriesEff(spark: SparkSession, root: Path,
-      entries: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      colmap: Map[String, String] = Map.empty): DataFrame = {
-    val (dvd, plain) = entries.partition(_.contains(DvSep))
-    val parts = Seq.newBuilder[DataFrame]
-    if (plain.nonEmpty) {
-      val raw = spark.read.schema(physSchema(schema, colmap))
-        .parquet(plain.map(p => new Path(root, p).toString): _*)
-      parts += (if (colmap.isEmpty) raw
-        else raw.select(schema.fieldNames.toSeq.map(l =>
-          col(colmap.getOrElse(l, l)).as(l)): _*))
-    }
-    if (dvd.nonEmpty)
-      parts += readEntriesWithPos(spark, root, dvd, schema, colmap)
-        .drop(DvFileCol, DvPosCol)
-    parts.result().reduce(_ unionByName _)
-  }
-
-  /** Effective rows of `entries` with an extra string column
-    * `tagCol` carrying each row's manifest ENTRY name — the
-    * per-entry attribution every sidecar builder needs
-    * ([[indexStats]], [[VectorIndex.index]]): plain entries tag from
-    * `input_file_name`, composite MoR entries tag their data file's
-    * name + the vector suffix, so the same data file can carry one
-    * sidecar row per DV generation it appears under. */
-  private[sources] def readEntriesTagged(spark: SparkSession,
-      root: Path, entries: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      tagCol: String,
-      colmap: Map[String, String] = Map.empty): DataFrame = {
-    val takenT = schema.fieldNames.toSet ++
-      physSchema(schema, colmap).fieldNames
-    require(!takenT.contains(tagCol) && !takenT.contains(DvFileCol) &&
-      !takenT.contains(DvPosCol),
-      s"store schema uses reserved column $tagCol/$DvFileCol/" +
-        s"$DvPosCol (logical or physical)")
-    val logicalCols = schema.fieldNames.toSeq.map(l =>
-      col(colmap.getOrElse(l, l)).as(l))
-    val parsed = entries.map(e => e -> splitEntry(e))
-    val plain = parsed.collect { case (e, (_, None)) => e }
-    val dvd = parsed.collect { case (e, (d, Some(dv))) => (dv, d, e) }
-    val parts = Seq.newBuilder[DataFrame]
-    if (plain.nonEmpty)
-      parts += spark.read.schema(physSchema(schema, colmap))
-        .parquet(plain.map(f => new Path(root, f).toString): _*)
-        .select(logicalCols :+ element_at(
-          split(input_file_name(), "/"), -1).as(tagCol): _*)
-    dvd.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (dv, group) =>
-      val raw = spark.read.schema(physSchema(schema, colmap))
-        .parquet(group.map(g => new Path(root, g._2).toString): _*)
-        .withColumn(DvFileCol, col("_metadata.file_name"))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-      val dvDf = spark.read.parquet(new Path(root, dv).toString)
-      parts += raw.join(dvDf,
-          raw(DvFileCol) === dvDf("__dv_file") &&
-            raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
-        .select(logicalCols :+ concat(col(DvFileCol),
-          lit(DvSep + dv)).as(tagCol): _*)
-    }
-    parts.result().reduce(_ unionByName _)
-  }
-
   /** Public effective read of an explicit entry subset (the pruned
     * fact probe [[JoinView.refresh]] runs): `paths` are the strings
     * the pruned-file family returns — absolute path forms whose last
     * segment is the manifest entry. Exactness on a MoR store comes
     * from reading entries, not raw files. */
   def readEntryPaths(spark: SparkSession, url: String, version: Int,
+      paths: Seq[String]): DataFrame =
+    readEntryPaths(StoreTxn.open(spark, url), version, paths)
+
+  private[sources] def readEntryPaths(tx: StoreTxn, version: Int,
       paths: Seq[String]): DataFrame = {
-    val (_, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
+    val s = tx.at(version)
     val entries = paths.map(p => new Path(p).getName)
     val unknown = entries.filterNot(s.files.toSet)
     require(unknown.isEmpty,
       s"readEntryPaths: ${unknown.take(3).mkString(",")} not in " +
         s"v$version's manifest")
-    val schema = schemaOf(spark, root, s)
-    if (entries.isEmpty) readAsOf(spark, url, version).filter(lit(false))
-    else readEntriesEff(spark, root, entries, schema, s.colmap)
-  }
-
-  /** Write one deletion-vector parquet (`__dv_file` string,
-    * `__dv_pos` long) and return its root-relative name. One file
-    * per MoR commit: a DV holds the SPARSE delete's positions (16
-    * bytes/row before compression) — a delete wide enough to make
-    * this file heavy should have been a copy-on-write
-    * [[deleteWhere]], which also resets the read-side join cost. */
-  private def writeDv(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      del: DataFrame, version: Int): String = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_snap_stage_dv_$tag")
-    fs.delete(tmp, true)
-    del.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-    val staged = Materialize.listParquetFiles(spark, tmp.toString)
-    require(staged.length == 1, s"dv stage produced ${staged.length}")
-    val name = f"dv$version%08d-$tag.parquet"
-    require(fs.rename(new Path(staged.head), new Path(root, name)),
-      s"rename failed promoting $name")
-    fs.delete(tmp, true)
-    name
+    val schema = tx.schemaOf(s)
+    if (entries.isEmpty) readAsOf(tx, s).filter(lit(false))
+    else tx.scan(entries, schema, s.colmap)
   }
 
   /** Create version 1 (refuses an existing store). */
   def create(spark: SparkSession, url: String, df: DataFrame,
       nFiles: Int = 8, clusterBy: Option[String] = None): Int = {
-    val (fs, root) = fsOf(spark, url)
-    require(versions(spark, url).isEmpty,
+    val tx = StoreTxn.open(spark, url)
+    require(tx.versions.isEmpty,
       s"snapshot store already exists at $url")
     clusterBy.foreach(f => require(df.columns.contains(f),
       s"create: no column $f to cluster on"))
-    fs.mkdirs(root)
+    tx.fs.mkdirs(tx.root)
     // clusterBy writes v1 range-clustered directly — one write
     // instead of create + a full [[cluster]] rewrite when the
     // layout is known up front
-    commit(spark, root, 1, "create",
-      writeFiles(spark, root, df, 1, nFiles, clusterBy),
-      Some(df.schema))
+    tx.commit("create", tx.stage(df, nFiles, clusterBy, Map.empty),
+      df.schema, Map.empty, Nil)
   }
 
   /** Append-only commit: new files + the parent's, no rewrites.
@@ -586,31 +380,26 @@ object Snapshots {
     * files should have been written under — refused loudly. */
   def append(spark: SparkSession, url: String, df: DataFrame,
       nFiles: Int = 8): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    validateBatch(spark, root, url, df)
-    val staged = writeFiles(spark, root, df, parent.version + 1,
-      nFiles, colmap = parent.colmap)
-    commitAppendStaged(spark, root, url, "append", staged, df.schema,
-      parent.colmap)
+    val tx = StoreTxn.open(spark, url)
+    validateBatch(tx, df)
+    commitAppendStaged(tx, "append", tx.stage(df, nFiles), df.schema,
+      tx.head.colmap)
   }
 
   /** Commit already-staged append files, retrying lost version
-    * races at the (re-resolved) head — shared by [[append]] and
-    * [[appendOnce]]. Only the race signal retries; anything else
-    * surfaces on attempt 1. `dedupOp`: when set, a version whose op
-    * equals it (committed by a racing at-least-once twin) wins and
-    * is returned, leaving this call's staged files as vacuum
-    * orphans — the exactly-once contract under concurrency. */
-  private[sources] def commitAppendStaged(spark: SparkSession,
-      root: Path,
-      url: String, op: String, staged: Seq[String],
+    * races at the (re-resolved) head — shared by [[append]],
+    * [[appendOnce]] and the DataSource V2 writes. Attempt 1 commits
+    * on `tx`, the handle the files were staged under. `dedupOp`:
+    * when set, a version whose op equals it (committed by a racing
+    * at-least-once twin) wins and is returned, leaving this call's
+    * staged files as vacuum orphans — the exactly-once contract
+    * under concurrency. */
+  private[sources] def commitAppendStaged(tx: StoreTxn, op: String,
+      staged: Seq[String],
       batchSchema: org.apache.spark.sql.types.StructType,
       stagedColmap: Map[String, String],
-      dedupOp: Option[String] = None): Int = {
-    var attempts = 0
-    var out = -1
-    while (out < 0) {
+      dedupOp: Option[String] = None): Int =
+    StoreTxn.retrying(tx) { t =>
       // ONE directory listing per attempt feeds BOTH the dedup check
       // and the parent resolution. Listing twice left an exactly-once
       // hole: a twin could pass the dedup check before its rival's
@@ -620,33 +409,17 @@ object Snapshots {
       // parent implies seeing the rival's manifest in the same list,
       // so the dedup check catches it; not seeing it means both
       // target the same slot and the claim's exclusivity decides.
-      val vs = versions(spark, url)
-      require(vs.nonEmpty, s"no snapshot store at $url")
-      dedupOp.flatMap(o => vs
-          .find(v => snap(spark, url, v).op == o)) match {
-        case Some(v) => out = v
-        case None =>
-          val parent = snap(spark, url, vs.max)
+      dedupOp.flatMap(o => t.versions.find(v => t.at(v).op == o))
+        .getOrElse {
           // staged files carry stagedColmap's PHYSICAL names; a
           // rename/drop interleaving the race would make them stale
-          require(parent.colmap == stagedColmap,
-            s"append raced a column-mapping change at $url — " +
+          require(t.head.colmap == stagedColmap,
+            s"append raced a column-mapping change at ${t.url} — " +
               "staged files carry the previous physical names; " +
               "re-run the append")
-          try out = commit(spark, root, parent.version + 1, op,
-            parent.files ++ staged,
-            Some(evolveFrom(spark, root, parent, batchSchema)),
-            parent.colmap, parent.dropped)
-          catch {
-            case e: RuntimeException
-                if e.getMessage != null && e.getMessage
-                  .startsWith("concurrent commit lost the race") &&
-                  attempts < 16 => attempts += 1
-          }
-      }
+          t.commit(op, t.head.files ++ staged, evolveFrom(t, batchSchema))
+        }
     }
-    out
-  }
 
   /** Write-audit-publish append: stage the batch's files, run the
     * caller's `audit` over EXACTLY the rows readers would see (the
@@ -663,39 +436,34 @@ object Snapshots {
     * debris [[vacuum]] sweeps. */
   def appendAudited(spark: SparkSession, url: String, df: DataFrame,
       nFiles: Int = 8)(audit: DataFrame => Unit): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    validateBatch(spark, root, url, df)
-    val v = parent.version + 1
-    val staged = writeFiles(spark, root, df, v, nFiles,
-      colmap = parent.colmap)
+    val tx = StoreTxn.open(spark, url)
+    validateBatch(tx, df)
+    val staged = tx.stage(df, nFiles)
     // NonFatal only: an executor loss / OOM / interrupt during the
     // audit job is an infrastructure failure, not a data refusal —
     // it propagates as itself (staged files become crash debris
     // vacuum sweeps), never mislabeled as "batch refused"
-    try audit(readEntriesEff(spark, root, staged, df.schema,
-      parent.colmap))
+    try audit(tx.scan(staged, df.schema, tx.head.colmap))
     catch {
       case scala.util.control.NonFatal(e) =>
-        staged.foreach(f => fs.delete(new Path(root, f), false))
+        staged.foreach(f => tx.fs.delete(new Path(tx.root, f), false))
         throw new IllegalArgumentException(
           s"append audit refused the batch: ${e.getMessage}", e)
     }
-    commit(spark, root, v, "append", parent.files ++ staged,
-      Some(evolveFrom(spark, root, parent, df.schema)),
-      parent.colmap, parent.dropped)
+    tx.commit("append", tx.head.files ++ staged, evolveFrom(tx, df.schema))
   }
 
-  /** The schema an append commits: the parent's evolved with the
-    * batch's (a parent with no files and no pinned schema — e.g. an
-    * empty bootstrap commit — contributes nothing). */
-  private[sources] def evolveFrom(spark: SparkSession, root: Path,
-      parent: Snap,
+  /** The schema an append onto `tx`'s head commits: the head's
+    * evolved with the batch's (a head with no files and no pinned
+    * schema — e.g. an empty bootstrap commit — contributes
+    * nothing). */
+  private def evolveFrom(tx: StoreTxn,
       batchSchema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
+      : org.apache.spark.sql.types.StructType = {
+    val parent = tx.head
     if (parent.files.isEmpty && parent.schema.isEmpty) batchSchema
     else {
-      val base = schemaOf(spark, root, parent)
+      val base = tx.schema
       // a NEW column's physical name = its logical name; it may not
       // collide with a renamed column's physical slot or a dropped
       // column's retired bytes (old files would serve the stale
@@ -716,35 +484,31 @@ object Snapshots {
           "choose a different name")
       evolve(base, batchSchema)
     }
+  }
 
   /** Exactly-once append for at-least-once callers (foreachBatch
     * retries, re-run jobs): the commit's `op` field carries
     * `append:<commitKey>`, and a retry whose key already sits in ANY
     * manifest is a no-op returning that version. The key scan reads
-    * the manifests we already list for version resolution —
-    * O(versions), no data files touched. The loser of a concurrent
-    * commit race retries through the same dedup check, so a crash
-    * between data-file staging and manifest commit leaves only
-    * vacuum-collectable orphans, never duplicate rows. */
+    * the manifests of the one listing the commit also resolves its
+    * parent from — O(versions), no data files touched. The loser of
+    * a concurrent commit race retries through the same dedup check,
+    * so a crash between data-file staging and manifest commit leaves
+    * only vacuum-collectable orphans, never duplicate rows. */
   def appendOnce(spark: SparkSession, url: String, df: DataFrame,
       commitKey: String, nFiles: Int = 8): Int = {
     require(commitKey.matches("[A-Za-z0-9_.-]+"),
       s"commitKey '$commitKey' must be [A-Za-z0-9_.-]+")
     val op = s"append:$commitKey"
-    val prior = versions(spark, url)
-      .find(v => snap(spark, url, v).op == op)
-    prior.getOrElse {
-      val (_, root) = fsOf(spark, url)
-      val parent = snap(spark, url, latest(spark, url))
-      validateBatch(spark, root, url, df)
-      val staged = writeFiles(spark, root, df, parent.version + 1,
-        nFiles, colmap = parent.colmap)
+    val tx = StoreTxn.open(spark, url)
+    tx.versions.find(v => tx.at(v).op == op).getOrElse {
+      validateBatch(tx, df)
       // race-retrying commit with the key re-checked each attempt:
       // an at-least-once TWIN that won the race makes this call
       // return its version (staged files become vacuum orphans) —
       // exactly-once even under concurrent replays
-      commitAppendStaged(spark, root, url, op, staged, df.schema,
-        parent.colmap, dedupOp = Some(op))
+      commitAppendStaged(tx, op, tx.stage(df, nFiles), df.schema,
+        tx.head.colmap, dedupOp = Some(op))
     }
   }
 
@@ -752,14 +516,12 @@ object Snapshots {
     * rewrite) — old versions stay readable until [[vacuum]]. */
   def overwrite(spark: SparkSession, url: String, df: DataFrame,
       nFiles: Int = 8, clusterBy: Option[String] = None): Int = {
-    val (_, root) = fsOf(spark, url)
-    validateBatch(spark, root, url, df)
+    val tx = StoreTxn.open(spark, url)
+    validateBatch(tx, df)
     clusterBy.foreach(f => require(df.columns.contains(f),
       s"overwrite: no column $f to cluster on"))
-    val v = latest(spark, url) + 1
-    commit(spark, root, v, "overwrite",
-      writeFiles(spark, root, df, v, nFiles, clusterBy),
-      Some(df.schema))
+    tx.commit("overwrite", tx.stage(df, nFiles, clusterBy, Map.empty),
+      df.schema, Map.empty, Nil)
   }
 
   /** Copy-on-write keyed MERGE: [[Materialize.mergeUpsert]] semantics
@@ -777,29 +539,32 @@ object Snapshots {
       keyCol: String, deleteCol: Option[String] = None,
       bloomIndexUrl: Option[String] = None,
       maxKeys: Int = 1000000,
-      expectedParentVersion: Int = -1): Int = {
-    val (_, root) = fsOf(spark, url)
-    val (parent, storeSchema, affected, rewritten) = stageUpsert(
-      spark, url, updates, keyCol, deleteCol, bloomIndexUrl, maxKeys,
-      expectedParentVersion)
-    commit(spark, root, parent.version + 1, "upsert",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
+      expectedParentVersion: Int = -1): Int =
+    upsert(StoreTxn.open(spark, url), updates, keyCol, deleteCol,
+      bloomIndexUrl, maxKeys, expectedParentVersion)
+
+  private[sources] def upsert(tx: StoreTxn, updates: DataFrame,
+      keyCol: String, deleteCol: Option[String],
+      bloomIndexUrl: Option[String], maxKeys: Int,
+      expectedParentVersion: Int): Int = {
+    val (affected, rewritten) = stageUpsert(tx, updates, keyCol,
+      deleteCol, bloomIndexUrl, maxKeys, expectedParentVersion)
+    tx.commit("upsert",
+      tx.head.files.filterNot(affected.toSet) ++ rewritten, tx.schema)
   }
 
-  /** The staging half of [[upsert]]: validate, compute the affected
-    * file set, write the rewritten files — but commit NOTHING (the
-    * staged files are invisible orphans until a manifest lists
-    * them). Shared by [[upsert]] (which commits immediately) and
-    * [[upsertTogether]] (which journals first). */
-  private[sources] def stageUpsert(spark: SparkSession, url: String,
+  /** The staging half of [[upsert]] on `tx`'s head: validate, compute
+    * the affected file set, write the rewritten files — but commit
+    * NOTHING (the staged files are invisible orphans until a
+    * manifest lists them). Returns (affected, rewritten). Shared by
+    * [[upsert]] (which commits immediately) and [[upsertTogether]]
+    * (which journals first). */
+  private[sources] def stageUpsert(tx: StoreTxn,
       updates: DataFrame, keyCol: String, deleteCol: Option[String],
       bloomIndexUrl: Option[String], maxKeys: Int,
-      expectedParentVersion: Int)
-      : (Snap, org.apache.spark.sql.types.StructType,
-         Seq[String], Seq[String]) = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+      expectedParentVersion: Int): (Seq[String], Seq[String]) = {
+    val spark = tx.spark
+    val parent = tx.head
     // optimistic pin for callers whose PRE-CHECKS were computed
     // against a specific head ([[Branch.mergeBack]]'s conflict scan):
     // a commit that interleaved after the checks makes this upsert
@@ -810,10 +575,10 @@ object Snapshots {
       parent.version == expectedParentVersion,
       s"upsert: store moved to v${parent.version} past the expected " +
         s"v$expectedParentVersion — re-run the caller's pre-checks")
-    // schema from the manifest (or file inference via schemaOf) —
-    // never a data read; an all-deleted parent (zero files, pinned
-    // schema) accepts re-inserts
-    val storeSchema = schemaOf(spark, root, parent)
+    // schema from the manifest (or file inference) — never a data
+    // read; an all-deleted parent (zero files, pinned schema)
+    // accepts re-inserts
+    val storeSchema = tx.schema
     val dataCols = storeSchema.fieldNames.toSeq
     val upCols = updates.columns.toSeq.filterNot(deleteCol.contains)
     require(upCols.sorted == dataCols.sorted,
@@ -845,23 +610,26 @@ object Snapshots {
       require(!keys.contains(null), s"null $keyCol in the update batch")
       val affected: Seq[String] = bloomIndexUrl match {
         case Some(idx) =>
-          val (sel, covered) =
-            RowGroupIndex.bloomProbe(spark, url, idx, keyCol, keys)
-          val selNames = sel.map(f => new Path(f).getName).toSet
+          val (admitted, covered) =
+            RowGroupIndex.bloomAdmits(spark, idx, keyCol, keys)
           // Staleness guard: the sidecar only prunes files it has
           // actually indexed. A live file with NO index row (committed
-          // after the last updateBloom — e.g. snapshotSink refreshes
+          // after the last bloom refresh — e.g. snapshotSink refreshes
           // stats but not blooms) might hold matching keys, and
           // treating it as unaffected would leave duplicate keys in
           // the new version. Uncovered live files are conservatively
           // affected: correctness never depends on sidecar freshness,
-          // pruning quality does. One sidecar scan serves both halves.
+          // pruning quality does. One sidecar scan serves both halves,
+          // and the admitted set is matched against the manifest's
+          // own entries — no listing of the store root.
           // Blooms index the PHYSICAL data file, so a composite MoR
           // entry probes on its data-file name (conservative: a bloom
           // hit on a DV-deleted row admits the entry, never drops it).
           parent.files.filter { e =>
             val d = splitEntry(e)._1
-            selNames.contains(d) || !covered.contains(d)
+            admitted.contains(
+              tx.fs.makeQualified(new Path(tx.root, d)).toUri.getPath) ||
+              !covered.contains(d)
           }
         case None => parent.files
       }
@@ -869,7 +637,7 @@ object Snapshots {
         .map(d => up.filter(!coalesce(col(d), lit(false))).drop(d))
         .getOrElse(up)
         .select(dataCols.map(col): _*)
-      validateBatch(spark, root, url, upserts) // only NEW rows checked
+      validateBatch(tx, upserts) // only NEW rows checked
       // anti-join build side from the ALREADY-COLLECTED keys (they
       // are on the driver, bounded by maxKeys) — a broadcast of
       // updates.select(keyCol) would re-execute the batch plan a
@@ -881,15 +649,12 @@ object Snapshots {
           updates.schema(keyCol).copy(name = "__mk"))))
       val merged =
         if (affected.isEmpty) upserts
-        else readEntriesEff(spark, root, affected, storeSchema,
-            parent.colmap)
+        else tx.scanHead(affected)
           .join(broadcast(keysDf), col(keyCol) === col("__mk"),
             "left_anti")
           .unionByName(upserts)
-      val v = parent.version + 1
-      val rewritten = writeFiles(spark, root, merged, v,
-        math.max(1, affected.length), colmap = parent.colmap)
-      (parent, storeSchema, affected, rewritten)
+      val rewritten = tx.stage(merged, math.max(1, affected.length))
+      (affected, rewritten)
     } finally up.unpersist()
   }
 
@@ -903,11 +668,8 @@ object Snapshots {
     * with a NULL field survive (a range predicate cannot match
     * NULL). Returns the committed version — the CURRENT one when no
     * file can hold a match (true no-op, nothing committed). */
-  def deleteWhere(spark: SparkSession, url: String, r: KeyRange): Int = {
-    val parentV = latest(spark, url)
-    deleteFromFiles(spark, url, parentV, r,
-      pruneEntries(spark, url, parentV, Seq(r)))
-  }
+  def deleteWhere(spark: SparkSession, url: String, r: KeyRange): Int =
+    deleteWhere(StoreTxn.open(spark, url), r)
 
   /** [[deleteWhere]] on a [[LongRange]] — the long-hand form. */
   def deleteWhere(spark: SparkSession, url: String, field: String,
@@ -928,26 +690,28 @@ object Snapshots {
     * `DELETE FROM` path ([[GraftCatalog]]). Returns the CURRENT
     * version when nothing matches (true no-op). */
   def deleteWhereCond(spark: SparkSession, url: String,
-      cond: Column): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+      cond: Column): Int =
+    deleteWhereCond(StoreTxn.open(spark, url), cond)
+
+  private[sources] def deleteWhereCond(tx: StoreTxn, cond: Column): Int = {
+    val parent = tx.head
     if (parent.files.isEmpty) return parent.version
-    val storeSchema = schemaOf(spark, root, parent)
     val hit = coalesce(cond, lit(false))
-    val affected = readEntriesTagged(spark, root, parent.files,
-      storeSchema, "__graft_del_entry", parent.colmap)
-      .filter(hit).select(col("__graft_del_entry")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // O(files) bounded
+    val affected = entriesMatching(tx, hit, "__graft_del_entry")
     if (affected.isEmpty) return parent.version
-    val keep = readEntriesEff(spark, root, affected, storeSchema,
-      parent.colmap).filter(!hit)
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, keep, v,
-      math.max(1, affected.length), colmap = parent.colmap)
-    commit(spark, root, v, "delete",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
+    val rewritten = tx.stage(tx.scanHead(affected).filter(!hit),
+      math.max(1, affected.length))
+    tx.commit("delete",
+      parent.files.filterNot(affected.toSet) ++ rewritten, tx.schema)
   }
+
+  /** The head entries holding at least one row where `hit` is true:
+    * one entry-tagged scan, O(files) bounded on the driver. */
+  private def entriesMatching(tx: StoreTxn, hit: Column,
+      tagCol: String): Seq[String] =
+    tx.scanHead(tx.head.files, StoreTxn.EntryTag(tagCol))
+      .filter(hit).select(col(tagCol)).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
 
   /** GENERAL-predicate copy-on-write UPDATE — `UPDATE store SET ...
     * WHERE <any condition>`: the [[deleteWhereCond]] attribution
@@ -963,23 +727,22 @@ object Snapshots {
     * the SQL `UPDATE` path. Returns the
     * CURRENT version when nothing matches. */
   def updateWhereCond(spark: SparkSession, url: String, cond: Column,
+      sets: Map[String, Column]): Int =
+    updateWhereCond(StoreTxn.open(spark, url), cond, sets)
+
+  private[sources] def updateWhereCond(tx: StoreTxn, cond: Column,
       sets: Map[String, Column]): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    val storeSchema = schemaOf(spark, root, parent)
+    val parent = tx.head
+    val storeSchema = tx.schema
     require(sets.nonEmpty, "updateWhereCond: empty SET clause")
     sets.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhereCond: SET names unknown column $c — updates " +
         "never add columns (that is schema evolution)"))
     if (parent.files.isEmpty) return parent.version
     val hit = coalesce(cond, lit(false))
-    val affected = readEntriesTagged(spark, root, parent.files,
-      storeSchema, "__graft_upd_entry", parent.colmap)
-      .filter(hit).select(col("__graft_upd_entry")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // O(files) bounded
+    val affected = entriesMatching(tx, hit, "__graft_upd_entry")
     if (affected.isEmpty) return parent.version
-    val scanned = readEntriesEff(spark, root, affected, storeSchema,
-      parent.colmap)
+    val scanned = tx.scanHead(affected)
     // implicit SAFE upcasts only (SQL store-assignment semantics):
     // probe each SET expression's type once, refuse lossy casts
     val probe = scanned.select(storeSchema.fieldNames.toSeq.map(c =>
@@ -1000,27 +763,22 @@ object Snapshots {
       casted.get(c).map(e => when(hit, e).otherwise(col(c)).as(c))
         .getOrElse(col(c))
     }: _*)
-    validateBatch(spark, root, url,
+    validateBatch(tx,
       scanned.filter(hit).select(storeSchema.fieldNames.toSeq.map(c =>
         casted.get(c).map(_.as(c)).getOrElse(col(c))): _*))
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, updated, v,
-      math.max(1, affected.length), colmap = parent.colmap)
-    commit(spark, root, v, "update",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
+    val rewritten = tx.stage(updated, math.max(1, affected.length))
+    tx.commit("update",
+      parent.files.filterNot(affected.toSet) ++ rewritten, storeSchema)
   }
 
-  private def deleteFromFiles(spark: SparkSession, url: String,
-      parentV: Int, r: KeyRange, files: Seq[String]): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
+  private[sources] def deleteWhere(tx: StoreTxn, r: KeyRange): Int = {
+    val files = pruneEntries(tx, tx.head, Seq(r))
+    val parent = tx.head
+    val storeSchema = tx.schema
     rangeTypeGate("deleteWhere", storeSchema, r)
     if (files.isEmpty) return parent.version
     val names = files.toSet
-    val scanned = readEntriesEff(spark, root, files, storeSchema,
-        parent.colmap)
+    val scanned = tx.scanHead(files)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val hit = coalesce(r.residual(storeSchema), lit(false))
@@ -1033,17 +791,14 @@ object Snapshots {
       val matches = scanned.agg(count(when(hit, lit(1))).as("m"))
         .collect()(0).getLong(0)
       if (matches == 0L) return parent.version
-      val v = parent.version + 1
       // re-cluster the survivors on the delete field: a round-robin
       // rewrite would give every new file a full-width band and
       // progressively de-cluster the store under repeated retention
       // deletes
-      val rewritten = writeFiles(spark, root, kept, v,
-        math.max(1, files.length), clusterBy = Some(r.field),
-        colmap = parent.colmap)
-      commit(spark, root, v, "delete",
-        parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
-        parent.colmap, parent.dropped)
+      val rewritten = tx.stage(kept, math.max(1, files.length),
+        clusterBy = Some(r.field))
+      tx.commit("delete",
+        parent.files.filterNot(names) ++ rewritten, storeSchema)
     } finally scanned.unpersist()
   }
 
@@ -1067,9 +822,7 @@ object Snapshots {
     * no-op, nothing committed). */
   def deleteWhereMor(spark: SparkSession, url: String,
       r: KeyRange): Int = {
-    val parentV = latest(spark, url)
-    morDelete(spark, url, parentV, r,
-      pruneEntries(spark, url, parentV, Seq(r)))
+    morDelete(StoreTxn.open(spark, url), r)
   }
 
   /** Flavor gate: the range's case must match the column's band
@@ -1108,46 +861,40 @@ object Snapshots {
     * restricted to those files — merged into every new vector so
     * each version's entry names exactly ONE vector and readers never
     * stack joins. One read per distinct prior vector. */
-  private def carriedPositions(spark: SparkSession, root: Path,
-      entries: Seq[String],
+  private def carriedPositions(tx: StoreTxn, entries: Seq[String],
       affectedData: Set[String]): Seq[DataFrame] =
     entries.map(splitEntry)
       .collect { case (d, Some(dv)) if affectedData.contains(d) =>
         dv -> d }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (dv, group) =>
-        spark.read.parquet(new Path(root, dv).toString)
+        tx.spark.read.parquet(tx.path(dv))
           .filter(col("__dv_file").isin(group.map(_._2): _*)) }
 
   /** Shared MoR commit tail: write ONE merged vector, re-point every
     * affected entry at it, append `extraFiles` (morupdate's fresh
     * images), commit under the parent's colmap/dropped. */
-  private def commitMor(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, parent: Snap,
-      op: String, affectedData: Set[String], allDel: DataFrame,
-      extraFiles: Seq[String],
-      storeSchema: org.apache.spark.sql.types.StructType): Int = {
-    val v = parent.version + 1
-    val dvName = writeDv(spark, fs, root, allDel, v)
-    val replaced = parent.files.map { e =>
+  private def commitMor(tx: StoreTxn, op: String,
+      affectedData: Set[String], allDel: DataFrame,
+      extraFiles: Seq[String]): Int = {
+    val dvName = tx.stageDv(allDel)
+    val replaced = tx.head.files.map { e =>
       val d = splitEntry(e)._1
       if (affectedData.contains(d)) s"$d$DvSep$dvName" else e
     }
-    commit(spark, root, v, op, replaced ++ extraFiles,
-      Some(storeSchema), parent.colmap, parent.dropped)
+    tx.commit(op, replaced ++ extraFiles, tx.schema)
   }
 
-  private def morDelete(spark: SparkSession, url: String,
-      parentV: Int, r: KeyRange, entries: Seq[String]): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
+  private def morDelete(tx: StoreTxn, r: KeyRange): Int = {
+    import StoreTxn.{DvFileCol, DvPosCol}
+    val entries = pruneEntries(tx, tx.head, Seq(r))
+    val parent = tx.head
+    val storeSchema = tx.schema
     rangeTypeGate("deleteWhereMor", storeSchema, r)
     if (entries.isEmpty) return parent.version
     // positions of newly matching rows among the candidates'
     // EFFECTIVE rows (already-deleted positions never re-match)
-    val hits = readEntriesWithPos(spark, root, entries, storeSchema,
-        parent.colmap)
+    val hits = tx.scanHead(entries, StoreTxn.Positions)
       .filter(coalesce(r.residual(storeSchema), lit(false)))
       .select(col(DvFileCol).as("__dv_file"),
         col(DvPosCol).as("__dv_pos"))
@@ -1159,10 +906,9 @@ object Snapshots {
         .collect().map(_.getString(0)).toSet
       if (affectedData.isEmpty) return parent.version // true no-op
       // disjoint by construction: hits come from effective rows
-      val allDel = (hits +: carriedPositions(spark, root, entries,
+      val allDel = (hits +: carriedPositions(tx, entries,
         affectedData)).reduce(_ unionByName _)
-      commitMor(spark, fs, root, parent, "mordelete", affectedData,
-        allDel, Nil, storeSchema)
+      commitMor(tx, "mordelete", affectedData, allDel, Nil)
     } finally hits.unpersist()
   }
 
@@ -1181,17 +927,15 @@ object Snapshots {
     * rows — the manifest diff prices the commit as drop+add. */
   def updateWhereMor(spark: SparkSession, url: String, r: KeyRange,
       set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    morUpdate(spark, url, parentV, r,
-      pruneEntries(spark, url, parentV, Seq(r)), set)
+    morUpdate(StoreTxn.open(spark, url), r, set)
   }
 
-  private def morUpdate(spark: SparkSession, url: String,
-      parentV: Int, r: KeyRange, entries: Seq[String],
+  private def morUpdate(tx: StoreTxn, r: KeyRange,
       set: Map[String, Column]): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
+    import StoreTxn.{DvFileCol, DvPosCol}
+    val entries = pruneEntries(tx, tx.head, Seq(r))
+    val parent = tx.head
+    val storeSchema = tx.schema
     require(set.nonEmpty, "updateWhereMor: empty SET clause")
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhereMor: SET names unknown column $c — updates never " +
@@ -1199,8 +943,7 @@ object Snapshots {
     rangeTypeGate("updateWhereMor", storeSchema, r)
     if (entries.isEmpty) return parent.version
     val hit = coalesce(r.residual(storeSchema), lit(false))
-    val matched = readEntriesWithPos(spark, root, entries, storeSchema,
-        parent.colmap)
+    val matched = tx.scanHead(entries, StoreTxn.Positions)
       .filter(hit)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1214,20 +957,17 @@ object Snapshots {
           s"updateWhereMor: SET ${b.name} yields ${u.dataType} but " +
             s"the pinned column is ${b.dataType} — cast explicitly")
       }
-      validateBatch(spark, root, url, updated)
+      validateBatch(tx, updated)
       // delete side: matched positions + prior deletions of the
       // affected files (the [[morDelete]] chain contract)
       val hits = matched.select(col(DvFileCol).as("__dv_file"),
         col(DvPosCol).as("__dv_pos"))
-      val allDel = (hits +: carriedPositions(spark, root, entries,
+      val allDel = (hits +: carriedPositions(tx, entries,
         affectedData)).reduce(_ unionByName _)
       // the updated images land clustered on the range field (they
       // span exactly the range's band — one narrow-band file)
-      val fresh = writeFiles(spark, root, updated,
-        parent.version + 1, 1, clusterBy = Some(r.field),
-        colmap = parent.colmap)
-      commitMor(spark, fs, root, parent, "morupdate", affectedData,
-        allDel, fresh, storeSchema)
+      val fresh = tx.stage(updated, 1, clusterBy = Some(r.field))
+      commitMor(tx, "morupdate", affectedData, allDel, fresh)
     } finally matched.unpersist()
   }
 
@@ -1241,18 +981,14 @@ object Snapshots {
     * (the current one when nothing carries a vector). */
   def purgeDv(spark: SparkSession, url: String,
       clusterBy: Option[String] = None): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+    val tx = StoreTxn.open(spark, url)
+    val parent = tx.head
     val dvd = parent.files.filter(_.contains(DvSep))
     if (dvd.isEmpty) return parent.version
-    val schema = schemaOf(spark, root, parent)
-    val eff = readEntriesEff(spark, root, dvd, schema, parent.colmap)
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, eff, v,
-      math.max(1, dvd.length), clusterBy, parent.colmap)
-    commit(spark, root, v, "purgedv",
-      parent.files.filterNot(dvd.toSet) ++ rewritten, Some(schema),
-      parent.colmap, parent.dropped)
+    val rewritten = tx.stage(tx.scanHead(dvd), math.max(1, dvd.length),
+      clusterBy)
+    tx.commit("purgedv",
+      parent.files.filterNot(dvd.toSet) ++ rewritten, tx.schema)
   }
 
   /** Copy-on-write range UPDATE — `UPDATE store SET c = expr WHERE
@@ -1271,18 +1007,14 @@ object Snapshots {
     * version — the CURRENT one when no row matches (true no-op,
     * nothing committed). */
   def updateWhere(spark: SparkSession, url: String, r: KeyRange,
-      set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    updateInFiles(spark, url, parentV, r,
-      pruneEntries(spark, url, parentV, Seq(r)), set)
-  }
+      set: Map[String, Column]): Int =
+    updateWhere(StoreTxn.open(spark, url), r, set)
 
-  private def updateInFiles(spark: SparkSession, url: String,
-      parentV: Int, r: KeyRange, files: Seq[String],
+  private[sources] def updateWhere(tx: StoreTxn, r: KeyRange,
       set: Map[String, Column]): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
+    val files = pruneEntries(tx, tx.head, Seq(r))
+    val parent = tx.head
+    val storeSchema = tx.schema
     require(set.nonEmpty, "updateWhere: empty SET clause")
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhere: SET names unknown column $c — updates never " +
@@ -1290,8 +1022,7 @@ object Snapshots {
     rangeTypeGate("updateWhere", storeSchema, r)
     if (files.isEmpty) return parent.version
     val names = files.toSet
-    val scanned = readEntriesEff(spark, root, files, storeSchema,
-        parent.colmap)
+    val scanned = tx.scanHead(files)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val hit = coalesce(r.residual(storeSchema), lit(false))
@@ -1309,19 +1040,16 @@ object Snapshots {
       }
       // constraints re-checked on the rows that actually changed
       // (pred evaluated on PRE-update values, set applied after)
-      validateBatch(spark, root, url,
+      validateBatch(tx,
         scanned.filter(hit).select(storeSchema.fieldNames.map(c =>
           set.get(c).map(_.as(c)).getOrElse(col(c))): _*))
-      val v = parent.version + 1
       // re-cluster on the range field: rewrites merge several input
       // files, and a round-robin layout would hand each output file
-      // a full-width band (the deleteFromFiles rationale)
-      val rewritten = writeFiles(spark, root, updated, v,
-        math.max(1, files.length), clusterBy = Some(r.field),
-        colmap = parent.colmap)
-      commit(spark, root, v, "update",
-        parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
-        parent.colmap, parent.dropped)
+      // a full-width band (the deleteWhere rationale)
+      val rewritten = tx.stage(updated, math.max(1, files.length),
+        clusterBy = Some(r.field))
+      tx.commit("update",
+        parent.files.filterNot(names) ++ rewritten, storeSchema)
     } finally scanned.unpersist()
   }
 
@@ -1329,15 +1057,20 @@ object Snapshots {
     * its pinned schema — files older than an evolved column read it
     * as null; schema resolution never opens a data file. */
   def readAsOf(spark: SparkSession, url: String, version: Int): DataFrame = {
-    val (_, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
+    val tx = StoreTxn.open(spark, url)
+    readAsOf(tx, tx.at(version))
+  }
+
+  /** [[readAsOf]] of a manifest `tx` already resolved. */
+  private[sources] def readAsOf(tx: StoreTxn, s: Snap): DataFrame = {
+    val spark = tx.spark
     // an all-delete upsert legitimately commits ZERO files; with a
     // pinned schema the version reads as an empty frame (so read/
     // changes/cluster keep working) — only a schemaless-AND-fileless
     // manifest is unreadable
     if (s.files.isEmpty) {
       require(s.schema.isDefined,
-        s"v$version of $url is empty with no pinned schema")
+        s"v${s.version} of ${tx.url} is empty with no pinned schema")
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         s.schema.get)
@@ -1346,16 +1079,17 @@ object Snapshots {
       // merge-on-read entries anti-join their deleted positions at
       // scan; renamed columns scan physically and present logically;
       // plain un-renamed versions keep their direct batch scan
-      return readEntriesEff(spark, root, s.files,
-        schemaOf(spark, root, s), s.colmap)
+      return tx.scan(s.files, tx.schemaOf(s), s.colmap)
     val reader = s.schema
       .map(spark.read.schema).getOrElse(spark.read)
-    reader.parquet(s.files.map(f => new Path(root, f).toString): _*)
+    reader.parquet(s.files.map(tx.path): _*)
   }
 
   /** Read the latest committed version. */
-  def read(spark: SparkSession, url: String): DataFrame =
-    readAsOf(spark, url, latest(spark, url))
+  def read(spark: SparkSession, url: String): DataFrame = {
+    val tx = StoreTxn.open(spark, url)
+    readAsOf(tx, tx.head)
+  }
 
   /** Change-data feed between two committed versions, computed from
     * the MANIFEST DIFF: only files added or dropped between `fromV`
@@ -1382,16 +1116,21 @@ object Snapshots {
     * aggregate needs (−old +new); see
     * [[MaterializedView.applyCdc]]. */
   def changes(spark: SparkSession, url: String, keyCol: String,
-      fromV: Int, toV: Int, includeOld: Boolean): DataFrame = {
+      fromV: Int, toV: Int, includeOld: Boolean): DataFrame =
+    changes(StoreTxn.open(spark, url), keyCol, fromV, toV, includeOld)
+
+  private[sources] def changes(tx: StoreTxn, keyCol: String, fromV: Int,
+      toV: Int, includeOld: Boolean): DataFrame = {
     require(fromV < toV, s"changes needs fromV < toV, got $fromV..$toV")
-    val (_, root) = fsOf(spark, url)
-    val fromSnap = snap(spark, url, fromV)
+    val spark = tx.spark
+    val url = tx.url
+    val fromSnap = tx.at(fromV)
     val a = fromSnap.files.toSet
-    val toSnap = snap(spark, url, toV)
+    val toSnap = tx.at(toV)
     val b = toSnap.files.toSet
     val droppedF = (a -- b).toSeq.sorted
     val addedF = (b -- a).toSeq.sorted
-    val schema = readAsOf(spark, url, toV).schema
+    val schema = readAsOf(tx, toSnap).schema
     // both sides read under toV's schema, so a feed crossing an
     // evolution boundary sees the old rows' new column as null
     // instead of a resolution error. Entries read EFFECTIVE rows: a
@@ -1424,7 +1163,7 @@ object Snapshots {
     val dropColmap: Map[String, String] =
       if (droppedF.isEmpty) toSnap.colmap
       else {
-        val fromSchema = schemaOf(spark, root, fromSnap)
+        val fromSchema = tx.schemaOf(fromSnap)
         val fromNames = fromSchema.fieldNames.toSet
         // the shortcut needs BOTH equal colmaps and equal logical
         // name sets: a rename + overwrite inside the range leaves
@@ -1438,7 +1177,7 @@ object Snapshots {
         // manifest could hide a rename and silently misclassify a
         // column as added-in-range (nulls) — refuse instead
         val rangeOps = ((fromV + 1) to toV).map { vv =>
-          try snap(spark, url, vv).op
+          try tx.at(vv).op
           catch { case _: Exception => sys.error(
             s"changes($fromV, $toV) on $url: v$vv's manifest is " +
               "unreadable (vacuumed?) while the colmap lineage " +
@@ -1494,7 +1233,7 @@ object Snapshots {
         cm: Map[String, String]): DataFrame =
       if (entries.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else readEntriesEff(spark, root, entries, schema, cm)
+      else tx.scan(entries, schema, cm)
     val added = readOr(addedF, toSnap.colmap)
     val dropped = readOr(droppedF, dropColmap)
     val valueCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
@@ -1565,10 +1304,11 @@ object Snapshots {
     * SQL write commands DISCOVER this location ([[discoverBloom]])
     * — a store that maintains it gets O(changed files) SQL MERGE
     * instead of a whole-store rewrite. */
-  def bloomSidecarUrl(spark: SparkSession, url: String): String = {
-    val (_, root) = fsOf(spark, url)
-    new Path(new Path(root, "_bloom"), "keybloom").toString
-  }
+  def bloomSidecarUrl(spark: SparkSession, url: String): String =
+    bloomPath(new Path(url)).toString
+
+  private def bloomPath(root: Path) =
+    new Path(new Path(root, "_bloom"), "keybloom")
 
   /** Build or incrementally refresh the conventional key-bloom
     * sidecar for `fields` ([[RowGroupIndex.updateBloom]] semantics:
@@ -1581,11 +1321,9 @@ object Snapshots {
   def indexBloom(spark: SparkSession, url: String,
       fields: Seq[String], expectedPerFile: Long = 100000L,
       fpp: Double = 0.01): Unit = {
-    val (_, root) = fsOf(spark, url)
-    val live = snap(spark, url, latest(spark, url)).files
-      .map(e => new Path(root, splitEntry(e)._1).toString).distinct
-    RowGroupIndex.refreshBloom(spark, live, fields,
-      bloomSidecarUrl(spark, url), expectedPerFile, fpp)
+    val tx = StoreTxn.open(spark, url)
+    tx.refreshBloom(fields, bloomPath(tx.root).toString,
+      expectedPerFile, fpp)
   }
 
   /** Incrementally refresh whichever CONVENTIONAL sidecars the store
@@ -1602,37 +1340,29 @@ object Snapshots {
     * (statsRefreshed, bloomRefreshed). */
   def refreshSidecars(spark: SparkSession,
       url: String): (Boolean, Boolean) = {
-    val (fs, root) = fsOf(spark, url)
-    val head = snap(spark, url, latest(spark, url))
-    val schema = schemaOf(spark, root, head)
+    val tx = StoreTxn.open(spark, url)
+    val schema = tx.schema
     val physToLogical = schema.fieldNames.toSeq
-      .map(l => head.phys(l) -> l).toMap
-    val stats = {
-      val sp = statsPath(root)
-      if (!fs.exists(sp)) false
-      else {
-        val known = spark.read.parquet(sp.toString)
-          .select("field").distinct().collect()
-          .map(_.getString(0)).toSeq
-        val logical = known.flatMap(physToLogical.get)
-        if (logical.size != known.size || logical.isEmpty) false
-        else { indexStats(spark, url, logical.sorted); true }
-      }
+      .map(l => tx.head.phys(l) -> l).toMap
+    val stats = indexedFields(tx, statsPath(tx.root)).exists { known =>
+      val logical = known.flatMap(physToLogical.get)
+      logical.size == known.size && logical.nonEmpty &&
+        { indexStats(tx, logical.sorted); true }
     }
-    val bloom = {
-      val bp = new Path(new Path(root, "_bloom"), "keybloom")
-      if (!fs.exists(bp)) false
-      else {
-        val fields = spark.read.parquet(bp.toString)
-          .select("field").distinct().collect()
-          .map(_.getString(0)).toSeq
-        if (fields.isEmpty ||
-            !fields.forall(schema.fieldNames.contains)) false
-        else { indexBloom(spark, url, fields.sorted); true }
-      }
+    val bp = bloomPath(tx.root)
+    val bloom = indexedFields(tx, bp).exists { fields =>
+      fields.nonEmpty && fields.forall(schema.fieldNames.contains) &&
+        { tx.refreshBloom(fields.sorted, bp.toString); true }
     }
     (stats, bloom)
   }
+
+  /** The fields a sidecar at `p` indexes; None when it does not
+    * exist. */
+  private def indexedFields(tx: StoreTxn, p: Path): Option[Seq[String]] =
+    if (!tx.fs.exists(p)) None
+    else Some(tx.spark.read.parquet(p.toString)
+      .select("field").distinct().collect().map(_.getString(0)).toSeq)
 
   /** Discover the conventional bloom sidecar for `field`:
     * Some(indexUrl) iff the sidecar exists AND carries rows for the
@@ -1642,11 +1372,14 @@ object Snapshots {
     * safe inside [[stageUpsert]]'s coverage guard — uncovered files
     * are conservatively affected. */
   def discoverBloom(spark: SparkSession, url: String,
+      field: String): Option[String] =
+    discoverBloom(StoreTxn.open(spark, url), field)
+
+  private[sources] def discoverBloom(tx: StoreTxn,
       field: String): Option[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val p = new Path(new Path(root, "_bloom"), "keybloom")
-    if (!fs.exists(p)) return None
-    if (spark.read.parquet(p.toString)
+    val p = bloomPath(tx.root)
+    if (!tx.fs.exists(p)) return None
+    if (tx.spark.read.parquet(p.toString)
         .filter(col("field") === field).take(1).isEmpty) None
     else Some(p.toString)
   }
@@ -1659,12 +1392,8 @@ object Snapshots {
     * ambiguous and resolves None (callers refuse loudly). */
   def bloomKeyField(spark: SparkSession,
       url: String): Option[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val p = new Path(new Path(root, "_bloom"), "keybloom")
-    if (!fs.exists(p)) return None
-    val fields = spark.read.parquet(p.toString)
-      .select("field").distinct().collect().map(_.getString(0))
-    if (fields.length == 1) Some(fields.head) else None
+    val tx = StoreTxn.open(spark, url)
+    indexedFields(tx, bloomPath(tx.root)).collect { case Seq(f) => f }
   }
 
   /** Logical→physical slot map of version `v` — what cross-version
@@ -1672,13 +1401,12 @@ object Snapshots {
     * align a step's columns to a schema pinned at a DIFFERENT
     * version: physical slots are stable from birth, logical names
     * shift under [[renameColumn]]. Manifest-only, no data read. */
-  private[graft] def physMapOf(spark: SparkSession, url: String,
+  private[graft] def physMapOf(tx: StoreTxn,
       v: Int): Map[String, String] = {
-    val (_, root) = fsOf(spark, url)
-    val s = snap(spark, url, v)
+    val s = tx.at(v)
     val names =
       if (s.files.isEmpty && s.schema.isEmpty) s.colmap.keys.toSeq
-      else schemaOf(spark, root, s).fieldNames.toSeq
+      else tx.schemaOf(s).fieldNames.toSeq
     names.map(n => n -> s.phys(n)).toMap
   }
 
@@ -1688,9 +1416,10 @@ object Snapshots {
     * bootstrap batch). */
   def changesStep(spark: SparkSession, url: String, keyCol: String,
       v: Int, includeOld: Boolean = false): DataFrame = {
-    val vs = versions(spark, url)
-    require(vs.contains(v), s"v$v is not a committed version of $url")
-    changesStepFrom(spark, url, keyCol, vs.filter(_ < v).maxOption,
+    val tx = StoreTxn.open(spark, url)
+    require(tx.versions.contains(v),
+      s"v$v is not a committed version of $url")
+    changesStepFrom(tx, keyCol, tx.versions.filter(_ < v).maxOption,
       v, includeOld)
   }
 
@@ -1698,13 +1427,12 @@ object Snapshots {
     * per-version ITERATIONS (changesAll, the streaming source's
     * multi-version batches) call so a k-version walk lists the
     * manifest directory once, not k times. */
-  private[graft] def changesStepFrom(spark: SparkSession, url: String,
-      keyCol: String, priorV: Option[Int], v: Int,
-      includeOld: Boolean): DataFrame =
+  private[graft] def changesStepFrom(tx: StoreTxn, keyCol: String,
+      priorV: Option[Int], v: Int, includeOld: Boolean): DataFrame =
     priorV match {
       case None =>
-        readAsOf(spark, url, v).withColumn("_change", lit("insert"))
-      case Some(p) => changes(spark, url, keyCol, p, v, includeOld)
+        readAsOf(tx, tx.at(v)).withColumn("_change", lit("insert"))
+      case Some(p) => changes(tx, keyCol, p, v, includeOld)
     }
 
   /** The store's ENTIRE history as one change feed: per-version
@@ -1734,11 +1462,10 @@ object Snapshots {
   def changesRange(spark: SparkSession, url: String, keyCol: String,
       fromV: Option[Int], toV: Option[Int],
       includeOld: Boolean = false): DataFrame = {
-    val (_, root) = fsOf(spark, url)
-    val all = versions(spark, url)
-    require(all.nonEmpty, s"no snapshot store at $url")
-    val headSnap = snap(spark, url, all.max)
-    val base = schemaOf(spark, root, headSnap)
+    val tx = StoreTxn.open(spark, url)
+    val all = tx.versions
+    val headSnap = tx.head
+    val base = tx.schema
     val priorOf = all.zip(None +: all.init.map(Some(_))).toMap
     val vs = all.filter(v => fromV.forall(v >= _) && toV.forall(v <= _))
     if (vs.isEmpty)
@@ -1750,13 +1477,12 @@ object Snapshots {
           org.apache.spark.sql.types.StructField("_commit_version",
             org.apache.spark.sql.types.LongType, nullable = false)))
     vs.map { v =>
-      val df = changesStepFrom(spark, url, keyCol, priorOf(v), v,
-        includeOld)
-      val stepSnap = snap(spark, url, v)
+      val df = changesStepFrom(tx, keyCol, priorOf(v), v, includeOld)
+      val stepSnap = tx.at(v)
       val stepNames =
         if (stepSnap.files.isEmpty && stepSnap.schema.isEmpty)
           df.columns.toSeq
-        else schemaOf(spark, root, stepSnap).fieldNames.toSeq
+        else tx.schemaOf(stepSnap).fieldNames.toSeq
       df.select(base.fieldNames.toSeq.map { f =>
         val phys = headSnap.phys(f)
         stepNames.find(n => stepSnap.phys(n) == phys) match {
@@ -1771,10 +1497,8 @@ object Snapshots {
   /** The head version's pinned LOGICAL schema — manifest (or file
     * footer) resolution only, no data read. */
   def headSchema(spark: SparkSession,
-      url: String): org.apache.spark.sql.types.StructType = {
-    val (_, root) = fsOf(spark, url)
-    schemaOf(spark, root, snap(spark, url, latest(spark, url)))
-  }
+      url: String): org.apache.spark.sql.types.StructType =
+    StoreTxn.open(spark, url).schema
 
   /** SQL store-assignment semantics shared by the SET paths
     * ([[updateWhereCond]] internally; [[GraftDml]]'s banded route
@@ -1815,15 +1539,15 @@ object Snapshots {
     * general-predicate flavors' exact containment attribution, so
     * the SQL paths route banded only when this holds. */
   def statsCovers(spark: SparkSession, url: String,
-      field: String): Boolean = {
-    val (fs, root) = fsOf(spark, url)
-    val sp = statsPath(root)
-    if (!fs.exists(sp)) return false
-    val head = snap(spark, url, latest(spark, url))
-    if (!schemaOf(spark, root, head).fieldNames.contains(field))
-      return false
-    spark.read.parquet(sp.toString)
-      .filter(col("field") === head.phys(field)).take(1).nonEmpty
+      field: String): Boolean =
+    statsCovers(StoreTxn.open(spark, url), field)
+
+  private[sources] def statsCovers(tx: StoreTxn, field: String): Boolean = {
+    val sp = statsPath(tx.root)
+    if (!tx.fs.exists(sp)) return false
+    if (!tx.schema.fieldNames.contains(field)) return false
+    tx.spark.read.parquet(sp.toString)
+      .filter(col("field") === tx.head.phys(field)).take(1).nonEmpty
   }
 
   /** Band prefix length for string statistics, in Unicode code
@@ -1905,14 +1629,15 @@ object Snapshots {
     *
     * Returns the number of files scanned this call. */
   def indexStats(spark: SparkSession, url: String,
-      fields: Seq[String]): Int = {
+      fields: Seq[String]): Int =
+    indexStats(StoreTxn.open(spark, url), fields)
+
+  private def indexStats(tx: StoreTxn, fields: Seq[String]): Int = {
     require(fields.nonEmpty, "indexStats needs at least one field")
-    val (fs, root) = fsOf(spark, url)
-    val vs = versions(spark, url)
-    require(vs.nonEmpty, s"no snapshot store at $url")
+    val (spark, fs, root) = (tx.spark, tx.fs, tx.root)
     import org.apache.spark.sql.types._
-    val head = snap(spark, url, vs.max)
-    val schema = schemaOf(spark, root, head)
+    val head = tx.head
+    val schema = tx.schema
     val strFields: Set[String] = fields.flatMap { f =>
       require(schema.fieldNames.contains(f),
         s"indexStats: no column $f in the store schema")
@@ -1926,7 +1651,7 @@ object Snapshots {
             "columns can be indexed")
       }
     }.toSet
-    val allFiles = vs.flatMap(v => snap(spark, url, v).files).distinct
+    val allFiles = tx.versions.flatMap(v => tx.at(v).files).distinct
     val sp = statsPath(root)
     val existing: Option[DataFrame] =
       if (fs.exists(sp)) Some(spark.read.parquet(sp.toString)) else None
@@ -1984,8 +1709,7 @@ object Snapshots {
     // its EFFECTIVE rows — so bands, row counts and per-file sums
     // stay EXACT after a merge-on-read delete, and the same data
     // file can carry one row per DV generation it appears under
-    val scanned = readEntriesTagged(spark, root, fresh, schema,
-        "__entry", head.colmap)
+    val scanned = tx.scanHead(fresh, StoreTxn.EntryTag("__entry"))
       .select(col("__entry").as("__f"),
         explode(array(perField: _*)).as("e"))
       .groupBy(col("__f"), col("e.field").as("field"))
@@ -2060,12 +1784,11 @@ object Snapshots {
   /** Load the sidecar's bands for `fields`, keyed field → file →
     * band. None = no sidecar (read everything). Legacy sidecars
     * without the string-band columns read as null string sides. */
-  private def loadBands(spark: SparkSession, fs:
-      org.apache.hadoop.fs.FileSystem, root: Path,
+  private def loadBands(tx: StoreTxn,
       fields: Seq[String]): Option[Map[String, Map[String, Band]]] = {
-    val sp = statsPath(root)
-    if (!fs.exists(sp)) return None
-    val df0 = spark.read.parquet(sp.toString)
+    val sp = statsPath(tx.root)
+    if (!tx.fs.exists(sp)) return None
+    val df0 = tx.spark.read.parquet(sp.toString)
       .filter(col("field").isin(fields: _*))
     val df = if (df0.columns.contains("min_s")) df0
       else df0.withColumn("min_s", lit(null).cast("string"))
@@ -2130,13 +1853,11 @@ object Snapshots {
     * `(field, test)`. The conservatism contract lives here once: no
     * sidecar → read everything; file without a stats row → must
     * read; all-null band → a value predicate never hits. */
-  private def pruneBy(spark: SparkSession, url: String, version: Int,
+  private def pruneBy(tx: StoreTxn, s: Snap,
       tests: Seq[(String, Band => Boolean)]): Seq[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
     // the sidecar keys fields physically (rename-proof)
     val fields = tests.map(t => s.phys(t._1)).distinct
-    loadBands(spark, fs, root, fields) match {
+    loadBands(tx, fields) match {
       case None => s.files
       case Some(byField) =>
         val perTest = tests.map { case (field, hits) =>
@@ -2156,20 +1877,10 @@ object Snapshots {
 
   /** The entries of `version` that can hold a row inside EVERY range
     * of the conjunction. */
-  private def pruneEntries(spark: SparkSession, url: String,
-      version: Int, ranges: Seq[KeyRange]): Seq[String] = {
+  private def pruneEntries(tx: StoreTxn, s: Snap,
+      ranges: Seq[KeyRange]): Seq[String] = {
     require(ranges.nonEmpty, "range pruning needs at least one range")
-    pruneBy(spark, url, version, ranges.map(r => r.field -> bandHits(r) _))
-  }
-
-  /** Surviving entries in the public path form (one string per
-    * manifest ENTRY — on a merge-on-read store a composite entry's
-    * path form exists nowhere on disk; read survivors through
-    * [[readEntryPaths]], never raw `spark.read`). */
-  private def entryPaths(spark: SparkSession, url: String,
-      entries: Seq[String]): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    entries.map(f => new Path(root, f).toString)
+    pruneBy(tx, s, ranges.map(r => r.field -> bandHits(r) _))
   }
 
   /** The subset of `version`'s files that can contain a row inside
@@ -2181,10 +1892,15 @@ object Snapshots {
     * skipped: a range predicate cannot match NULL. String bands are
     * truncated prefixes, so survival is conservative; the caller's
     * residual keeps reads exact. On a [[zcluster]]ed store each range
-    * prunes independently. Returns absolute paths. */
+    * prunes independently. Returns one absolute path per manifest
+    * ENTRY: a merge-on-read composite entry's path exists nowhere on
+    * disk, so read survivors through [[readEntryPaths]], never a raw
+    * `spark.read`. */
   def prunedFiles(spark: SparkSession, url: String, version: Int,
-      ranges: Seq[KeyRange]): Seq[String] =
-    entryPaths(spark, url, pruneEntries(spark, url, version, ranges))
+      ranges: Seq[KeyRange]): Seq[String] = {
+    val tx = StoreTxn.open(spark, url)
+    pruneEntries(tx, tx.at(version), ranges).map(tx.path)
+  }
 
   /** [[prunedFiles]] for one [[LongRange]] — the long-hand form. */
   def prunedFiles(spark: SparkSession, url: String, version: Int,
@@ -2203,13 +1919,12 @@ object Snapshots {
     * 100k. One call answers `price IN [lo,hi] AND name IN [a,b]`. */
   def readWhere(spark: SparkSession, url: String, ranges: Seq[KeyRange],
       version: Int): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    val entries = pruneEntries(spark, url, v, ranges)
-    val root = fsOf(spark, url)._2
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
-    if (entries.isEmpty) readAsOf(spark, url, v).filter(lit(false))
-    else readEntriesEff(spark, root, entries, schema, s.colmap)
+    val tx = StoreTxn.open(spark, url)
+    val s = tx.resolve(version)
+    val entries = pruneEntries(tx, s, ranges)
+    val schema = tx.schemaOf(s)
+    if (entries.isEmpty) readAsOf(tx, s).filter(lit(false))
+    else tx.scan(entries, schema, s.colmap)
       .filter(ranges.map(_.residual(schema)).reduce(_ && _))
   }
 
@@ -2224,15 +1939,11 @@ object Snapshots {
     * [[indexStats]] to turn the layout into file skipping. */
   def cluster(spark: SparkSession, url: String, field: String,
       nFiles: Int = 8): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    val df = readAsOf(spark, url, parent.version)
+    val tx = StoreTxn.open(spark, url)
+    val df = readAsOf(tx, tx.head)
     require(df.columns.contains(field), s"no column $field to cluster on")
-    val v = parent.version + 1
-    commit(spark, root, v, "cluster",
-      writeFiles(spark, root, df, v, nFiles, clusterBy = Some(field),
-        colmap = parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    tx.commit("cluster", tx.stage(df, nFiles, clusterBy = Some(field)),
+      df.schema)
   }
 
   /** Multi-dimensional maintenance rewrite: re-lay the live rows
@@ -2244,18 +1955,14 @@ object Snapshots {
     * on out-of-range rather than folding into a wrong cell). */
   def zcluster(spark: SparkSession, url: String, bits: Int,
       fields: Seq[String], nFiles: Int = 8): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    val df = readAsOf(spark, url, parent.version)
+    val tx = StoreTxn.open(spark, url)
+    val df = readAsOf(tx, tx.head)
     fields.foreach(f => require(df.columns.contains(f),
       s"no column $f to z-order on"))
     val z = graft.ops.Zorder.zvalue(bits, fields.map(col): _*)
     val arranged = df.repartitionByRange(math.max(1, nFiles), z)
       .sortWithinPartitions(z)
-    val v = parent.version + 1
-    commit(spark, root, v, "zcluster",
-      writeArranged(spark, root, arranged, v, parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    tx.commit("zcluster", tx.stageArranged(arranged), df.schema)
   }
 
   /** File pruning for a KEY SET — the CDC-invalidation shape
@@ -2270,7 +1977,8 @@ object Snapshots {
       version: Int, field: String, keys: Seq[Long]): Seq[String] = {
     if (keys.isEmpty) return Seq.empty
     val sorted = keys.distinct.sorted.toArray
-    entryPaths(spark, url, pruneBy(spark, url, version, Seq(field -> {
+    val tx = StoreTxn.open(spark, url)
+    pruneBy(tx, tx.at(version), Seq(field -> {
       b =>
         val (mn, mx) = longSide(field, b)
         // any probed key inside [mn,mx]? binary search for the first
@@ -2281,7 +1989,7 @@ object Snapshots {
           if (sorted(mid) < mn) lo = mid + 1 else hi = mid
         }
         lo < sorted.length && sorted(lo) <= mx
-    })))
+    })).map(tx.path)
   }
 
   /** [[prunedFilesForKeys]] for a STRING key column: a file
@@ -2293,7 +2001,8 @@ object Snapshots {
       version: Int, field: String, keys: Seq[String]): Seq[String] = {
     if (keys.isEmpty) return Seq.empty
     val sorted = keys.distinct.sortWith(cpCompare(_, _) < 0).toArray
-    entryPaths(spark, url, pruneBy(spark, url, version, Seq(field -> {
+    val tx = StoreTxn.open(spark, url)
+    pruneBy(tx, tx.at(version), Seq(field -> {
       b =>
         val (mn, mx) = strSide(field, b)
         // first key >= mn, then check it is <= the upper bound
@@ -2303,7 +2012,7 @@ object Snapshots {
           if (cpCompare(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
         }
         lo < sorted.length && mx.forall(cpCompare(sorted(lo), _) <= 0)
-    })))
+    })).map(tx.path)
   }
 
   /** Exact `SELECT count(*) WHERE r` that opens only band-STRADDLING
@@ -2321,21 +2030,20 @@ object Snapshots {
     * scan subset. */
   def countWhere(spark: SparkSession, url: String, r: KeyRange,
       version: Int = -1): (Long, Int) = {
-    val (fs, root) = fsOf(spark, url)
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
+    val tx = StoreTxn.open(spark, url)
+    val s = tx.resolve(version)
+    val schema = tx.schemaOf(s)
     flavorGate("countWhere", schema, r)
     def scanCount(entries: Seq[String]): Long =
       if (entries.isEmpty) 0L
-      else readEntriesEff(spark, root, entries, schema, s.colmap)
+      else tx.scan(entries, schema, s.colmap)
         .filter(r.residual(schema)).count()
-    val sp = statsPath(root)
-    val hasCounts = fs.exists(sp) &&
+    val sp = statsPath(tx.root)
+    val hasCounts = tx.fs.exists(sp) &&
       spark.read.parquet(sp.toString).columns.contains("n_rows")
     if (!hasCounts) {
       // conservative fallback: band-prune if possible, scan-count
-      val admitted = pruneEntries(spark, url, v, Seq(r))
+      val admitted = pruneEntries(tx, s, Seq(r))
       return (scanCount(admitted), admitted.size)
     }
     // one sidecar read: band + row/null counts per covered file
@@ -2387,10 +2095,9 @@ object Snapshots {
     * freshness. */
   def aggWhere(spark: SparkSession, url: String, field: String,
       lo: Long, hi: Long, version: Int = -1): RangeAgg = {
-    val (fs, root) = fsOf(spark, url)
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
+    val tx = StoreTxn.open(spark, url)
+    val s = tx.resolve(version)
+    val schema = tx.schemaOf(s)
     require(schema.fieldNames.contains(field),
       s"aggWhere: no column $field in the store schema")
     import org.apache.spark.sql.types._
@@ -2407,7 +2114,7 @@ object Snapshots {
       if (entries.isEmpty) (0L, BigDecimal(0), None, None)
       else {
         val vc = KeyRange.bandLong(col(field), schema(field).dataType)
-        val r = readEntriesEff(spark, root, entries, schema, s.colmap)
+        val r = tx.scan(entries, schema, s.colmap)
           .filter(range.residual(schema))
           .agg(count(lit(1)).as("n"),
             sum(vc.cast("decimal(38,0)")).as("s"),
@@ -2426,11 +2133,11 @@ object Snapshots {
         (meta._4.toSeq ++ scan._4.toSeq).reduceOption(_ max _),
         scanned)
     val overlapping = bandHits(range) _
-    val sp = statsPath(root)
-    val hasSums = fs.exists(sp) &&
+    val sp = statsPath(tx.root)
+    val hasSums = tx.fs.exists(sp) &&
       spark.read.parquet(sp.toString).columns.contains("sum_v")
     if (!hasSums) {
-      val admitted = pruneEntries(spark, url, v, Seq(range))
+      val admitted = pruneEntries(tx, s, Seq(range))
       return merge((0L, BigDecimal(0), None, None),
         scanAgg(admitted), admitted.size)
     }
@@ -2482,20 +2189,19 @@ object Snapshots {
       clusterBy: Option[String] = None): Int = {
     require(smallBytes > 0 && targetBytes >= smallBytes,
       s"need 0 < smallBytes <= targetBytes")
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+    val tx = StoreTxn.open(spark, url)
+    val parent = tx.head
     // a composite MoR entry sizes by its DATA file (the weight a
     // scan pays); packing it reads effective rows, so compaction of
     // a small DV'd entry also folds its deletion vector away
-    val sized = parent.files.map(f =>
-      f -> fs.getFileStatus(new Path(root, splitEntry(f)._1)).getLen)
+    val sized = parent.files.map(f => f ->
+      tx.fs.getFileStatus(new Path(tx.root, splitEntry(f)._1)).getLen)
     val small = sized.filter(_._2 < smallBytes)
     if (small.size < 2) return parent.version
     val totalSmall = small.map(_._2).sum
     val n = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
-    val schema = schemaOf(spark, root, parent)
-    val read = readEntriesEff(spark, root, small.map(_._1), schema,
-      parent.colmap)
+    val schema = tx.schema
+    val read = tx.scanHead(small.map(_._1))
     // on a clustered store pass its cluster field: a round-robin
     // pack would give every compacted file a full-width stats band
     // and cost the layout its skippability ingest by ingest
@@ -2506,12 +2212,10 @@ object Snapshots {
         read.repartitionByRange(n, col(f)).sortWithinPartitions(col(f))
       case None => read.repartition(n)
     }
-    val v = parent.version + 1
     val smallNames = small.map(_._1).toSet
-    commit(spark, root, v, "compact",
-      parent.files.filterNot(smallNames) ++
-        writeArranged(spark, root, packed, v, parent.colmap),
-      Some(schema), parent.colmap, parent.dropped)
+    tx.commit("compact",
+      parent.files.filterNot(smallNames) ++ tx.stageArranged(packed),
+      schema)
   }
 
   // ------------------------------------------------------------------
@@ -2522,7 +2226,7 @@ object Snapshots {
     * `rename:from->to`) — zero data files touched at any size: the
     * column's PHYSICAL name inside parquet never changes; the
     * manifest's colmap translates at every scan and every write
-    * (the [[writeArranged]] / [[readEntriesEff]] choke points), so
+    * (the [[StoreTxn.stageArranged]] / [[StoreTxn.scan]] choke points), so
     * old versions keep reading their own names and the stats
     * sidecar (keyed physically) stays valid — a range probe on the
     * renamed column still prunes. Refused when a CHECK constraint's
@@ -2532,8 +2236,8 @@ object Snapshots {
     * Tab/newline in names refused (the colmap wire format). */
   def renameColumn(spark: SparkSession, url: String, from: String,
       to: String): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+    val tx = StoreTxn.open(spark, url)
+    val parent = tx.head
     require(parent.schema.isDefined,
       "renameColumn needs a pinned-schema store (pre-pinning legacy " +
         "stores must overwrite first)")
@@ -2555,7 +2259,7 @@ object Snapshots {
     require(to.nonEmpty && !to.contains("\t") && !to.contains("\n") &&
       !from.contains("\t") && !from.contains("\n"),
       "renameColumn: names may not contain tab/newline")
-    val refs = constraints(spark, url).filter { case (_, e) =>
+    val refs = constraints(tx).filter { case (_, e) =>
       ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
         .findFirstIn(e).isDefined }
     require(refs.isEmpty,
@@ -2570,9 +2274,8 @@ object Snapshots {
     // provenance only — sanitized so a quote-bearing column name can
     // never corrupt the self-authored manifest JSON (real names live
     // base64-safe in the pinned schema and the colmap)
-    commit(spark, root, parent.version + 1,
-      s"rename:${opSafe(from)}->${opSafe(to)}",
-      parent.files, Some(newSchema), newColmap, parent.dropped)
+    tx.commit(s"rename:${opSafe(from)}->${opSafe(to)}",
+      parent.files, newSchema, newColmap)
   }
 
   /** Manifest `op`-field sanitizer: ops are provenance strings inside
@@ -2595,8 +2298,8 @@ object Snapshots {
     * legacy stores must overwrite first. */
   def addColumn(spark: SparkSession, url: String, name: String,
       dt: org.apache.spark.sql.types.DataType): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+    val tx = StoreTxn.open(spark, url)
+    val parent = tx.head
     require(parent.schema.isDefined,
       "addColumn needs a pinned-schema store (pre-pinning legacy " +
         "stores must overwrite first)")
@@ -2615,9 +2318,7 @@ object Snapshots {
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields :+ org.apache.spark.sql.types.StructField(
         name, dt, nullable = true))
-    commit(spark, root, parent.version + 1,
-      s"addcol:${opSafe(name)}",
-      parent.files, Some(newSchema), parent.colmap, parent.dropped)
+    tx.commit(s"addcol:${opSafe(name)}", parent.files, newSchema)
   }
 
   /** Drop a LOGICAL column as a METADATA-ONLY commit (op
@@ -2633,8 +2334,9 @@ object Snapshots {
     * column cannot be dropped. */
   def dropColumn(spark: SparkSession, url: String,
       name: String): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
+    val parent = tx.head
     require(parent.schema.isDefined,
       "dropColumn needs a pinned-schema store")
     val schema = parent.schema.get
@@ -2644,7 +2346,7 @@ object Snapshots {
       "dropColumn: cannot drop the last column")
     require(!name.contains("\t") && !name.contains("\n"),
       "dropColumn: names may not contain tab/newline")
-    val refs = constraints(spark, url).filter { case (_, e) =>
+    val refs = constraints(tx).filter { case (_, e) =>
       ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
         .findFirstIn(e).isDefined }
     require(refs.isEmpty,
@@ -2668,10 +2370,8 @@ object Snapshots {
     }
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == name))
-    commit(spark, root, parent.version + 1,
-      s"dropcol:${opSafe(name)}",
-      parent.files, Some(newSchema), parent.colmap - name,
-      parent.dropped :+ phys)
+    tx.commit(s"dropcol:${opSafe(name)}", parent.files, newSchema,
+      parent.colmap - name, parent.dropped :+ phys)
   }
 
   // ------------------------------------------------------------------
@@ -2697,9 +2397,10 @@ object Snapshots {
     require(!exprSql.contains("\"") && !exprSql.contains("\\"),
       "constraint SQL must not contain quotes or backslashes")
     org.apache.spark.sql.functions.expr(exprSql) // parse now, not at write
-    val (fs, root) = fsOf(spark, url)
-    require(versions(spark, url).nonEmpty, s"no snapshot store at $url")
-    val existing = constraints(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
+    require(tx.versions.nonEmpty, s"no snapshot store at $url")
+    val existing = constraints(tx)
     require(!existing.exists(_._1 == name),
       s"constraint '$name' already declared")
     val all = existing :+ (name, exprSql)
@@ -2715,20 +2416,22 @@ object Snapshots {
   }
 
   /** Declared constraints, oldest first. */
-  def constraints(spark: SparkSession, url: String): Seq[(String, String)] = {
-    val (fs, root) = fsOf(spark, url)
-    val p = constraintsPath(root)
-    if (!fs.exists(p)) return Seq.empty
-    val json = SidecarJson.slurp(fs, p)
+  def constraints(spark: SparkSession, url: String): Seq[(String, String)] =
+    constraints(StoreTxn.open(spark, url))
+
+  private def constraints(tx: StoreTxn): Seq[(String, String)] = {
+    val p = constraintsPath(tx.root)
+    if (!tx.fs.exists(p)) return Seq.empty
+    val json = SidecarJson.slurp(tx.fs, p)
     """\{"name":"([^"]+)","expr":"([^"]+)"\}""".r
       .findAllMatchIn(json).map(m => (m.group(1), m.group(2))).toSeq
   }
 
   /** One combined validation pass over a write batch; throws with
     * the first violated constraint's name. */
-  private[sources] def validateBatch(spark: SparkSession, root: Path,
-      url: String, df: DataFrame): Unit = {
-    val cs = constraints(spark, url)
+  private[sources] def validateBatch(tx: StoreTxn,
+      df: DataFrame): Unit = {
+    val cs = constraints(tx)
     if (cs.isEmpty) return
     // applicability matches Spark's own resolution: CASE-INSENSITIVE
     // (a constraint on "ID" must guard a column named "id", not be
@@ -2736,7 +2439,7 @@ object Snapshots {
     // column ("meta.size" is applicable when `meta` is present)
     val cols = df.columns.map(_.toLowerCase).toSet
     val applicable = cs.filter { case (_, e) =>
-      spark.sessionState.sqlParser.parseExpression(e)
+      tx.spark.sessionState.sqlParser.parseExpression(e)
         .references.map(_.name.split("\\.")(0).toLowerCase)
         .forall(cols.contains) }
     if (applicable.isEmpty) return
@@ -2762,9 +2465,9 @@ object Snapshots {
     * files) driver-side metadata, no data file opened. */
   def history(spark: SparkSession, url: String): DataFrame = {
     import spark.implicits._
-    val vs = versions(spark, url)
-    require(vs.nonEmpty, s"no snapshot store at $url")
-    val snaps = vs.map(v => snap(spark, url, v))
+    val tx = StoreTxn.open(spark, url)
+    require(tx.versions.nonEmpty, s"no snapshot store at $url")
+    val snaps = tx.versions.map(tx.at)
     val rows = snaps.zipWithIndex.map { case (s, k) =>
       val parent = if (k == 0) Set.empty[String]
                    else snaps(k - 1).files.toSet
@@ -2785,11 +2488,11 @@ object Snapshots {
     * fail loudly here (no surviving manifest is old enough) instead
     * of resolving to a newer version. */
   def versionAt(spark: SparkSession, url: String, ts: Long): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val vs = versions(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val vs = tx.versions
     require(vs.nonEmpty, s"no snapshot store at $url")
-    val at = vs.filter(v =>
-      fs.getFileStatus(manifestPath(root, v)).getModificationTime <= ts)
+    val at = vs.filter(v => tx.fs.getFileStatus(manifestPath(tx.root, v))
+      .getModificationTime <= ts)
     require(at.nonEmpty,
       s"no version committed at or before $ts (earliest is v${vs.min})")
     at.max
@@ -2805,11 +2508,11 @@ object Snapshots {
     * manifest, but an unbounded sidecar is a metadata leak). Returns
     * rows dropped. */
   def pruneStats(spark: SparkSession, url: String): Long = {
-    val (fs, root) = fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
     val sp = statsPath(root)
     if (!fs.exists(sp)) return 0L
-    val live = versions(spark, url)
-      .flatMap(v => snap(spark, url, v).files).toSet
+    val live = tx.versions.flatMap(v => tx.at(v).files).toSet
     val existing = spark.read.parquet(sp.toString)
     // broadcast anti/semi joins, not an interpreted `contains` UDF
     // (guide §4: codegen'd join probes; the live set is O(files),
@@ -2836,14 +2539,12 @@ object Snapshots {
     * version stays auditable, and in-flight readers are never torn.
     * The op records the provenance (`restore:v<N>`). */
   def restore(spark: SparkSession, url: String, toVersion: Int): Int = {
-    val (_, root) = fsOf(spark, url)
-    val target = snap(spark, url, toVersion)
-    val head = latest(spark, url)
-    require(toVersion != head,
+    val tx = StoreTxn.open(spark, url)
+    val target = tx.at(toVersion)
+    require(toVersion != tx.head.version,
       s"v$toVersion is already the latest version")
-    commit(spark, root, head + 1, s"restore:v$toVersion", target.files,
-      Some(schemaOf(spark, root, target)), target.colmap,
-      target.dropped)
+    tx.commit(s"restore:v$toVersion", target.files,
+      tx.schemaOf(target), target.colmap, target.dropped)
   }
 
   /** Incremental profile diff between two versions, computed from
@@ -2896,7 +2597,7 @@ object Snapshots {
     * Data files are HARD-LINKED on `file://` (zero bytes copied — the
     * dev-branch clone of lakehouse practice) and byte-copied on
     * filesystems without link(2). Divergence is free by construction:
-    * data files are immutable (the [[writeFiles]] contract — every
+    * data files are immutable (the [[StoreTxn.stage]] contract — every
     * commit lands NEW uuid-named files), so neither store can ever
     * write through a shared inode; each side's [[vacuum]] unlinks
     * only its own NAME and the inode survives while any clone still
@@ -2908,11 +2609,12 @@ object Snapshots {
     * on POSIX — cloning a 100k-file store is a metadata pass. */
   def cloneStore(spark: SparkSession, srcUrl: String, dstUrl: String,
       version: Int = -1): Int = {
-    val v = if (version < 0) latest(spark, srcUrl) else version
-    val s = snap(spark, srcUrl, v)
-    val (sfs, srcRoot) = fsOf(spark, srcUrl)
-    val (dfs, dstRoot) = fsOf(spark, dstUrl)
-    require(versions(spark, dstUrl).isEmpty,
+    val src = StoreTxn.open(spark, srcUrl)
+    val dst = StoreTxn.open(spark, dstUrl)
+    val s = if (version < 0) src.head else src.at(version)
+    val (sfs, srcRoot) = (src.fs, src.root)
+    val (dfs, dstRoot) = (dst.fs, dst.root)
+    require(dst.versions.isEmpty,
       s"clone target $dstUrl is already a snapshot store")
     dfs.mkdirs(dstRoot)
     val conf = spark.sessionState.newHadoopConf()
@@ -2958,8 +2660,7 @@ object Snapshots {
           .copy(sfs, from, dfs, to, false, conf),
           s"clone copy failed for $f")
     }
-    commit(spark, dstRoot, 1, "clone", s.files,
-      Some(schemaOf(spark, srcRoot, s)), s.colmap, s.dropped)
+    dst.commit("clone", s.files, src.schemaOf(s), s.colmap, s.dropped)
   }
 
   // ---- named refs (tags): human-named immutable version pins ----
@@ -2976,10 +2677,11 @@ object Snapshots {
     * O(1) metadata: one flat file under `_refs/`, no data touched. */
   def setTag(spark: SparkSession, url: String, name: String,
       version: Int = -1): Int = {
-    val (fs, root) = fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
     require(name.nonEmpty && name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"tag name '$name' must be [A-Za-z0-9._-] with a leading alnum")
-    val vs = versions(spark, url)
+    val vs = tx.versions
     require(vs.nonEmpty, s"no snapshot store at $url")
     val v = if (version > 0) version else vs.max
     require(vs.contains(v), s"setTag: v$v is not a committed version")
@@ -2998,16 +2700,20 @@ object Snapshots {
     * prey again). Refuses an unknown name — a typo'd delete that
     * "succeeds" would leave the caller believing a pin was lifted. */
   def deleteTag(spark: SparkSession, url: String, name: String): Unit = {
-    val (fs, root) = fsOf(spark, url)
-    val p = new Path(refsDir(root), name)
+    val tx = StoreTxn.open(spark, url)
+    val fs = tx.fs
+    val p = new Path(refsDir(tx.root), name)
     require(fs.exists(p), s"no tag '$name' at $url")
     require(fs.delete(p, false), s"delete failed for tag '$name'")
   }
 
   /** All tags as (name, version), name-sorted. O(tags) metadata. */
-  def tags(spark: SparkSession, url: String): Seq[(String, Int)] = {
-    val (fs, root) = fsOf(spark, url)
-    val dir = refsDir(root)
+  def tags(spark: SparkSession, url: String): Seq[(String, Int)] =
+    tags(StoreTxn.open(spark, url))
+
+  private def tags(tx: StoreTxn): Seq[(String, Int)] = {
+    val fs = tx.fs
+    val dir = refsDir(tx.root)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq.filter(_.isFile).map { st =>
       val body = {
@@ -3102,7 +2808,8 @@ object Snapshots {
       parts.foreach { case (url, _, _) => recoverTxns(spark, url) }
       val op = s"txn-append:$key"
       val prior = parts.map { case (url, _, _) =>
-        versions(spark, url).find(v => snap(spark, url, v).op == op)
+        val tx = StoreTxn.open(spark, url)
+        tx.versions.find(v => tx.at(v).op == op)
       }
       if (prior.exists(_.isDefined)) {
         // all-or-nothing: after recovery, a key present anywhere
@@ -3117,26 +2824,23 @@ object Snapshots {
     // validate everything BEFORE staging anything: a refusal here
     // costs zero IO and leaves zero debris
     val resolved = parts.map { case (url, df, nFiles) =>
-      val (_, root) = fsOf(spark, url)
-      val parent = snap(spark, url, latest(spark, url))
-      val schema = schemaOf(spark, root, parent)
+      val tx = StoreTxn.open(spark, url)
       require(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        schema.fields.map(f => (f.name, f.dataType)).toSeq,
+        tx.schema.fields.map(f => (f.name, f.dataType)).toSeq,
         s"commitTogether: batch schema for $url must equal the " +
           s"pinned store schema (no evolution inside a transaction)")
-      validateBatch(spark, root, url, df)
-      (url, df, nFiles, root, parent)
+      validateBatch(tx, df)
+      (tx, df, nFiles)
     }
-    val staged = resolved.map { case (url, df, nFiles, root, parent) =>
-      TxnPart(url, writeFiles(spark, root, df, parent.version + 1,
-        nFiles, colmap = parent.colmap))
+    val staged = resolved.map { case (tx, df, nFiles) =>
+      tx -> TxnPart(tx.url, tx.stage(df, nFiles))
     }
     val plan = TxnPlan(
-      java.util.UUID.randomUUID().toString.take(12), staged,
+      java.util.UUID.randomUUID().toString.take(12), staged.map(_._2),
       commitKey)
     writeTxnMarkers(spark, plan)
-    val vs = plan.parts.map(p =>
-      commitStagedInto(spark, p.url, p.files, key = plan.key))
+    val vs = staged.map { case (tx, p) =>
+      commitStagedInto(tx, p.files, key = plan.key) }
     clearTxnMarkers(spark, plan)
     vs
   }
@@ -3178,16 +2882,16 @@ object Snapshots {
         s"upsertTogether: url ${p.url} — quotes/backslashes " +
           "unsupported") }
     val staged = parts.map { p =>
-      val (_, _, affected, rewritten) = stageUpsert(spark, p.url,
-        p.updates, p.keyCol, p.deleteCol, p.bloomIndexUrl, maxKeys,
-        expectedParentVersion = -1)
-      TxnPart(p.url, rewritten, affected)
+      val tx = StoreTxn.open(spark, p.url)
+      val (affected, rewritten) = stageUpsert(tx, p.updates, p.keyCol,
+        p.deleteCol, p.bloomIndexUrl, maxKeys, expectedParentVersion = -1)
+      tx -> TxnPart(p.url, rewritten, affected)
     }
     val plan = TxnPlan(
-      java.util.UUID.randomUUID().toString.take(12), staged)
+      java.util.UUID.randomUUID().toString.take(12), staged.map(_._2))
     writeTxnMarkers(spark, plan)
-    val vs = plan.parts.map(p =>
-      commitStagedInto(spark, p.url, p.files, p.drops))
+    val vs = staged.map { case (tx, p) =>
+      commitStagedInto(tx, p.files, p.drops) }
     clearTxnMarkers(spark, plan)
     vs
   }
@@ -3202,21 +2906,15 @@ object Snapshots {
     * interleaved — mutation transactions are single-writer per
     * store) refuses loudly rather than un-listing files some other
     * commit owns. */
-  private[sources] def commitStagedInto(spark: SparkSession,
-      url: String, staged: Seq[String],
-      drops: Seq[String] = Nil,
+  private[sources] def commitStagedInto(tx: StoreTxn,
+      staged: Seq[String], drops: Seq[String] = Nil,
       key: Option[String] = None): Int = {
-    val (fs, root) = fsOf(spark, url)
     val stagedSet = staged.toSet
     val opStr = (if (drops.isEmpty) "txn-append" else "txn-upsert") +
       key.map(":" + _).getOrElse("")
-    var attempts = 0
-    var out = -1
-    while (out < 0) {
-      val vs = versions(spark, url)
-      vs.find(v =>
-        stagedSet.subsetOf(snap(spark, url, v).files.toSet)) match {
-        case Some(v) => out = v
+    StoreTxn.retrying(tx) { t =>
+      val vs = t.versions
+      vs.find(v => stagedSet.subsetOf(t.at(v).files.toSet))
         // per-ATTEMPT key re-check (not just the pre-staging scan in
         // commitTogether): two concurrent callers with the same
         // commitKey can both pass the initial check-then-act scan;
@@ -3224,39 +2922,25 @@ object Snapshots {
         // keyed commit HERE and return it instead of double-
         // publishing (the loser's staged files stay invisible,
         // vacuum-collectable orphans) — mirrors commitAppendStaged
-        case _ if key.isDefined &&
-            vs.exists(v => snap(spark, url, v).op == opStr) =>
-          out = vs.filter(v => snap(spark, url, v).op == opStr).min
-        case None =>
+        .orElse(if (key.isEmpty) None
+          else vs.filter(v => t.at(v).op == opStr).minOption)
+        .getOrElse {
           staged.foreach(f =>
-            require(fs.exists(new Path(root, f)),
-              s"staged file $f missing at $url (vacuumed before " +
+            require(t.fs.exists(new Path(t.root, f)),
+              s"staged file $f missing at ${t.url} (vacuumed before " +
                 "recovery?) — transaction cannot complete"))
-          val parent = snap(spark, url, vs.max)
+          val parent = t.head
           val missingDrops = drops.filterNot(parent.files.toSet)
           require(missingDrops.isEmpty,
-            s"txn-upsert at $url: affected file(s) " +
+            s"txn-upsert at ${t.url}: affected file(s) " +
               s"${missingDrops.take(3).mkString(",")} left the " +
               s"manifest at v${parent.version} — a foreign commit " +
               "interleaved with the transaction (mutation " +
               "transactions are single-writer per store)")
-          // retry ONLY the lost-version-race signal from [[commit]]:
-          // a deterministic failure (rename refusal, IO error) must
-          // surface on attempt 1 with its own cause, not be retried
-          // 16 times and replaced by whatever attempt 17 throws
-          try out = commit(spark, root, parent.version + 1, opStr,
-            parent.files.filterNot(drops.toSet) ++ staged,
-            Some(schemaOf(spark, root, parent)),
-            parent.colmap, parent.dropped)
-          catch {
-            case e: RuntimeException
-                if e.getMessage != null && e.getMessage
-                  .startsWith("concurrent commit lost the race") &&
-                  attempts < 16 => attempts += 1
-          }
-      }
+          t.commit(opStr, parent.files.filterNot(drops.toSet) ++ staged,
+            t.schema)
+        }
     }
-    out
   }
 
   private[sources] def writeTxnMarkers(spark: SparkSession,
@@ -3274,9 +2958,9 @@ object Snapshots {
           s"]$dropsField}"
       }.mkString(",") + "]}"
     plan.parts.foreach { p =>
-      val (fs, root) = fsOf(spark, p.url)
-      fs.mkdirs(txnDir(root))
-      val out = fs.create(new Path(txnDir(root), plan.id), false)
+      val tx = StoreTxn.open(spark, p.url)
+      tx.fs.mkdirs(txnDir(tx.root))
+      val out = tx.fs.create(new Path(txnDir(tx.root), plan.id), false)
       try out.write(json.getBytes("UTF-8")) finally out.close()
     }
   }
@@ -3284,15 +2968,18 @@ object Snapshots {
   private def clearTxnMarkers(spark: SparkSession,
       plan: TxnPlan): Unit =
     plan.parts.foreach { p =>
-      val (fs, root) = fsOf(spark, p.url)
-      fs.delete(new Path(txnDir(root), plan.id), false)
+      val tx = StoreTxn.open(spark, p.url)
+      tx.fs.delete(new Path(txnDir(tx.root), plan.id), false)
     }
 
   /** Transactions whose intent journal is still open in this store
     * (crashed mid-[[commitTogether]], or racing right now). */
-  def pendingTxns(spark: SparkSession, url: String): Seq[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val dir = txnDir(root)
+  def pendingTxns(spark: SparkSession, url: String): Seq[String] =
+    pendingTxns(StoreTxn.open(spark, url))
+
+  private def pendingTxns(tx: StoreTxn): Seq[String] = {
+    val fs = tx.fs
+    val dir = txnDir(tx.root)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.filter(_.isFile)
       .map(_.getPath.getName).sorted
@@ -3305,8 +2992,9 @@ object Snapshots {
     * pipeline start and before [[vacuum]]. Returns the number of
     * transactions completed. */
   def recoverTxns(spark: SparkSession, url: String): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val dir = txnDir(root)
+    val tx = StoreTxn.open(spark, url)
+    val fs = tx.fs
+    val dir = txnDir(tx.root)
     if (!fs.exists(dir)) return 0
     val markers = fs.listStatus(dir).toSeq.filter(_.isFile)
     markers.foreach { st =>
@@ -3329,8 +3017,8 @@ object Snapshots {
       require(parts.nonEmpty, s"corrupt txn journal ${st.getPath}")
       val key = """"key"\s*:\s*"([^"]+)"""".r
         .findFirstMatchIn(body).map(_.group(1))
-      parts.foreach(p =>
-        commitStagedInto(spark, p.url, p.files, p.drops, key))
+      parts.foreach(p => commitStagedInto(StoreTxn.open(spark, p.url),
+        p.files, p.drops, key))
       clearTxnMarkers(spark, TxnPlan(id, parts, key))
     }
     markers.size
@@ -3360,13 +3048,12 @@ object Snapshots {
   def statsMinMax(spark: SparkSession, url: String, field: String,
       version: Int = -1): Option[(Option[Long], Option[Long])] = {
     import org.apache.spark.sql.types._
-    val (fs, root) = fsOf(spark, url)
-    val sp = statsPath(root)
-    if (!fs.exists(sp)) return None
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
+    val tx = StoreTxn.open(spark, url)
+    val sp = statsPath(tx.root)
+    if (!tx.fs.exists(sp)) return None
+    val s = tx.resolve(version)
     if (s.files.isEmpty) return Some((None, None))
-    val schema = schemaOf(spark, root, s)
+    val schema = tx.schemaOf(s)
     if (!schema.fieldNames.contains(field)) return None
     schema(field).dataType match {
       case ByteType | ShortType | IntegerType | LongType => ()
@@ -3387,14 +3074,12 @@ object Snapshots {
 
   def rowCountMeta(spark: SparkSession, url: String,
       version: Int = -1): Long = {
-    val (_, root) = fsOf(spark, url)
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
+    val tx = StoreTxn.open(spark, url)
+    val s = tx.resolve(version)
     if (s.files.isEmpty) return 0L
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val dataPaths = s.files
-      .map(e => new Path(root, splitEntry(e)._1).toString)
+    val dataPaths = s.files.map(e => tx.path(splitEntry(e)._1))
     val total = spark.sparkContext
       .parallelize(dataPaths, math.max(1, math.min(dataPaths.size, 64)))
       .map { p =>
@@ -3410,7 +3095,7 @@ object Snapshots {
       .collect { case (d, Some(dv)) => (dv, d) }
       .groupBy(_._1).toSeq.sortBy(_._1)
     val deleted = dvGroups.map { case (dv, grp) =>
-      spark.read.parquet(new Path(root, dv).toString)
+      spark.read.parquet(tx.path(dv))
         .filter(col("__dv_file").isin(grp.map(_._2): _*)).count()
     }.sum
     total - deleted
@@ -3418,31 +3103,32 @@ object Snapshots {
 
   def vacuum(spark: SparkSession, url: String, keepFrom: Int,
       graceMs: Long = 3600L * 1000): (Int, Int) = {
-    val (fs, root) = fsOf(spark, url)
-    val vs = versions(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
+    val vs = tx.versions
     require(vs.contains(keepFrom), s"keepFrom=$keepFrom not a version")
     // an open txn journal means staged-but-uncommitted files that a
     // roll-forward still needs — collecting them would wedge the
     // transaction permanently
-    require(pendingTxns(spark, url).isEmpty,
+    require(pendingTxns(tx).isEmpty,
       s"open transactions at $url — run recoverTxns before vacuum")
     // tagged versions are pinned: their manifests and files survive
     // any keepFrom (the reproducibility contract of [[setTag]])
-    val pinned = tags(spark, url).map(_._2).toSet
+    val pinned = tags(tx).map(_._2).toSet
     def keeps(v: Int): Boolean = v >= keepFrom || pinned.contains(v)
     // reference sets expand composite MoR entries to their PHYSICAL
     // names: a deletion-vector parquet is alive exactly as long as
     // some surviving manifest's entry names it
     val live = vs.filter(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
+      .flatMap(v => tx.at(v).files.flatMap(entryPhysical))
       .toSet
     // files an expiring manifest references die with it; files NO
     // manifest references are either failed-commit debris or an
-    // IN-FLIGHT commit's staged renames (writeFiles lands data files
+    // IN-FLIGHT commit's staged renames (staging lands data files
     // before the manifest) — only the grace window tells them apart,
     // so orphans must outlive it before collection
     val retired = vs.filterNot(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
+      .flatMap(v => tx.at(v).files.flatMap(entryPhysical))
       .toSet -- live
     val cutoff = System.currentTimeMillis() - graceMs
     val onDisk = fs.listStatus(root).toSeq
@@ -3459,8 +3145,9 @@ object Snapshots {
     // documented single-writer, but this narrows the window from
     // the whole vacuum to one listing round-trip — a file any
     // now-visible surviving manifest references is never deleted.
-    val liveNow = versions(spark, url).filter(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
+    val now = StoreTxn.open(spark, url)
+    val liveNow = now.versions.filter(keeps)
+      .flatMap(v => now.at(v).files.flatMap(entryPhysical))
       .toSet
     val safe = doomed.filterNot(st => liveNow.contains(st.getPath.getName))
     safe.foreach(st => require(fs.delete(st.getPath, false),
@@ -3469,7 +3156,7 @@ object Snapshots {
     deadVs.foreach(v => require(fs.delete(manifestPath(root, v), false),
       s"delete failed retiring manifest v$v"))
     // crash-debris sweep beyond root-level data files: a JVM dying
-    // inside writeArranged leaves a `_snap_stage_*` staging DIR, and
+    // inside StoreTxn.stageArranged leaves a `_snap_stage_*` staging DIR, and
     // one dying inside commit leaves a `_snap/_tmp-v*` manifest —
     // neither matched the .parquet file filter above, so without
     // this they leak forever (the documented vacuum contract says

@@ -42,11 +42,6 @@ object VectorIndex {
   private def postingsPath(root: Path) =
     new Path(vecDir(root), "postings")
 
-  private def fsOf(spark: SparkSession, url: String) = {
-    val p = new Path(url)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   /** Build or incrementally refresh the sidecar for the latest
     * version: first call trains `k` centroids from the store's
     * effective rows; every call scans only entries without posting
@@ -55,10 +50,10 @@ object VectorIndex {
   def index(spark: SparkSession, url: String, idCol: String,
       embCol: String, k: Int): Int = {
     require(k > 0, "need k > 0 centroids")
-    val (fs, root) = fsOf(spark, url)
-    val v = Snapshots.latest(spark, url)
-    val s = Snapshots.snap(spark, url, v)
-    val eff = Snapshots.readAsOf(spark, url, v)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
+    val s = tx.head
+    val eff = Snapshots.readAsOf(tx, s)
     require(eff.columns.contains(idCol) && eff.columns.contains(embCol),
       s"vector index needs columns $idCol and $embCol")
     val cp = centroidsPath(root)
@@ -97,9 +92,8 @@ object VectorIndex {
     val freshE = s.files.filterNot(covered)
     if (freshE.isEmpty) return 0
     val schema = eff.schema
-    val tagged = Snapshots
-      .readEntriesTagged(spark, root, freshE, schema, "__entry",
-        s.colmap)
+    val tagged = tx.scan(freshE, schema, s.colmap,
+        StoreTxn.EntryTag("__entry"))
       .filter(col(embCol).isNotNull)
     // codegen'd argmax assignment (zero shuffles) keyed by ENTRY
     val assigned = AnnSearch.ivfAssign(tagged, "__entry", embCol,
@@ -125,8 +119,7 @@ object VectorIndex {
         .parquet(pp.toString)
     else {
       withMarkers.coalesce(1).write.mode("append").parquet(pp.toString)
-      lazy val live = Snapshots.versions(spark, url)
-        .flatMap(vv => Snapshots.snap(spark, url, vv).files).toSet
+      lazy val live = tx.versions.flatMap(vv => tx.at(vv).files).toSet
       SidecarDelta.compactIfNeeded(spark, fs, pp,
         df => df.filter(col("entry").isin(live.toSeq: _*)))
     }
@@ -135,13 +128,12 @@ object VectorIndex {
 
   /** The centroid frame (id, embedding), id-sorted, driver-side —
     * k-small by contract. */
-  private def loadCentroids(spark: SparkSession, root: Path)
+  private def loadCentroids(tx: StoreTxn)
       : Array[(Any, Array[Double])] = {
-    val cp = centroidsPath(root)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(cp),
-      s"no vector index under $root — run VectorIndex.index first")
-    spark.read.parquet(cp.toString)
+    val cp = centroidsPath(tx.root)
+    require(tx.fs.exists(cp),
+      s"no vector index under ${tx.root} — run VectorIndex.index first")
+    tx.spark.read.parquet(cp.toString)
       .select(col("centroid_id"), col("__cemb").cast("array<double>"))
       .collect()
       .map(r => (r.get(0), r.getSeq[Double](1).toArray))
@@ -177,8 +169,8 @@ object VectorIndex {
   def probeCells(spark: SparkSession, url: String,
       queryEmb: Seq[Double], nprobe: Int): Seq[Any] = {
     require(nprobe > 0)
-    val (_, root) = fsOf(spark, url)
-    rankedCells(loadCentroids(spark, root), quantize(queryEmb), nprobe)
+    rankedCells(loadCentroids(StoreTxn.open(spark, url)),
+      quantize(queryEmb), nprobe)
   }
 
   /** ONE postings-sidecar read → the raw (entry, bucket, n) rows.
@@ -186,20 +178,19 @@ object VectorIndex {
     * the postings ([[loadPostings]], [[health]]'s mass histogram)
     * derives from this single collect — never a second sidecar
     * scan. */
-  private def loadPostingRows(spark: SparkSession, root: Path)
+  private def loadPostingRows(tx: StoreTxn)
       : Option[Array[org.apache.spark.sql.Row]] = {
-    val pp = postingsPath(root)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(pp)) return None
-    Some(spark.read.parquet(pp.toString)
+    val pp = postingsPath(tx.root)
+    if (!tx.fs.exists(pp)) return None
+    Some(tx.spark.read.parquet(pp.toString)
       .select(col("entry"), col("bucket"), col("n")).collect())
   }
 
   /** (covered entry set, entry → posted cells); None when the
     * sidecar does not exist. */
-  private def loadPostings(spark: SparkSession, root: Path)
+  private def loadPostings(tx: StoreTxn)
       : Option[(Set[String], Map[String, Set[Any]])] =
-    loadPostingRows(spark, root).map { rows =>
+    loadPostingRows(tx).map { rows =>
       val covered = rows.map(_.getString(0)).toSet
       val posted = rows
         .filter(r => !r.isNullAt(2) && r.getLong(2) > 0L)
@@ -208,9 +199,9 @@ object VectorIndex {
       (covered, posted)
     }
 
-  private def pruneByCells(spark: SparkSession, root: Path,
+  private def pruneByCells(tx: StoreTxn,
       entries: Seq[String], cells: Set[Any]): Seq[String] =
-    loadPostings(spark, root) match {
+    loadPostings(tx) match {
       case None => entries
       case Some((covered, posted)) => entries.filter { e =>
         if (!covered.contains(e)) true // sidecar lag: must read
@@ -224,10 +215,10 @@ object VectorIndex {
     * driver work off one sidecar read. */
   def prunedEntries(spark: SparkSession, url: String, version: Int,
       queryEmb: Seq[Double], nprobe: Int): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    val s = Snapshots.snap(spark, url, version)
-    pruneByCells(spark, root, s.files,
-      probeCells(spark, url, queryEmb, nprobe).toSet)
+    require(nprobe > 0)
+    val tx = StoreTxn.open(spark, url)
+    pruneByCells(tx, tx.at(version).files, rankedCells(
+      loadCentroids(tx), quantize(queryEmb), nprobe).toSet)
   }
 
   /** ANN search, exact over the probed cells: prune entries through
@@ -242,15 +233,13 @@ object VectorIndex {
       embCol: String, queryEmb: Seq[Double], topK: Int,
       nprobe: Int, version: Int = -1): DataFrame = {
     require(topK > 0 && nprobe > 0)
-    val (_, root) = fsOf(spark, url)
-    val v = if (version > 0) version else Snapshots.latest(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val v = tx.resolve(version).version
     // one centroid read and one postings read serve the whole query
-    val centRows = loadCentroids(spark, root)
+    val centRows = loadCentroids(tx)
     val cells = rankedCells(centRows, quantize(queryEmb), nprobe).toSet
-    val entries = pruneByCells(spark, root,
-      Snapshots.snap(spark, url, v).files, cells)
-    val base = Snapshots.readEntryPaths(spark, url, v,
-      entries.map(e => new Path(root, e).toString))
+    val entries = pruneByCells(tx, tx.at(v).files, cells)
+    val base = Snapshots.readEntryPaths(tx, v, entries.map(tx.path))
       .filter(col(embCol).isNotNull && col(idCol).isNotNull)
     val centroids = centroidFrame(spark, centRows,
       base.schema(idCol).dataType)
@@ -323,12 +312,11 @@ object VectorIndex {
       qEmbCol: String, topK: Int, nprobe: Int,
       version: Int = -1): DataFrame = {
     require(topK > 0 && nprobe > 0)
-    val (_, root) = fsOf(spark, url)
-    val v = if (version > 0) version else Snapshots.latest(spark, url)
-    val cp = centroidsPath(root)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(cp),
-      s"no vector index under $root — run VectorIndex.index first")
+    val tx = StoreTxn.open(spark, url)
+    val v = tx.resolve(version).version
+    val cp = centroidsPath(tx.root)
+    require(tx.fs.exists(cp),
+      s"no vector index under ${tx.root} — run VectorIndex.index first")
     // the pinned centroid frame straight from the sidecar (k-small;
     // collected once inside ivfAssign, broadcast for the probe rank)
     val centDf = spark.read.parquet(cp.toString)
@@ -359,10 +347,8 @@ object VectorIndex {
     // distinct probed cells bound the entry prune — ≤ k driver rows
     val cellSet = probes.select(col("__cell")).distinct()
       .collect().map(_.get(0)).toSet
-    val entries = pruneByCells(spark, root,
-      Snapshots.snap(spark, url, v).files, cellSet)
-    val base = Snapshots.readEntryPaths(spark, url, v,
-      entries.map(e => new Path(root, e).toString))
+    val entries = pruneByCells(tx, tx.at(v).files, cellSet)
+    val base = Snapshots.readEntryPaths(tx, v, entries.map(tx.path))
       .filter(col(embCol).isNotNull && col(idCol).isNotNull)
     val assigned = AnnSearch.ivfAssign(base, idCol, embCol, centDf)
       .filter(col("bucket").isin(cellSet.toSeq.map(c => c: Any): _*))
@@ -390,11 +376,9 @@ object VectorIndex {
     * Returns the committed version. */
   def cluster(spark: SparkSession, url: String, idCol: String,
       embCol: String, nFiles: Int = 8): Int = {
-    val (_, root) = fsOf(spark, url)
-    val mat = loadCentroids(spark, root).map(_._2)
-    val parent = Snapshots.snap(spark, url,
-      Snapshots.latest(spark, url))
-    val df = Snapshots.readAsOf(spark, url, parent.version)
+    val tx = StoreTxn.open(spark, url)
+    val mat = loadCentroids(tx).map(_._2)
+    val df = Snapshots.readAsOf(tx, tx.head)
     require(df.columns.contains(embCol) && df.columns.contains(idCol),
       s"vector cluster needs columns $idCol and $embCol")
     val cellIdx = graft.functions.GraftFunctions.column(
@@ -405,10 +389,8 @@ object VectorIndex {
     val arranged = df.withColumn("__vcell", cellIdx)
       .repartitionByRange(math.max(1, nFiles), col("__vcell"))
       .drop("__vcell")
-    val v = parent.version + 1
-    val committed = Snapshots.commit(spark, root, v, "vcluster",
-      Snapshots.writeArranged(spark, root, arranged, v, parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    val committed = tx.commit("vcluster", tx.stageArranged(arranged),
+      df.schema)
     // cover the fresh entries immediately (O(new files)); old
     // entries' posting rows retire with their manifests via
     // prunePostings on vacuum
@@ -443,9 +425,10 @@ object VectorIndex {
       embCol: String, k: Int, maxBalanceX100: Long = 300L,
       force: Boolean = false, nFiles: Int = 8): Option[Int] = {
     require(k > 0, "need k > 0 centroids")
-    val (fs, root) = fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
     val degraded = force || !fs.exists(centroidsPath(root)) || {
-      val kNow = loadCentroids(spark, root).length
+      val kNow = loadCentroids(tx).length
       kNow != k || {
         val h = health(spark, url).collect()(0)
         h.getAs[Long]("balance_x100") > maxBalanceX100
@@ -453,8 +436,7 @@ object VectorIndex {
     }
     if (!degraded) return None
     fs.delete(vecDir(root), true)
-    val eff = Snapshots.readAsOf(spark, url,
-      Snapshots.latest(spark, url))
+    val eff = Snapshots.readAsOf(tx, tx.head)
     val trained = AnnSearch.ivfCentroids(
       eff.select(col(idCol), col(embCol)), idCol, embCol, k)
       .persist()
@@ -475,11 +457,11 @@ object VectorIndex {
     * grows. Rides every [[Snapshots.vacuum]]. Returns rows
     * dropped. */
   def prunePostings(spark: SparkSession, url: String): Long = {
-    val (fs, root) = fsOf(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val (fs, root) = (tx.fs, tx.root)
     val pp = postingsPath(root)
     if (!fs.exists(pp)) return 0L
-    val live = Snapshots.versions(spark, url)
-      .flatMap(v => Snapshots.snap(spark, url, v).files).toSet
+    val live = tx.versions.flatMap(v => tx.at(v).files).toSet
     val existing = spark.read.parquet(pp.toString)
     // broadcast anti/semi joins, not an interpreted `contains` UDF
     // (guide §4: codegen'd join probes; the live set is O(files),
@@ -514,14 +496,13 @@ object VectorIndex {
     *    open — delete `_vecindex` and re-train). */
   def health(spark: SparkSession, url: String): DataFrame = {
     import spark.implicits._
-    val (_, root) = fsOf(spark, url)
-    val k = loadCentroids(spark, root).length
-    val files = Snapshots.snap(spark, url,
-      Snapshots.latest(spark, url)).files
+    val tx = StoreTxn.open(spark, url)
+    val k = loadCentroids(tx).length
+    val files = tx.head.files
     // ONE postings collect serves coverage AND the mass histogram —
     // the r19 shape re-scanned and re-aggregated the sidecar for the
     // per-cell mass (a second Spark action per health probe)
-    val postRows = loadPostingRows(spark, root)
+    val postRows = loadPostingRows(tx)
     val covered = postRows.map(_.map(_.getString(0)).toSet)
       .getOrElse(Set.empty[String])
     val coveredNow = files.count(covered.contains)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, StoreTxn}
 
 /** STREAMING change-data feed over a snapshot store — the streaming
   * read for MUTATING stores (the append-only
@@ -72,13 +72,12 @@ class GraftChangesProvider extends StreamSourceProvider
     // source itself is created lazily at query start), and a bad
     // option should refuse at load, not first trigger
     val url = opt(parameters, "url")
-    val spark = ctx.sparkSession
-    require(Snapshots.versions(spark, url).nonEmpty,
-      s"no snapshot store at $url")
-    val out = GraftChangesSource.cdfSchema(spark, url)
+    val tx = StoreTxn.open(ctx.sparkSession, url)
+    require(tx.versions.nonEmpty, s"no snapshot store at $url")
+    val out = GraftChangesSource.cdfSchema(tx.schema)
     val keyCol = opt(parameters, "keyCol")
-    require(Snapshots.headSchema(spark, url).fieldNames
-      .contains(keyCol), s"store $url has no column $keyCol")
+    require(tx.schema.fieldNames.contains(keyCol),
+      s"store $url has no column $keyCol")
     (shortName(), out)
   }
 
@@ -94,16 +93,14 @@ class GraftChangesProvider extends StreamSourceProvider
       .map(_.toInt)
     maxVersions.foreach(m => require(m > 0,
       s"maxVersionsPerTrigger must be positive, got $m"))
-    val spark = ctx.sparkSession
-    require(Snapshots.versions(spark, url).nonEmpty,
-      s"no snapshot store at $url")
-    require(Snapshots.headSchema(spark, url).fieldNames
-      .contains(keyCol), s"store $url has no column $keyCol")
+    val tx = StoreTxn.open(ctx.sparkSession, url)
+    require(tx.versions.nonEmpty, s"no snapshot store at $url")
+    require(tx.schema.fieldNames.contains(keyCol),
+      s"store $url has no column $keyCol")
     if (startV > 0)
-      require(Snapshots.versions(spark, url).contains(startV),
+      require(tx.versions.contains(startV),
         s"startingVersion=$startV is not a committed version of $url")
-    new GraftChangesSource(spark, url, keyCol, includeOld, startV,
-      maxVersions)
+    new GraftChangesSource(tx, keyCol, includeOld, startV, maxVersions)
   }
 }
 
@@ -111,8 +108,7 @@ private[streaming] object GraftChangesSource {
   val ChangeCol = "_change"
   val VersionCol = "_commit_version"
 
-  def cdfSchema(spark: SparkSession, url: String): StructType = {
-    val base = Snapshots.headSchema(spark, url)
+  def cdfSchema(base: StructType): StructType = {
     require(!base.fieldNames.contains(ChangeCol) &&
       !base.fieldNames.contains(VersionCol),
       s"store schema reserves $ChangeCol/$VersionCol")
@@ -126,14 +122,19 @@ private[streaming] case class GraftCdfOffset(v: Int) extends V1Offset {
   override def json(): String = s"""{"version":$v}"""
 }
 
-private[streaming] class GraftChangesSource(spark: SparkSession,
-    url: String, keyCol: String, includeOld: Boolean, startV: Int,
+/** `start` is the handle the source was validated on: it pins the
+  * declared schema and physical slots; every later call resolves
+  * the head afresh. */
+private[streaming] class GraftChangesSource(start: StoreTxn,
+    keyCol: String, includeOld: Boolean, startV: Int,
     maxVersions: Option[Int])
     extends Source with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
   import GraftChangesSource._
 
-  override val schema: StructType = cdfSchema(spark, url)
+  private val spark = start.spark
+  private val url = start.url
+  override val schema: StructType = cdfSchema(start.schema)
   private val baseFields = schema.fields.dropRight(2).toSeq
   // physical slot of each declared column, pinned at stream start:
   // logical names shift under renameColumn, physical slots never do,
@@ -141,7 +142,7 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
   // the declared schema exactly (the name-only alignment this
   // replaces silently null-filled a renamed column's feed rows)
   private val declaredPhys: Map[String, String] =
-    Snapshots.physMapOf(spark, url, Snapshots.latest(spark, url))
+    Snapshots.physMapOf(start, start.head.version)
 
   override def getOffset: Option[V1Offset] = {
     val l = Snapshots.latest(spark, url)
@@ -217,10 +218,10 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
     * [[Snapshots.changesStepFrom]] — one canonical diff for the
     * stream, the `store$changes` SQL table and programmatic
     * consumers. */
-  private def step(priorV: Option[Int], v: Int): DataFrame = {
-    val df = Snapshots.changesStepFrom(spark, url, keyCol, priorV, v,
-      includeOld)
-    val stepPhys = Snapshots.physMapOf(spark, url, v)
+  private def step(tx: StoreTxn, priorV: Option[Int],
+      v: Int): DataFrame = {
+    val df = Snapshots.changesStepFrom(tx, keyCol, priorV, v, includeOld)
+    val stepPhys = Snapshots.physMapOf(tx, v)
     val out = baseFields.map { f =>
       val p = declaredPhys.getOrElse(f.name, f.name)
       stepPhys.collectFirst {
@@ -237,7 +238,8 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
       end: V1Offset): DataFrame = {
     val s = start.map(vOf).getOrElse(math.max(startV, 0))
     val e = vOf(end)
-    val all = Snapshots.versions(spark, url)
+    val tx = StoreTxn.open(spark, url)
+    val all = tx.versions
     // the RESUME point must still be a committed version: if vacuum
     // retired it, the first surviving step's predecessor chain no
     // longer reaches the consumer's offset, and the bootstrap path
@@ -253,7 +255,7 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
         "rebuild the consumer from a batch read (startingVersion)")
     val priorOf = all.zip(None +: all.init.map(Some(_))).toMap
     val vs = all.filter(v => v > s && v <= e)
-    val frames = vs.map(v => step(priorOf(v), v))
+    val frames = vs.map(v => step(tx, priorOf(v), v))
     val batch =
       if (frames.isEmpty)
         spark.createDataFrame(

@@ -167,15 +167,15 @@ object GraftStream {
       if (statsFields.nonEmpty)
         graft.sources.Snapshots.indexStats(batch.sparkSession, url,
           statsFields): Unit
-      // per-epoch bloom maintenance ((indexUrl, fields)):
-      // updateBloom indexes only files without a sidecar row — the
-      // same O(new files) shape. A sink WITHOUT this stays safe
+      // per-epoch bloom maintenance ((indexUrl, fields)): the
+      // refresh indexes only live data files without a sidecar row —
+      // the same O(new files) shape. A sink WITHOUT this stays safe
       // because upsert's coverage guard treats unindexed files as
       // affected; WITH it, upsert keeps its O(changed files) prune
       // through a live stream.
       bloomIndex.foreach { case (idxUrl, fields) =>
-        graft.sources.RowGroupIndex.updateBloom(batch.sparkSession,
-          url, fields, idxUrl)
+        graft.sources.StoreTxn.open(batch.sparkSession, url)
+          .refreshBloom(fields, idxUrl)
       }
       // bloomFields is the CONVENTIONAL-location shortcut
       // (<store>/_bloom/keybloom via Snapshots.indexBloom): a stream

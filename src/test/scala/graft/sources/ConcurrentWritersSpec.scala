@@ -68,7 +68,7 @@ class ConcurrentWritersSpec extends SparkSpec {
     val parent = Snapshots.snap(spark, url, 1)
     Snapshots.renameColumn(spark, url, "bal", "balance")
     val e = intercept[IllegalArgumentException] {
-      Snapshots.stageUpsert(spark, url,
+      Snapshots.stageUpsert(StoreTxn.open(spark, url),
         Seq((1L, 99L)).toDF("id", "bal"), "id", None, None, 1000,
         expectedParentVersion = parent.version)
     }

@@ -195,6 +195,26 @@ class SnapshotSpec extends SparkSpec {
       .select("v").as[String].collect().toSeq
     assert(hits == Seq("MERGED"))
     assert(Snapshots.read(spark, url).count() == 10L)
+    // a merge-on-read delete between epochs leaves a dv*.parquet
+    // vector in the store root; the next epoch's refresh must bloom
+    // live data files only, never the vector
+    Snapshots.deleteWhereMor(spark, url, LongRange("id", 3L, 3L))
+    (10L to 12L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartition(1).write.mode("append").parquet(stage)
+    graft.streaming.GraftStream
+      .snapshotSink(src, url, "t2", nFiles = 1,
+        bloomIndex = Some((idx, Seq("id"))))
+      .option("checkpointLocation", s"$base/ck")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val covered2 = RowGroupIndex.bloomCoveredFiles(spark, idx, "id")
+    assert(!covered2.exists(_.startsWith("dv")),
+      s"vector bloomed as data: ${covered2.filter(_.startsWith("dv"))}")
+    val live2 = Snapshots.snap(spark, url, Snapshots.latest(spark, url))
+      .files.map(e => Snapshots.splitEntry(e)._1).toSet
+    assert(live2.subsetOf(covered2), s"uncovered: ${live2 -- covered2}")
+    (10L to 12L).foreach(k => assert(RowGroupIndex.bloomSelectedFiles(
+      spark, url, idx, "id", Seq(k)).nonEmpty, s"key $k not admitted"))
+    assert(Snapshots.read(spark, url).count() == 12L)
   }
 
   test("concurrent commit loses the race loudly (create-exclusive " +
@@ -205,9 +225,10 @@ class SnapshotSpec extends SparkSpec {
     // two writers that both resolved parent v1 race for the v2
     // slot: the second commit to the same version must fail (the
     // create-exclusive manifest is the whole concurrency story)
-    Snapshots.commit(spark, root, 2, "append", Seq())
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    Snapshots.commit(fs, root, 2, "append", Seq())
     val e = intercept[RuntimeException] {
-      Snapshots.commit(spark, root, 2, "append", Seq())
+      Snapshots.commit(fs, root, 2, "append", Seq())
     }
     assert(e.getMessage.contains("concurrent commit"))
     // a LATER writer sees the winner and builds on it
@@ -482,8 +503,9 @@ class SnapshotSpec extends SparkSpec {
       new Thread(() => {
         gate.await()
         val ok = try {
-          Snapshots.commit(spark, root, 2, "append",
-            Seq(s"s2-writer$i-0.parquet"))
+          Snapshots.commit(
+            root.getFileSystem(spark.sessionState.newHadoopConf()),
+            root, 2, "append", Seq(s"s2-writer$i-0.parquet"))
           true
         } catch { case _: Throwable => false }
         results.put(i, ok)

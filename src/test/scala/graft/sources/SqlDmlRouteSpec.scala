@@ -744,7 +744,7 @@ class SqlDmlRouteSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(rootP, dataFile), fs,
       new org.apache.hadoop.fs.Path(rootP, orphan), false,
       spark.sparkContext.hadoopConfiguration)
-    val got = Snapshots.commitStagedInto(spark, url, Seq(orphan),
+    val got = Snapshots.commitStagedInto(StoreTxn.open(spark, url), Seq(orphan),
       key = Some("K1"))
     assert(got == kv, "same-key retry must return the winner")
     assert(Snapshots.latest(spark, url) == kv,

@@ -73,7 +73,7 @@ class TxnSpec extends SparkSpec {
       Seq(Snapshots.TxnPart(a, fa), Snapshots.TxnPart(b, fb)))
     Snapshots.writeTxnMarkers(spark, plan)
     // first participant committed, then "crash"
-    Snapshots.commitStagedInto(spark, a, fa)
+    Snapshots.commitStagedInto(StoreTxn.open(spark, a), fa)
     assert(Snapshots.read(spark, a).count() == 20L)
     assert(Snapshots.read(spark, b).count() == 10L, "b must be behind")
     assert(Snapshots.pendingTxns(spark, b) == Seq("testcrash01"))
@@ -135,9 +135,9 @@ class TxnSpec extends SparkSpec {
     Snapshots.create(spark, b,
       (1L to 20L).map(i => (i, i)).toDF("id", "v"), nFiles = 2)
     def stageUp(url: String): (Seq[String], Seq[String]) = {
-      val (_, _, affected, rewritten) = Snapshots.stageUpsert(spark,
-        url, Seq((1L, 1000L)).toDF("id", "v"), "id", None, None,
-        1000000, -1)
+      val (affected, rewritten) = Snapshots.stageUpsert(
+        StoreTxn.open(spark, url), Seq((1L, 1000L)).toDF("id", "v"),
+        "id", None, None, 1000000, -1)
       (rewritten, affected)
     }
     val (sa, da) = stageUp(a)
@@ -145,7 +145,7 @@ class TxnSpec extends SparkSpec {
     val plan = Snapshots.TxnPlan("upcrash01",
       Seq(Snapshots.TxnPart(a, sa, da), Snapshots.TxnPart(b, sb, db)))
     Snapshots.writeTxnMarkers(spark, plan)
-    Snapshots.commitStagedInto(spark, a, sa, da) // then "crash"
+    Snapshots.commitStagedInto(StoreTxn.open(spark, a), sa, da) // then "crash"
     assert(Snapshots.read(spark, a)
       .filter(col("id") === 1L).select("v").as[Long].head() == 1000L)
     assert(Snapshots.read(spark, b)
@@ -164,7 +164,7 @@ class TxnSpec extends SparkSpec {
     val (sc, dc) = stageUp(b)
     Snapshots.deleteWhere(spark, b, "id", 1L, 20L) // rewrites all
     val err = intercept[RuntimeException] {
-      Snapshots.commitStagedInto(spark, b, sc, dc)
+      Snapshots.commitStagedInto(StoreTxn.open(spark, b), sc, dc)
     }
     assert(err.getMessage.contains("foreign commit"),
       s"wrong refusal: ${err.getMessage}")
@@ -184,7 +184,8 @@ class TxnSpec extends SparkSpec {
     fs.mkdirs(sub)
     fs.create(new org.apache.hadoop.fs.Path(sub, "x.parquet")).close()
     val err = intercept[IllegalArgumentException] {
-      Snapshots.commitStagedInto(spark, a, Seq("sub/x.parquet"))
+      Snapshots.commitStagedInto(StoreTxn.open(spark, a),
+        Seq("sub/x.parquet"))
     }
     assert(err.getMessage.contains("flat root-relative"))
   }
